@@ -688,12 +688,15 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   }
 
   /**
-   * Register a produce commit: diff each written partition directory against
-   * the manifest's known files (normally finding exactly this produce's new
-   * chunks), read the new files' footer id-ranges once, and advance the
-   * manifest watermark to `newNext`. Also HEALS partitions whose manifest
-   * fell behind the on-disk state (pre-manifest topics, lost manifest): any
-   * unknown file is picked up with its real footer range.
+   * Register a commit: diff each written partition directory against the
+   * manifest's known files, register the unknown ones, and advance the
+   * manifest watermark to `newNext`. A produce commit brings its own
+   * files' id ranges (`produced`, the write tasks' reports), so none of
+   * its fresh chunks has its footer read. Any OTHER unknown file gets its
+   * footer read once (on [[Catalog.footerRanges]]' I/O pool) — this is the
+   * HEAL of partitions whose manifest fell behind the on-disk state
+   * (pre-manifest topics, lost manifest), and the one path non-produce
+   * callers (delete-vector version bumps, heals) take for every file.
    */
   /** @param excludeGap per-partition `[lo, hi)` id interval whose unknown
     *        files must NOT be adopted — a concurrent produce's commit
@@ -702,34 +705,27 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     *        rolled-back commit's debris (the same commit purges them —
     *        this exclusion covers the purge-to-adoption race), never
     *        committed data. Unknown files BELOW the watermark keep the
-    *        heal behavior (pre-manifest topics, lost manifests). */
+    *        heal behavior (pre-manifest topics, lost manifests).
+    * @param produced the committing produce's own chunks, already moved
+    *        into the log, with the id ranges its write tasks reported. */
   def updateManifest(name: String, newNext: Map[Int, Long],
                      note: Option[String] = None,
-                     excludeGap: Map[Int, (Long, Long)] = Map.empty): Unit = {
+                     excludeGap: Map[Int, (Long, Long)] = Map.empty,
+                     produced: Seq[ChunkReport] = Nil): Unit = {
     val priorOpt = readManifest(name)
     val prior = priorOpt.getOrElse(TopicManifest(Map.empty, Map.empty))
-    val conf = hadoopConf
-    // unknown = listed ∖ manifest (normally exactly this produce's output)
-    val unknown: Seq[(Int, String)] = unlistedChunkFiles(name, prior, newNext.keys)
-    // Footer reads fan out over a bounded pool (r18, guide §1.2 — driver
-    // metadata latency): each unknown file costs a parquet footer open
-    // (~5-10 ms); a produce adopts one file per written partition and paid
-    // them SEQUENTIALLY inside the commit's locked window. Values land in
-    // a map consumed by the unchanged decision logic below.
-    val footerRanges: Map[String, Option[(Long, Long)]] =
-      if (unknown.size <= 1)
-        unknown.map { case (_, rel) =>
-          rel -> Catalog.fileIdRangeOpt(new Path(logPath(name), rel), conf)
-        }.toMap
-      else {
-        import scala.collection.parallel.CollectionConverters._
-        val par = unknown.map(_._2).par
-        par.tasksupport = new scala.collection.parallel.ExecutionContextTaskSupport(
-          scala.concurrent.ExecutionContext.global)
-        par.map(rel =>
-          rel -> Catalog.fileIdRangeOpt(new Path(logPath(name), rel), conf))
-          .seq.toMap
-      }
+    val reported: Map[String, Option[(Long, Long)]] =
+      produced.map(c => c.rel -> Some((c.first, c.last))).toMap
+    // unknown = listed ∖ manifest (normally exactly this produce's output),
+    // plus the reported files themselves, so a listing that lags the moves
+    // can never drop one
+    val unknown: Seq[(Int, String)] =
+      (unlistedChunkFiles(name, prior, newNext.keys) ++
+        produced.map(c => c.partition -> c.rel)).distinct
+    val unreported = unknown.map(_._2).filterNot(reported.contains)
+    val idRanges: Map[String, Option[(Long, Long)]] = reported ++
+      Catalog.footerRanges(unreported.map(new Path(logPath(name), _)), hadoopConf)
+        .zip(unreported).map { case (range, rel) => rel -> range }
     val freshFiles: Map[Int, Vector[ManifestFile]] = unknown.groupBy(_._1)
       .view.map { case (p, xs) =>
         // NEVER adopt a file whose ids start at/above the committed
@@ -761,7 +757,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
         // operator decides. Readable stats-less files keep the heal
         // behavior everywhere (valid data, never debris).
         p -> xs.map(_._2).sorted.flatMap { rel =>
-          footerRanges(rel) match {
+          idRanges(rel) match {
             case None =>
               if (!excludeGap.contains(p)) {
                 val f = new Path(logPath(name), rel)
@@ -2047,7 +2043,9 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     // intent is debris (a zombie task's late re-creation, or a crash
     // inside the rollback) — reaped past the staleness horizon. Dirs
     // WITH an intent belong to a live or decided-elsewhere produce and
-    // are left to the intent machinery. Age is judged store-clock vs
+    // are left to the intent machinery. A lock-held produce's `held-*`
+    // dir has no intent, but vacuum never runs under a held produce lock,
+    // so only a crashed one's dir can be reaped here. Age is judged store-clock vs
     // store-clock (the same two-step rule as the txn and intent leases:
     // localNow as a cheap prefilter, [[storeNowMs]] for the decision) —
     // a local JVM clock running ahead of the store must never reap a
@@ -4032,8 +4030,9 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    *     commit first (or are rolled back once stale), so the watermark
    *     advances contiguously, manifest adoption windows never overlap,
    *     and streams never see rows appear below an already-advanced
-   *     watermark. The staged files are renamed into the log, the
-   *     manifest delta commits (adoption bounded to exactly the reserved
+   *     watermark. The chunk files the write tasks reported (and only
+   *     those) are renamed into the log, the manifest delta commits with
+   *     their reported id ranges (adoption bounded to exactly the reserved
    *     range), the watermark advances, the intent is removed.
    *
    * Crash anatomy: an abandoned intent goes stale (mtime judged on the
@@ -4097,6 +4096,16 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * whole-log listing ([[fullLogDF]]) or manifest diff ever sees it. */
   private[engine] def produceStagingDir(name: String, id: String): Path =
     new Path(topicPath(name), s"log.staging/${validComponent("intent id", id)}")
+
+  /** A fresh private staging dir for a produce that holds the produce lock
+    * through its write (transactions, MERGE, idempotent produce). It has no
+    * intent, but vacuum's orphan-staging reap cannot take it while it is
+    * live: vacuum refuses to run under a held produce lock. A crash leaves
+    * it for that reap. */
+  private[engine] def heldStagingDir(name: String): Path =
+    new Path(topicPath(name), s"log.staging/held-${java.util.UUID.randomUUID()}")
+
+  private[engine] def deleteStaging(dir: Path): Unit = fs.delete(dir, true): Unit
 
   /** Produce-intent lease horizon (the concurrent-produce analog of the
     * transaction lease): an intent idle past it is presumed crashed and
@@ -4401,7 +4410,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    * The ORDERED commit of a concurrent produce (phase 3): loops with
    * patience until the watermark reaches this reservation's start (every
    * predecessor committed or rolled back), then — under the lock — renames
-   * the staged files into the log, commits the manifest delta (adoption
+   * the reported `chunks` (and only those) from the intent's staging dir
+   * into the log, commits the manifest delta (adoption
    * bounded to exactly `[first, first+count)` per partition), advances the
    * watermark, and removes the intent. Throws if the intent was rolled
    * back (the produce must be retried whole), if its reservation was
@@ -4410,7 +4420,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    * a direct produce gives).
    */
   private[engine] def commitProduceIntent(name: String, intentId: String,
-      firstIds: Map[Int, Long], counts: Map[Int, Long]): Unit = {
+      firstIds: Map[Int, Long], counts: Map[Int, Long],
+      chunks: Seq[ChunkReport]): Unit = {
     val deadline = System.currentTimeMillis() + produceCommitWaitMs
     var lastTouch = System.currentTimeMillis()
     var backoffMs = 100L
@@ -4468,12 +4479,13 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
             markIdGaps(name)
             purgeGapOrphans(name, gaps)
           }
-          Catalog.profTimed("commit.move")(moveStagedFiles(name, intentId))
+          Catalog.profTimed("commit.move")(
+            moveChunks(name, produceStagingDir(name, intentId), chunks))
           // manifest delta carries ONLY the written partitions (O(written)
           // directory listings); the id watermark write needs the full map
           val ends = counts.map { case (p, c) => p -> (firstIds(p) + c) }
           Catalog.profTimed("commit.manifest")(
-            updateManifest(name, ends, excludeGap = gaps))
+            updateManifest(name, ends, excludeGap = gaps, produced = chunks))
           Catalog.profTimed("commit.ids")(writeNextIds(name, wm ++ ends))
           fs.delete(intentPath(name, intentId), false): Unit
           fs.delete(intentLeasePath(name, intentId), false): Unit
@@ -4579,24 +4591,19 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     }
   }
 
-  /** Rename a commit's staged chunk files into the log (lock held). */
-  private def moveStagedFiles(name: String, intentId: String): Unit = {
-    val staging = produceStagingDir(name, intentId)
-    if (!fs.exists(staging)) return
-    fs.listStatus(staging)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("partition="))
-      .foreach { d =>
-        val dst = new Path(logPath(name), d.getPath.getName)
-        fs.mkdirs(dst): Unit
-        fs.listStatus(d.getPath)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .foreach { f =>
-            if (!fs.rename(f.getPath, new Path(dst, f.getPath.getName)))
-              throw new java.io.IOException(
-                s"produce commit: cannot move staged chunk ${f.getPath} into $dst")
-          }
+  /** Rename a commit's reported chunk files from its staging dir into the
+    * log (lock held). Nothing else in the staging dir is ever moved. */
+  private[engine] def moveChunks(name: String, staging: Path,
+                                 chunks: Seq[ChunkReport]): Unit =
+    chunks.groupBy(_.partition).foreach { case (p, cs) =>
+      val dst = new Path(logPath(name), s"partition=$p")
+      fs.mkdirs(dst): Unit
+      cs.foreach { c =>
+        if (!fs.rename(new Path(staging, c.rel), new Path(dst, c.file)))
+          throw new java.io.IOException(
+            s"produce commit: cannot move staged chunk ${c.rel} of $staging into $dst")
       }
-  }
+    }
 
   /** The advisory drain-request marker ([[acquireProduceLockDraining]]'s
     * writer-preference barrier). */
@@ -4998,7 +5005,9 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
 object Catalog {
 
   /** Phase wall-clock prints for the dev profiling loop (GRAFT_PROF=1) —
-    * mirrors Producer's timer so commit-side sub-phases show up too. */
+    * the one timer for produce phases (`produce.*`, including the
+    * `produce.write.plan` / `produce.write.job` split) and commit phases
+    * (`commit.*`). */
   private val profEnabled = sys.env.contains("GRAFT_PROF")
   private[engine] def profTimed[T](what: String)(body: => T): T =
     if (!profEnabled) body
@@ -5818,6 +5827,36 @@ object Catalog {
       else Some((lo, hi))
     } finally reader.close()
   }
+
+  /** Footer reads run on this dedicated pool, never on a shared one: they
+    * happen inside a commit's locked window, and blocking file I/O there
+    * must neither starve nor queue behind unrelated work. */
+  private val FooterReadThreads = 8
+  private lazy val footerPool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newFixedThreadPool(FooterReadThreads, r => {
+      val t = new Thread(r, "graft-footer-io")
+      t.setDaemon(true)
+      t
+    })
+
+  /** [[fileIdRangeOpt]] of each path, in order, read in parallel on the
+    * footer pool. A failed read rethrows its own exception (never wrapped),
+    * the first in path order, after cancelling the rest. */
+  private[engine] def footerRanges(paths: Seq[Path],
+      conf: org.apache.hadoop.conf.Configuration): Seq[Option[(Long, Long)]] =
+    if (paths.size <= 1) paths.map(fileIdRangeOpt(_, conf))
+    else {
+      val futures = paths.map(p => footerPool.submit(
+        new java.util.concurrent.Callable[Option[(Long, Long)]] {
+          def call(): Option[(Long, Long)] = fileIdRangeOpt(p, conf)
+        }))
+      try futures.map(_.get())
+      catch {
+        case e: java.util.concurrent.ExecutionException =>
+          futures.foreach(_.cancel(true))
+          throw e.getCause
+      }
+    }
 
   /** [[fileIdRangeOpt]] collapsed for callers that only prune/purge by
     * range (structural corruption folds into the never-prune sentinel;

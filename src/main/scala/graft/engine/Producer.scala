@@ -2,10 +2,31 @@ package graft.engine
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
+import org.apache.spark.sql.graftshim.Shims.HadoopConfBroadcast
 import org.apache.spark.sql.types._
+
+/** One chunk file a produce write task wrote: `file` under
+  * `partition=<partition>/` of the write's staging dir, holding the dense
+  * ids `[first, last]` (`rows` of them). The commit moves and registers
+  * exactly these files. */
+final case class ChunkReport(partition: Int, file: String, first: Long,
+                             last: Long, rows: Long) {
+  /** Path relative to the staging dir and to the log. */
+  def rel: String = s"partition=$partition/$file"
+}
 
 /**
  * Producer write path (reference S1-S6): validate → select partition →
@@ -14,18 +35,27 @@ import org.apache.spark.sql.types._
  * ID assignment is the port of the reference's linearization contract
  * (`/root/reference/src/DefaultPartitionManager.cpp:398-409`: ids assigned
  * under a queue lock, appends serialized by one write loop per partition):
- * here every event of a partition flows through ONE window task
- * (`row_number` over a hash-partitioned window), so ids are dense and
- * ordered by producer push order within the partition. N CONCURRENT
- * producers per topic are supported (the reference's many-clients shape,
- * `ProviderImpl.hpp:137-160`): ids are reserved under a brief lock, data
- * writes run unlocked into private staging, and commits apply in
- * reservation order — see Catalog's "concurrent produce intents" section.
+ * here every event of a partition flows through ONE write task, sorted by
+ * producer push order, and the task numbers the events as it appends them
+ * to the partition's chunk files, so ids are dense and ordered by push order
+ * within the partition. N CONCURRENT producers per topic are supported (the
+ * reference's many-clients shape, `ProviderImpl.hpp:137-160`): ids are
+ * reserved under a brief lock, data writes run unlocked into private
+ * staging, and commits apply in reservation order — see Catalog's
+ * "concurrent produce intents" section.
+ *
+ * Report-driven commit (the shape of Structured Streaming's file sink): the
+ * write tasks write their chunk files straight into a private staging dir,
+ * with no Hadoop output committer, and each returns a [[ChunkReport]] per
+ * file — partition, file name, first/last id, rows. The commit moves exactly
+ * the reported files into the log and registers them in the manifest with
+ * their reported id ranges, so a failed or duplicate task attempt's files
+ * are never moved or adopted, and no footer of a fresh chunk is re-read.
  *
  * Scale shape (100 TB): exactly one shuffle of the incoming batch (by target
  * partition — unavoidable: that IS the partitioning operator), plus a cheap
  * map-side-combined count pass to advance the id watermark. Files are
- * bounded via `maxRecordsPerFile` — the analog of the reference's 64 MiB /
+ * bounded at `chunkMaxRecords` rows — the analog of the reference's 64 MiB /
  * 1M-event chunk rotation (`DefaultPartitionManager.hpp:29-30`).
  *
  * @param ordering "strict" | "loose" — carried for API parity with the
@@ -52,17 +82,6 @@ final class Producer(
     sc.setJobDescription(desc)
     try body finally sc.setJobDescription(prev)
   }
-
-  /** Phase wall-clock prints for the dev profiling loop (GRAFT_PROF=1). */
-  private val prof = sys.env.contains("GRAFT_PROF")
-  private def timed[T](what: String)(body: => T): T =
-    if (!prof) body
-    else {
-      val t0 = System.nanoTime()
-      try body
-      finally Console.err.println(
-        f"[prof] produce.$what ${(System.nanoTime() - t0) / 1e6}%.0f ms")
-    }
 
   private val validator = Validator.fromDescriptor(config.validator)
   private val selector = PartitionSelector.fromDescriptor(config.selector)
@@ -93,7 +112,7 @@ final class Producer(
     // write into a private staging dir) run unlocked, so N producers
     // ingest one topic in parallel — the reference's many-clients-per-
     // partition shape (ProviderImpl.hpp:137-160).
-    val (staged, counts) = timed("stageAndCount")(stageAndCount(df))
+    val (staged, counts) = Catalog.profTimed("produce.stageAndCount")(stageAndCount(df))
     // drain courtesy: an exclusive statement actively draining pauses
     // this produce's NEW reservation (liveness only — see
     // [[Catalog.awaitDrainRequestClear]]; commits never pause, so
@@ -102,7 +121,7 @@ final class Producer(
     // reason to make it wait out a drain.
     if (counts.nonEmpty) catalog.awaitDrainRequestClear(config.name)
     // phase 1 (brief lock): entry hygiene + id reservation
-    val reserved: Option[(String, Map[Int, Long])] = timed("reserve") {
+    val reserved: Option[(String, Map[Int, Long])] = Catalog.profTimed("produce.reserve") {
       catalog.acquireProduceLock(config.name, catalog.briefLockWaitMs)
       try {
         // decide any crashed transactional/idempotent/concurrent intent
@@ -121,12 +140,14 @@ final class Producer(
           // staging dir; a heartbeat keeps the lease fresh however long
           // the Spark job runs
           val hb = catalog.startIntentHeartbeat(config.name, intentId)
-          try timed("write")(writeEvents(staged, firstIds,
-            catalog.produceStagingDir(config.name, intentId).toString))
-          finally { hb.interrupt(); hb.join(1000) }
-          // phase 3 (brief lock, ordered): rename into the log + commit
-          timed("commit")(
-            catalog.commitProduceIntent(config.name, intentId, firstIds, counts))
+          val chunks =
+            try writeEvents(staged, firstIds, counts,
+              catalog.produceStagingDir(config.name, intentId))
+            finally { hb.interrupt(); hb.join(1000) }
+          // phase 3 (brief lock, ordered): move the reported chunks into
+          // the log + commit
+          Catalog.profTimed("produce.commit")(catalog.commitProduceIntent(
+            config.name, intentId, firstIds, counts, chunks))
           counts.map { case (p, c) => p -> (firstIds(p), c) }
         } catch {
           case t: Throwable =>
@@ -184,7 +205,7 @@ final class Producer(
     // deterministic ids must globally SORT its batch — a range exchange
     // (plus its sample pass) per produce whose only purpose is to define
     // `__ord`; with it, the unsorted batch flows straight into staging and
-    // the per-partition write window orders by the column instead. Values
+    // each partition's write task sorts by the column instead. Values
     // should be unique per target partition for a well-defined order (ties
     // fall back to the checkpointed block order, which the eager
     // localCheckpoint pins — still deterministic for this produce's two
@@ -221,7 +242,7 @@ final class Producer(
     // failed to deliver): the original map-side-combined count job
     def countPass(staged: DataFrame): Map[Int, Long] =
       described(s"graft produce ${config.name}: count") {
-        timed("stage.count") {
+        Catalog.profTimed("produce.stage.count") {
           staged.groupBy(col("__p")).count()
             .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
         }
@@ -231,7 +252,7 @@ final class Producer(
       val aggs = (0 until n).map(i =>
         count(when(col("__p") === i, 1)).as(s"p$i"))
       val staged = described(s"graft produce ${config.name}: stage+count (checkpoint)") {
-        timed("stage.checkpoint") {
+        Catalog.profTimed("produce.stage.checkpoint") {
           graft.Checkpoints.local(
             pre.observe(obs, aggs.head, aggs.tail: _*), eager = true)
         }
@@ -241,7 +262,7 @@ final class Producer(
       // undelivered observation (bus overflow — never seen in practice)
       // degrades to the second-pass count job rather than blocking the
       // produce.
-      val m: Map[String, Any] = timed("stage.count") {
+      val m: Map[String, Any] = Catalog.profTimed("produce.stage.count") {
         val rowOpt =
           try {
             scala.concurrent.Await.ready(obs.future,
@@ -260,52 +281,63 @@ final class Producer(
       (staged, counts)
     } else {
       val staged = described(s"graft produce ${config.name}: stage (checkpoint)") {
-        timed("stage.checkpoint")(graft.Checkpoints.local(pre, eager = true))
+        Catalog.profTimed("produce.stage.checkpoint")(graft.Checkpoints.local(pre, eager = true))
       }
       (staged, countPass(staged))
     }
   }
 
-  /** Pass 2: one shuffle by target partition; a single window task per
-    * partition linearizes id assignment (dense, push-order). `dest` is the
-    * live log (lock-held path) or a private staging dir (concurrent path).
+  /** Pass 2: one shuffle by target partition, then one write task per
+    * target partition appends its events, sorted by push order, to chunk
+    * files under `dest/partition=<p>/`, numbering them from `firstIds(p)`
+    * (dense, push-order) and rotating files at `chunkMaxRecords`. `dest` is
+    * always a private staging dir; nothing here touches the live log.
     *
-    * Single-job shape (r18, guide §1.2 — fewer driver plan/submit cycles):
-    * the write runs as ONE classic pipelined shuffle job on a cached
-    * AQE-free child session, with the exchange width pinned to the topic's
-    * partition count by an explicit `repartition(n, __p)`. Under AQE this
-    * exact query cost TWO jobs (exchange materialization, then the re-planned
-    * write) plus a re-optimization cycle per produce — pure per-produce
-    * overhead at any batch size, since AQE has nothing to decide here: the
-    * exchange is by `__p` and the linearization contract already fixes the
-    * layout at one writer task per topic partition (AQE skew-splitting
-    * cannot apply under a window partitioned by the same key, and coalescing
-    * tiny partitions only re-merges what `n` already bounds). The window
-    * reuses the explicit exchange (ClusteredDistribution(__p) is satisfied
-    * by hashpartitioning(__p, n)), so the whole query is map-stage →
-    * sorted-write-stage in a single job submission. */
+    * The tasks write through Parquet's own `OutputWriterFactory` and report
+    * each file they wrote ([[ChunkReport]]); there is no Hadoop output
+    * committer, no `_temporary` tree and no `_SUCCESS` marker — the caller's
+    * commit moves exactly the reported files. A failed or duplicate task
+    * attempt writes under its own file tag and goes unreported, so its
+    * files stay in staging and die with it. The reports are checked to
+    * tile each partition's reserved range exactly before anything commits.
+    *
+    * The query runs on a cached AQE-free child session (see
+    * [[Producer.writeSession]]), so map stage → sorted write stage is ONE
+    * job submission; the exchange width is pinned to the topic's partition
+    * count by an explicit `repartition(n, __p)`. */
   private def writeEvents(staged: DataFrame, firstIds: Map[Int, Long],
-                          dest: String): Unit = {
-    val baseMap = typedLit(firstIds)
-    val w = Window.partitionBy(col("__p")).orderBy(col("__ord"))
-    // `staged` is an eagerly checkpointed LogicalRDD: re-wrapping its RDD in
-    // the write session triggers no job and no recompute, and the id
-    // assignment stays pinned to the checkpointed blocks either way.
-    val events = Producer.inWriteSession(spark, staged)
-      .repartition(n, col("__p"))
-      .withColumn("event_id",
-        element_at(baseMap, col("__p")) + row_number().over(w) - 1)
-      .select(col("__p").as("partition"), col("event_id"),
-        serializer.serialize(col("metadata")).cast(StringType).as("metadata"),
-        col("data").cast(BinaryType))
-    described(s"graft produce ${config.name}: write") {
-      events.write
-        .mode("append")
-        .option("maxRecordsPerFile", chunkMaxRecords)
-        .partitionBy("partition")
-        .parquet(dest)
+                          counts: Map[Int, Long], dest: Path): Seq[ChunkReport] =
+    Catalog.profTimed("produce.write") {
+      val ws = Producer.writeSession(spark)
+      val (rows, factory, conf) = Catalog.profTimed("produce.write.plan") {
+        // `staged` is an eagerly checkpointed LogicalRDD: re-wrapping its
+        // RDD in the write session triggers no job and no recompute, and
+        // the id assignment stays pinned to the checkpointed blocks.
+        val rows = Shims.asBatchDataFrame(ws, staged)
+          .repartition(n, col("__p"))
+          .sortWithinPartitions(col("__p"), col("__ord"))
+          .select(col("__p"),
+            serializer.serialize(col("metadata")).cast(StringType),
+            col("data").cast(BinaryType))
+          .queryExecution.toRdd
+        val job = Job.getInstance(Shims.newHadoopConf(ws))
+        val factory = new ParquetFileFormat()
+          .prepareWrite(ws, job, Map.empty, Producer.ChunkSchema)
+        (rows, factory, Producer.broadcastConf(ws, job.getConfiguration))
+      }
+      val chunks = described(s"graft produce ${config.name}: write") {
+        Catalog.profTimed("produce.write.job") {
+          val dir = dest.toString
+          val max = chunkMaxRecords
+          rows.mapPartitions(it =>
+            Producer.writeChunks(it, dir, firstIds, max, factory, conf))
+            .collect().toSeq
+        }
+      }
+      Producer.checkTiling(config.name, chunks, firstIds, counts)
+      Producer.afterWrite(dest)
+      chunks
     }
-  }
 
   private def produceLocked(df: DataFrame,
                             preCommit: Option[ProduceResult => Unit]): ProduceResult = {
@@ -328,25 +360,34 @@ final class Producer(
     preCommit.foreach(_(ranges))
 
     if (counts.nonEmpty) {
-      writeEvents(staged, firstIds, catalog.logPath(config.name))
+      // private staging even under the lock: only the reported chunks ever
+      // reach the log (vacuum's staging reaper cannot take this dir while
+      // it is live — vacuum refuses under a held produce lock)
+      val staging = catalog.heldStagingDir(config.name)
+      try {
+        val chunks = writeEvents(staged, firstIds, counts, staging)
 
-      // The write job above may have run for minutes — re-check the compact
-      // lock before committing, so a compaction that started mid-produce
-      // fails this commit loudly (the written files may sit in the
-      // moved-aside log) instead of advancing watermarks over lost data.
-      catalog.failIfCompacting(config.name)
+        // The write job above may have run for minutes — re-check the
+        // compact lock before committing, so a compaction that started
+        // mid-produce fails this commit loudly instead of advancing
+        // watermarks under a swapped log.
+        catalog.failIfCompacting(config.name)
+        catalog.moveChunks(config.name, staging, chunks)
 
-      // Manifest BEFORE the id-watermark commit: register this produce's new
-      // chunk files (+footer ranges) so trigger planning is O(new files),
-      // never a full directory re-list. The manifest write is the COMMIT
-      // POINT: a crash between the two writes leaves the manifest watermark
-      // ahead of _ids.json, and the next write-path entry heals the id
-      // watermark forward to it (reconcileProduceState) so the committed
-      // ids are never re-issued.
-      val advanced = base ++ counts.map { case (p, c) => p -> (firstIds(p) + c) }
-      catalog.updateManifest(config.name,
-        counts.map { case (p, _) => p -> advanced(p) })
-      catalog.writeNextIds(config.name, advanced)
+        // Manifest BEFORE the id-watermark commit: register this produce's
+        // new chunk files with their reported ranges, so trigger planning
+        // is O(new files), never a full directory re-list. The manifest
+        // write is the COMMIT POINT: a crash between the two writes leaves
+        // the manifest watermark ahead of _ids.json, and the next
+        // write-path entry heals the id watermark forward to it
+        // (reconcileProduceState) so the committed ids are never re-issued.
+        // A crash between the moves and the manifest leaves files above the
+        // watermark, which purgeUncommitted deletes at the next produce.
+        val advanced = base ++ counts.map { case (p, c) => p -> (firstIds(p) + c) }
+        catalog.updateManifest(config.name,
+          counts.map { case (p, _) => p -> advanced(p) }, produced = chunks)
+        catalog.writeNextIds(config.name, advanced)
+      } finally catalog.deleteStaging(staging)
     }
     // (the checkpointed blocks are released by the ContextCleaner once this
     // frame goes out of scope — no explicit unpersist hook exists for
@@ -434,30 +475,132 @@ object Producer {
    * per engine session, not once per produce, and entries die with their
    * parent. Thread-safe: concurrent produces run concurrent queries on the
    * shared child, which Spark sessions support by design.
+   *
+   * Every other SQL conf follows the parent: the chunk writer takes its
+   * Parquet settings (codec, timestamp and legacy-format flags) from this
+   * session, so each write re-syncs the parent's current runtime confs onto
+   * the child first — a `spark.sql.parquet.compression.codec` set after
+   * the first produce applies to the next chunk.
    */
   private val writeSessions =
     new java.util.WeakHashMap[SparkSession, SparkSession]()
-  private def writeSession(parent: SparkSession): SparkSession =
-    writeSessions.synchronized {
+  private val PinnedWriteConfs = Map("spark.sql.adaptive.enabled" -> "false")
+  private[engine] def writeSession(parent: SparkSession): SparkSession = {
+    val ws = writeSessions.synchronized {
       var ws = writeSessions.get(parent)
       if (ws == null) {
         ws = parent.newSession()
-        ws.conf.set("spark.sql.adaptive.enabled", "false")
-        // runtime conf set on the parent post-creation is not inherited;
-        // restate the one conf the engine requires everywhere (hygiene —
-        // the write plan itself is timezone-free)
-        ws.conf.set("spark.sql.session.timeZone", "UTC")
+        PinnedWriteConfs.foreach { case (k, v) => ws.conf.set(k, v) }
         writeSessions.put(parent, ws)
       }
       ws
     }
+    Shims.syncSqlConf(parent, ws, keep = PinnedWriteConfs.keySet)
+    ws
+  }
 
-  /** Re-bind a (checkpointed) frame to the write session — same RDD, same
-    * schema, no job. */
-  private[engine] def inWriteSession(parent: SparkSession,
-                                     df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftshim.Shims.asBatchDataFrame(
-      writeSession(parent), df)
+  /** Per write session, the last write's job conf and its broadcast, reused
+    * while the next write's conf is equal: it changes only with a session
+    * or Hadoop setting, and broadcasting it costs more than comparing it.
+    * A superseded broadcast is left to the ContextCleaner, since a
+    * concurrent write may still be reading it. */
+  private val confBroadcasts = new java.util.WeakHashMap[SparkSession,
+    (Map[String, String], HadoopConfBroadcast)]()
+  private def broadcastConf(ws: SparkSession, conf: Configuration): HadoopConfBroadcast = {
+    import scala.jdk.CollectionConverters._
+    val content = conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    confBroadcasts.synchronized {
+      Option(confBroadcasts.get(ws)).collect { case (`content`, bc) => bc }.getOrElse {
+        val bc = Shims.broadcastHadoopConf(ws.sparkContext, conf)
+        confBroadcasts.put(ws, content -> bc)
+        bc
+      }
+    }
+  }
+
+  /** The chunk files' Parquet schema (the `partition` column lives in the
+    * directory name, as Hive-style partitioned writes lay it out; every
+    * column nullable, as Spark's file writers store them). */
+  private[engine] val ChunkSchema: StructType = StructType(Seq(
+    StructField("event_id", LongType), StructField("metadata", StringType),
+    StructField("data", BinaryType)))
+
+  /** Test seam: called in the producing thread after a produce's write
+    * job, before its commit, with the write's staging dir. */
+  @volatile private[engine] var afterWrite: Path => Unit = _ => ()
+
+  /** One write task's body: `rows` are `(partition, metadata, data)`,
+    * sorted by (partition, push order). Numbers each partition's rows from
+    * `firstIds`, starts a new file per partition and every `maxRecords`
+    * rows, and reports every file it closed. File names carry a fresh tag
+    * per task attempt, so two attempts of one task never share a file. */
+  private[engine] def writeChunks(rows: Iterator[InternalRow], dir: String,
+                                  firstIds: Map[Int, Long], maxRecords: Long,
+                                  factory: OutputWriterFactory,
+                                  conf: HadoopConfBroadcast): Iterator[ChunkReport] = {
+    val tc = TaskContext.get()
+    val ctx = new TaskAttemptContextImpl(new Configuration(conf.value),
+      new TaskAttemptID("graft", 0, TaskType.MAP, tc.partitionId(), tc.attemptNumber()))
+    val prefix = f"part-${tc.partitionId()}%05d-${java.util.UUID.randomUUID()}"
+    val ext = factory.getFileExtension(ctx)
+    val out = new GenericInternalRow(3)
+    val reports = ArrayBuffer.empty[ChunkReport]
+    var writer: OutputWriter = null
+    var p = -1
+    var file = ""
+    var fileNo = 0
+    var first = 0L
+    var next = 0L
+    def close(): Unit = if (writer != null) {
+      writer.close()
+      writer = null
+      reports += ChunkReport(p, file, first, next - 1, next - first)
+    }
+    try {
+      rows.foreach { r =>
+        val rp = r.getInt(0)
+        if (rp != p) { close(); p = rp; next = firstIds(rp) }
+        if (writer != null && next - first == maxRecords) close()
+        if (writer == null) {
+          first = next
+          file = f"$prefix.c$fileNo%03d$ext"
+          fileNo += 1
+          writer = factory.newInstance(s"$dir/partition=$p/$file", ChunkSchema, ctx)
+        }
+        out.setLong(0, next)
+        out.update(1, if (r.isNullAt(1)) null else r.getUTF8String(1))
+        out.update(2, if (r.isNullAt(2)) null else r.getBinary(2))
+        writer.write(out)
+        next += 1
+      }
+      close()
+    } catch {
+      case t: Throwable =>
+        if (writer != null)
+          try writer.close() catch { case scala.util.control.NonFatal(_) => () }
+        throw t
+    }
+    reports.iterator
+  }
+
+  /** The reports of one write must tile each written partition's reserved
+    * range `[firstIds(p), firstIds(p) + counts(p))` exactly — a gap or an
+    * overlap would break the dense-id contract, so it refuses the commit. */
+  private[engine] def checkTiling(topic: String, chunks: Seq[ChunkReport],
+                                  firstIds: Map[Int, Long],
+                                  counts: Map[Int, Long]): Unit = {
+    val byPartition = chunks.groupBy(_.partition)
+    val ok = byPartition.keySet == counts.keySet && counts.forall { case (p, c) =>
+      val end = byPartition(p).sortBy(_.first).foldLeft(firstIds(p)) { (at, r) =>
+        if (r.first == at && r.rows == r.last - r.first + 1) r.last + 1 else -1L
+      }
+      end == firstIds(p) + c
+    }
+    if (!ok) throw new IllegalStateException(
+      s"topic '$topic': produce write reported chunks $chunks that do not " +
+      s"tile the reserved ranges (first ids $firstIds, counts $counts) — " +
+      "nothing was committed; retry the produce")
+  }
 
   /** Widest topic for which the fused observed-metrics count pass is used:
     * the fused path evaluates one conditional count per topic partition per

@@ -168,6 +168,24 @@ object IntentTestOps {
   }
   def stagingDir(d: GraftDriver, topic: String, id: String): String =
     d.catalog.produceStagingDir(topic, id).toString
+  /** The reports a write task would have returned for the chunks a test
+    * staged by hand (footer ranges; none once the staging dir is gone). */
+  def stagedChunks(d: GraftDriver, topic: String, id: String): Seq[ChunkReport] = {
+    val dir = d.catalog.produceStagingDir(topic, id)
+    val fs = dir.getFileSystem(d.catalog.hadoopConf)
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq
+      .filter(_.getPath.getName.startsWith("partition="))
+      .flatMap { pd =>
+        val p = pd.getPath.getName.stripPrefix("partition=").toInt
+        fs.listStatus(pd.getPath).toSeq
+          .filter(_.getPath.getName.endsWith(".parquet"))
+          .map { f =>
+            val (lo, hi) = Catalog.fileIdRange(f.getPath, d.catalog.hadoopConf)
+            ChunkReport(p, f.getPath.getName, lo, hi, hi - lo + 1)
+          }
+      }
+  }
   def acquireDraining(d: GraftDriver, topic: String): Unit =
     d.catalog.acquireProduceLockDraining(topic)
   def acquireProduce(d: GraftDriver, topic: String): Unit =
@@ -247,7 +265,8 @@ class ObjectStorePostureSpec extends SparkSpec {
           "the write-based lease marker must exist on a setTimes-deaf store")
         writeStaging(d, id, 0L, 3)
       } finally { hb.interrupt(); hb.join(2000) }
-      cat.commitProduceIntent("t", id, first, Map(0 -> 3L))
+      cat.commitProduceIntent("t", id, first, Map(0 -> 3L),
+        IntentTestOps.stagedChunks(d, "t", id))
       assert(topic.events().count() == 3)
       assert(cat.listProduceIntents("t").isEmpty)
       assert(!fs.exists(cat.intentLeasePath("t", id)),
@@ -823,7 +842,8 @@ class ObjectStorePostureSpec extends SparkSpec {
     cat.setConfOverride("spark.graft.produce.intentTimeoutMs", "1")
     try {
       Thread.sleep(50)
-      cat.commitProduceIntent("t", idB, firstB, Map(0 -> 2L))
+      cat.commitProduceIntent("t", idB, firstB, Map(0 -> 2L),
+        IntentTestOps.stagedChunks(d, "t", idB))
     } finally cat.clearConfOverride("spark.graft.produce.intentTimeoutMs")
     assert(!fs.exists(garbage),
       "footer-less debris in a decided-dead gap must be quarantined at gap-advance")

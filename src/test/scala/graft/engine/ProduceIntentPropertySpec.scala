@@ -80,7 +80,8 @@ class ProduceIntentPropertySpec extends SparkSpec {
       def commitHead(): Unit = chain.find(!_.crashed).foreach { head =>
         val firstIds = head.ranges.map { case (p, (f, _)) => p -> f }
         val counts = head.ranges.map { case (p, (_, c)) => p -> c }
-        cat.commitProduceIntent("t", head.id, firstIds, counts)
+        cat.commitProduceIntent("t", head.id, firstIds, counts,
+          IntentTestOps.stagedChunks(d, "t", head.id))
         // model: crashed predecessors are decided-dead; head's rows land
         val (dead, rest) = chain.span(_.id != head.id)
         if (dead.nonEmpty) gapDecided = true

@@ -58,14 +58,16 @@ class ProducerConcurrencySpec extends SparkSpec {
     val pool = Executors.newSingleThreadExecutor()
     val bCommit = pool.submit(new Runnable {
       override def run(): Unit =
-        cat.commitProduceIntent("t", idB, firstB, Map(0 -> 7L))
+        cat.commitProduceIntent("t", idB, firstB, Map(0 -> 7L),
+          IntentTestOps.stagedChunks(d, "t", idB))
     })
     Thread.sleep(1500)
     assert(!bCommit.isDone, "B committed before its predecessor A")
     assert(cat.nextIds("t").getOrElse(0, 0L) == 0L)
     // A commits; B's pending commit then applies on its own
     writeStaging(d, idA, 0L, 5, "a")
-    cat.commitProduceIntent("t", idA, firstA, Map(0 -> 5L))
+    cat.commitProduceIntent("t", idA, firstA, Map(0 -> 5L),
+      IntentTestOps.stagedChunks(d, "t", idA))
     bCommit.get(60, TimeUnit.SECONDS)
     pool.shutdown(): Unit
     assert(cat.nextIds("t") == Map(0 -> 12L, 1 -> 0L))
@@ -91,7 +93,8 @@ class ProducerConcurrencySpec extends SparkSpec {
     cat.setConfOverride("spark.graft.produce.intentTimeoutMs", "1")
     try {
       Thread.sleep(50)
-      cat.commitProduceIntent("t", idB, firstB, Map(0 -> 4L))
+      cat.commitProduceIntent("t", idB, firstB, Map(0 -> 4L),
+        IntentTestOps.stagedChunks(d, "t", idB))
     } finally cat.clearConfOverride("spark.graft.produce.intentTimeoutMs")
     // B committed over the decided-dead gap [0,5): watermark jumped, gap
     // marked, A's debris fully reclaimed
@@ -103,7 +106,8 @@ class ProducerConcurrencySpec extends SparkSpec {
     assert(ev.agg(min(col("event_id"))).collect()(0).getLong(0) == 5L)
     // the rolled-back producer's late commit fails LOUDLY (no silent data)
     val e = intercept[IllegalStateException](
-      cat.commitProduceIntent("t", idA, Map(0 -> 0L), Map(0 -> 5L)))
+      cat.commitProduceIntent("t", idA, Map(0 -> 0L), Map(0 -> 5L),
+        IntentTestOps.stagedChunks(d, "t", idA)))
     assert(e.getMessage.contains("rolled back"))
   }
 
@@ -179,7 +183,8 @@ class ProducerConcurrencySpec extends SparkSpec {
     cat.setConfOverride("spark.graft.produce.intentTimeoutMs", "1")
     try {
       Thread.sleep(50)
-      cat.commitProduceIntent("t", idB, firstB, Map(0 -> 4L))
+      cat.commitProduceIntent("t", idB, firstB, Map(0 -> 4L),
+        IntentTestOps.stagedChunks(d, "t", idB))
     } finally cat.clearConfOverride("spark.graft.produce.intentTimeoutMs")
     assert(topic.events().count() == 4)
     // a LEGACY manifest-heal path afterwards (transactional produce's
@@ -216,7 +221,8 @@ class ProducerConcurrencySpec extends SparkSpec {
     java.nio.file.Files.write(intentFile.toPath, content): Unit
     new java.io.File(intentFile.getParentFile, s".$idA.json.crc").delete(): Unit
     val e = intercept[IllegalStateException](
-      cat.commitProduceIntent("t", idA, firstA, Map(0 -> 5L)))
+      cat.commitProduceIntent("t", idA, firstA, Map(0 -> 5L),
+        IntentTestOps.stagedChunks(d, "t", idA)))
     assert(e.getMessage.contains("staging is gone"))
     assert(cat.nextIds("t").getOrElse(0, 0L) == 0L,
       "an empty zombie commit advanced the watermark")
