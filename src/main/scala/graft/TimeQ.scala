@@ -8,18 +8,6 @@ object TimeQ {
     val sfDir = args(0)
     val names = args(1).split(',')
     val spark = GraftSession.getOrCreate()
-    if (sys.env.contains("GRAFT_STREAM_DEBUG")) {
-      import org.apache.spark.sql.streaming.StreamingQueryListener
-      spark.streams.addListener(new StreamingQueryListener {
-        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-          val p = e.progress
-          println(s"[prog] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durations=${p.durationMs}")
-        }
-        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      })
-    }
     spark.range(100000).selectExpr("sum(id)").collect()
     names.foreach { n =>
       val t0 = System.nanoTime()

@@ -370,11 +370,11 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    *
    * `watermarks(p)` is the next-EventID the file list is complete up to: a
    * reader may plan from the manifest iff `watermarks(p) >= until(p)`, and
-   * must fall back to a directory listing otherwise (manifest lost, or the
-   * topic predates manifests). Written BEFORE the id watermark commit —
-   * the manifest write is the COMMIT POINT: a crash between the two
-   * leaves the manifest watermark ahead of `_ids.json`, and the next
-   * write-path entry heals the id watermark forward to it
+   * must fall back to a directory listing otherwise (manifest lost). The
+   * file list itself is a [[ChunkFiles]] list. Written BEFORE the id
+   * watermark commit — the manifest write is the COMMIT POINT: a crash
+   * between the two leaves the manifest watermark ahead of `_ids.json`,
+   * and the next write-path entry heals the id watermark forward to it
    * ([[reconcileProduceState]]), so the committed files stay visible and
    * their ids are never re-issued.
    *
@@ -401,7 +401,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
 
   private def readManifest(name: String, retry: Boolean): Option[TopicManifest] = {
     val (snaps, deltas) = scanManifestLogStatuses(name)
-    if (snaps.isEmpty && deltas.isEmpty) return readLegacyManifest(name)
+    if (snaps.isEmpty && deltas.isEmpty) return None
     try {
       val snapSeq = if (snaps.nonEmpty) snaps.last._1 else -1L
       // entry keys come free from the ONE listing: they validate the cache
@@ -435,25 +435,6 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     }
   }
 
-  /** Pre-log topics: a single `_manifest.json` written by earlier versions
-    * is served as the base manifest until the next commit folds it into the
-    * first snapshot and deletes it. */
-  private def readLegacyManifest(name: String): Option[TopicManifest] = {
-    val p = legacyManifestPath(name)
-    statResilient(p) match {
-      case None => None
-      case Some(st) =>
-        val key = (st.getModificationTime, st.getLen)
-        val cached = legacyManifestCache.get(name)
-        if (cached != null && cached._1 == key) cached._2
-        else {
-          val parsed = readStringResilient(p).map(TopicManifest.fromJson)
-          legacyManifestCache.put(name, (key, parsed))
-          parsed
-        }
-    }
-  }
-
   /** The topic's retained commit history, oldest first — the DESCRIBE
     * HISTORY / time-travel axis. Every manifest-log entry IS a commit
     * (produce, compaction rewrite, expire…), its seq the version number
@@ -464,13 +445,12 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * fold prior entries, so at most [[Catalog.ManifestSnapshotEvery]]
     * versions back are resolvable (the Delta-Lake retention semantic);
     * asking for an older version fails loudly in [[watermarkAsOf]].
-    * Pre-log (legacy single-file) topics report no history until their
-    * first commit migrates them onto the log. O(retained entries) driver
-    * work, bounded by ManifestSnapshotEvery + 1 — and since log entries
-    * are IMMUTABLE BY NAME (seqs are never reused, even across rebuilds),
-    * each entry's content is read ONCE per JVM: steady-state calls cost
-    * one listing plus reads of new entries only, so the per-trigger
-    * history read of a change-feed stream stays O(1) catalog I/O. */
+    * O(retained entries) driver work, bounded by ManifestSnapshotEvery + 1
+    * — and since log entries are IMMUTABLE BY NAME (seqs are never reused,
+    * even across rebuilds), each entry's content is read ONCE per JVM:
+    * steady-state calls cost one listing plus reads of new entries only, so
+    * the per-trigger history read of a change-feed stream stays O(1)
+    * catalog I/O. */
   def versionHistory(name: String): Vector[TopicVersion] = Catalog.retryOnRollRace {
     val (snaps, deltas) = scanManifestLogStatuses(name)
     val entries = (snaps.map { case (s, p) => (s, p, "snapshot") } ++
@@ -522,8 +502,6 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   }
 
   private def manifestDir(name: String): Path = new Path(topicPath(name), "_manifest")
-  private def legacyManifestPath(name: String): Path =
-    new Path(topicPath(name), "_manifest.json")
 
   private def seqFileName(prefix: String, seq: Long): String = f"$prefix-$seq%020d.json"
 
@@ -556,58 +534,28 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
 
   private val manifestCache =
     new java.util.concurrent.ConcurrentHashMap[String, Catalog.ManifestCacheEntry]()
-  private val legacyManifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), Option[TopicManifest])]()
 
   /** Append `delta` to the manifest log (or roll a snapshot when due /
-    * bootstrapping / migrating off a legacy single-file manifest). Callers
-    * hold the produce or compact lock — writes are serialized, so
-    * `max(seq) + 1` is race-free.
+    * bootstrapping). Callers hold the produce or compact lock — writes are
+    * serialized, so `max(seq) + 1` is race-free.
     *
-    * Snapshot rolls of topics past [[Catalog.manifestDriverMax]] write the
-    * file list as a PARQUET relation beside the JSON (which then carries
-    * only watermarks + the reference): the one manifest structure that
-    * grows with the file population never round-trips through driver JSON
-    * again. A parquet-backed roll is computed as a Spark union (prior
-    * relation ∪ the driver-held delta tail) — O(deltas) driver memory. */
+    * A snapshot roll stores the assembled file list through
+    * [[ChunkFiles.store]]: past [[Catalog.manifestDriverMax]] it becomes a
+    * PARQUET relation beside the JSON (which then carries only watermarks +
+    * the reference), computed as prior relation ∪ the driver-held delta
+    * tail — O(deltas) driver memory. */
   private def commitManifestDelta(name: String, delta: TopicManifest,
                                   assembledPrior: TopicManifest): Unit = {
     val (snaps, deltas) = scanManifestLog(name)
-    val legacy = fs.exists(legacyManifestPath(name))
     val seq = ((snaps ++ deltas).map(_._1) :+ 0L).max + 1
     val snapSeq = if (snaps.nonEmpty) snaps.last._1 else -1L
     val due = deltas.count(_._1 > snapSeq) + 1 >= Catalog.ManifestSnapshotEvery
     fs.mkdirs(manifestDir(name))
-    if (legacy || snaps.isEmpty || due) {
-      val assembled = Catalog.applyManifestDelta(assembledPrior, delta)
-      val inMem = assembled.files.valuesIterator.map(_.size.toLong).sum
-      if (assembled.filesRef.isEmpty && inMem <= Catalog.manifestDriverMax(spark)) {
-        writeAtomic(new Path(manifestDir(name), seqFileName("snap", seq)),
-          assembled.toJson)
-      } else {
-        // parquet-backed snapshot: relation = prior parquet (if any) ∪ the
-        // driver-held tail; the JSON keeps watermarks + the reference only.
-        // Once a topic crosses the threshold it stays parquet-backed —
-        // shrinking back would re-materialize the list to find out.
-        val refName = s"${seqFileName("snap", seq).stripSuffix(".json")}-files.parquet"
-        val tail = assembled.files.toSeq.flatMap { case (p, fsq) =>
-          fsq.map(f => (p, f.path, f.lo, f.hi))
-        }
-        import spark.implicits._
-        val tailDf = tail.toDF("partition", "path", "lo", "hi")
-        val rel = manifestFilesRel(name, assembledPrior) match {
-          case Some(prior) => prior.unionByName(tailDf)
-          case None => tailDf
-        }
-        rel.coalesce(1).write.mode("overwrite")
-          .parquet(new Path(manifestDir(name), refName).toString)
-        writeAtomic(new Path(manifestDir(name), seqFileName("snap", seq)),
-          TopicManifest(assembled.watermarks, Map.empty, Some(refName),
-            assembled.note).toJson)
-      }
-      // folded in: the old snapshot, its deltas, any legacy file, and any
-      // superseded parquet relations go
-      if (legacy) fs.delete(legacyManifestPath(name), false): Unit
+    if (snaps.isEmpty || due) {
+      writeSnapshot(name, seq, Catalog.applyManifestDelta(assembledPrior, delta),
+        manifestFilesRel(name, assembledPrior).toSeq)
+      // folded in: the old snapshot, its deltas and any superseded parquet
+      // relations go
       (snaps ++ deltas).foreach { case (_, p) => fs.delete(p, false): Unit }
       purgeOldManifestRelations(name, keepSeq = seq)
     } else {
@@ -615,7 +563,17 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     }
     // our own writes must never be served stale
     manifestCache.remove(name): Unit
-    legacyManifestCache.remove(name): Unit
+  }
+
+  /** Write snapshot `seq` of manifest `m`, its file list (∪ `prior`
+    * relations) stored through [[ChunkFiles.store]]. */
+  private def writeSnapshot(name: String, seq: Long, m: TopicManifest,
+                            prior: Seq[org.apache.spark.sql.DataFrame]): Unit = {
+    val snap = seqFileName("snap", seq)
+    val (files, ref) = ChunkFiles.store(spark, manifestDir(name),
+      s"${snap.stripSuffix(".json")}-files.parquet", prior, m.files)
+    writeAtomic(new Path(manifestDir(name), snap),
+      m.copy(files = files, filesRef = ref).toJson)
   }
 
   /** Delete every `snap-*-files.parquet` relation except `keepSeq`'s —
@@ -634,10 +592,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * set is this relation PLUS `m.files` (the post-snapshot delta tail). */
   def manifestFilesRel(name: String,
                        m: TopicManifest): Option[org.apache.spark.sql.DataFrame] =
-    m.filesRef.map { r =>
-      spark.read.schema(Catalog.ManifestFilesSchema)
-        .parquet(new Path(manifestDir(name), r).toString)
-    }
+    ChunkFiles.relation(spark, manifestDir(name), m.filesRef)
 
   /** The live-file universe for index planners: Left = driver-side list
     * (driver-sized manifests, no Spark job), Right = relation
@@ -653,12 +608,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
         case None => Left(m.files.toSeq.flatMap { case (p, fsq) =>
           fsq.map(f => p -> f.path) })
         case Some(rel) =>
-          import spark.implicits._
-          val tail = m.files.toSeq.flatMap { case (p, fsq) =>
-            fsq.map(f => (p, f.path, f.lo, f.hi))
-          }
-          Right(if (tail.isEmpty) rel
-            else rel.unionByName(tail.toDF("partition", "path", "lo", "hi")))
+          Right(if (m.files.isEmpty) rel
+            else rel.unionByName(ChunkFiles.toDF(spark, m.files)))
       }
     }
 
@@ -695,10 +646,10 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    * its fresh chunks has its footer read. Any OTHER unknown file gets its
    * footer read once (on [[Catalog.footerRanges]]' I/O pool) — this is the
    * HEAL of partitions whose manifest fell behind the on-disk state
-   * (pre-manifest topics, lost manifest), and the one path non-produce
-   * callers (delete-vector version bumps, heals) take for every file.
-   */
-  /** @param excludeGap per-partition `[lo, hi)` id interval whose unknown
+   * (lost manifest), and the one path non-produce callers (delete-vector
+   * version bumps, heals) take for every file.
+   *
+   * @param excludeGap per-partition `[lo, hi)` id interval whose unknown
     *        files must NOT be adopted — a concurrent produce's commit
     *        passes its decided-dead gap [pre-commit watermark,
     *        reservation start): an unknown file there can only be a
@@ -847,9 +798,6 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * vacuum chunk pass (callers apply the footer signature). Driver-sized
     * manifests diff in memory; parquet-backed ones anti-join the relation,
     * so only the (few) unknown paths are ever collected. */
-  /** Listed-but-not-in-manifest chunk files, with their partition's
-    * watermark — the shared candidate set of [[purgeUncommitted]] and the
-    * vacuum chunk pass (callers apply the footer signature). */
   private def unknownChunkFiles(name: String, m: TopicManifest,
                                 next: Map[Int, Long]): Seq[(Path, Long)] =
     unlistedChunkFiles(name, m, next.keys).map { case (p, rel) =>
@@ -860,8 +808,12 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * file; a fresh listing + footer pass is cheap relative to the rewrite).
     * Writes one fresh snapshot at a seq ABOVE everything prior — seqs are
     * never reused, so reader caches keyed on names can't serve the
-    * pre-compaction file list — and clears the folded-in entries. */
-  /** @param minSeq floor for the rebuilt snapshot's seq — callers that
+    * pre-compaction file list — and clears the folded-in entries. Past the
+    * driver threshold the rebuilt list goes straight to a relation
+    * ([[ChunkFiles.store]]); the listing is transient — nothing O(files)
+    * survives in the JSON or the cache.
+    *
+    * @param minSeq floor for the rebuilt snapshot's seq — callers that
     *        deleted the manifest log before rebuilding (the compaction
     *        swap) pass the pre-delete max so commit versions stay strictly
     *        increasing across the rewrite: a version number handed out
@@ -890,28 +842,10 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     val (snaps, deltas) = scanManifestLog(name)
     val seq = ((snaps ++ deltas).map(_._1) :+ minSeq).max + 1
     fs.mkdirs(manifestDir(name))
-    val total = files.valuesIterator.map(_.size.toLong).sum
-    if (total <= Catalog.manifestDriverMax(spark)) {
-      writeAtomic(new Path(manifestDir(name), seqFileName("snap", seq)),
-        TopicManifest(next, files).toJson)
-    } else {
-      // past the driver threshold the rebuilt list goes straight to parquet
-      // (same shape commitManifestDelta rolls to); the listing above is
-      // transient — nothing O(files) survives in the JSON or the cache
-      val refName = s"${seqFileName("snap", seq).stripSuffix(".json")}-files.parquet"
-      import spark.implicits._
-      files.toSeq.flatMap { case (p, fsq) => fsq.map(f => (p, f.path, f.lo, f.hi)) }
-        .toDF("partition", "path", "lo", "hi")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(new Path(manifestDir(name), refName).toString)
-      writeAtomic(new Path(manifestDir(name), seqFileName("snap", seq)),
-        TopicManifest(next, Map.empty, Some(refName)).toJson)
-    }
+    writeSnapshot(name, seq, TopicManifest(next, files), Nil)
     (snaps ++ deltas).foreach { case (_, p) => fs.delete(p, false): Unit }
     purgeOldManifestRelations(name, keepSeq = seq)
-    fs.delete(legacyManifestPath(name), false): Unit
     manifestCache.remove(name): Unit
-    legacyManifestCache.remove(name): Unit
   }
 
   // -- topic locks: compaction + produce mutual exclusion --------------------
@@ -2366,9 +2300,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       ((s0 ++ d0).map(_._1) :+ 0L).max
     }
     fs.delete(manifestDir(name), true)
-    fs.delete(legacyManifestPath(name), false)
     manifestCache.remove(name): Unit
-    legacyManifestCache.remove(name): Unit
     if (!fs.rename(log, old))
       throw new java.io.IOException(s"compact: cannot move live log aside: $log")
     if (!fs.rename(tmp, log)) {
@@ -2621,62 +2553,26 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * set is this relation PLUS `t.files` (entries archived since the roll). */
   def tierFilesRel(name: String,
                    t: TierState): Option[org.apache.spark.sql.DataFrame] =
-    t.filesRef.map { r =>
-      spark.read.schema(Catalog.ManifestFilesSchema)
-        .parquet(new Path(topicPath(name), r).toString)
-    }
-
-  /** ALL cold-tier entries materialized driver-side — maintenance surface
-    * only (restoreArchive moves every file anyway); planners must use
-    * [[tierFilesRel]] + slice pruning instead. */
-  private def tierFilesAll(name: String, t: TierState): Map[Int, Vector[ManifestFile]] =
-    tierFilesRel(name, t) match {
-      case None => t.files
-      case Some(rel) =>
-        val fromRel = rel.collect()
-          .map(r => (r.getAs[Int]("partition"),
-            ManifestFile(r.getAs[String]("path"), r.getAs[Long]("lo"), r.getAs[Long]("hi"))))
-          .groupBy(_._1).view.mapValues(_.map(_._2).toVector).toMap
-        t.files.foldLeft(fromRel) { case (acc, (p, add)) =>
-          acc + (p -> (acc.getOrElse(p, Vector.empty) ++ add))
-        }
-    }
+    ChunkFiles.relation(spark, topicPath(name), t.filesRef)
 
   /** Persist tier state after an archive pass appended `newEntries`,
-    * rolling the full file list into a parquet relation past
-    * [[Catalog.manifestDriverMax]] (the same threshold the manifest uses —
-    * at scale the cold tier is the BIGGER list). A parquet-backed roll is
-    * computed as a Spark union (prior relation ∪ the driver-held new
-    * entries) — nothing O(cold files) materializes. Seq-named relations
-    * are immutable; the superseded one is deleted after the JSON commit. */
+    * storing the full file list through [[ChunkFiles.store]] (past
+    * [[Catalog.manifestDriverMax]] — the same threshold the manifest uses;
+    * at scale the cold tier is the BIGGER list — a relation). Seq-named
+    * relations are immutable; the superseded one is deleted after the JSON
+    * commit. */
   private def writeTierState(name: String, root: String, prior: Option[TierState],
                              newEntries: Map[Int, Vector[ManifestFile]]): Unit = {
-    val tail = prior.map(_.files).getOrElse(Map.empty)
-    val localMerged = newEntries.foldLeft(tail) { case (acc, (p, add)) =>
-      acc + (p -> (acc.getOrElse(p, Vector.empty) ++ add))
-    }
     val priorRef = prior.flatMap(_.filesRef)
-    val localTotal = localMerged.valuesIterator.map(_.size.toLong).sum
-    if (priorRef.isEmpty && localTotal <= Catalog.manifestDriverMax(spark)) {
-      writeAtomic(tierPath(name), TierState(root, localMerged).toJson)
-    } else {
-      val priorSeq = priorRef.flatMap(r =>
-        "_tier-files-(\\d+)\\.parquet".r.findFirstMatchIn(r).map(_.group(1).toLong))
-        .getOrElse(0L)
-      val refName = f"_tier-files-${priorSeq + 1}%020d.parquet"
-      import spark.implicits._
-      val localDf = localMerged.toSeq
-        .flatMap { case (p, fsq) => fsq.map(f => (p, f.path, f.lo, f.hi)) }
-        .toDF("partition", "path", "lo", "hi")
-      val rel = prior.flatMap(t => tierFilesRel(name, t)) match {
-        case Some(priorRel) => priorRel.unionByName(localDf)
-        case None => localDf
-      }
-      rel.coalesce(1).write.mode("overwrite")
-        .parquet(new Path(topicPath(name), refName).toString)
-      writeAtomic(tierPath(name), TierState(root, Map.empty, Some(refName)).toJson)
-      priorRef.foreach(r => fs.delete(new Path(topicPath(name), r), true): Unit)
-    }
+    val priorSeq = priorRef.flatMap(r =>
+      "_tier-files-(\\d+)\\.parquet".r.findFirstMatchIn(r).map(_.group(1).toLong))
+      .getOrElse(0L)
+    val (files, ref) = ChunkFiles.store(spark, topicPath(name),
+      f"_tier-files-${priorSeq + 1}%020d.parquet",
+      prior.flatMap(t => tierFilesRel(name, t)).toSeq,
+      ChunkFiles.merge(prior.map(_.files).getOrElse(Map.empty), newEntries))
+    writeAtomic(tierPath(name), TierState(root, files, ref).toJson)
+    priorRef.foreach(r => fs.delete(new Path(topicPath(name), r), true): Unit)
   }
 
   private def deleteTierState(name: String): Unit = {
@@ -2702,7 +2598,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
         // per base dir (the dir holding partition=N) keeps directory
         // partition inference working for entries under different roots
         // (a clone of a tiered source references hot AND cold files).
-        val files = tierFilesAll(name, t).valuesIterator.flatten.map(_.path).toSeq
+        val files = ChunkFiles.all(tierFilesRel(name, t), t.files)
+          .valuesIterator.flatten.map(_.path).toSeq
         files.groupBy(p => new Path(p).getParent.getParent.toString)
           .map { case (base, fsq) =>
             spark.read.option("basePath", base)
@@ -2790,21 +2687,10 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       val newEntries = scala.collection.mutable.Map.empty[Int, Vector[ManifestFile]]
       // cold candidates: parquet-backed manifests push the cutoff predicate
       // into the relation and collect only the files that will MOVE
-      val coldBySelect: Map[Int, Vector[ManifestFile]] = manifestFilesRel(name, m) match {
-        case None => m.files
-        case Some(rel) =>
-          import org.apache.spark.sql.functions.col
-          val fromRel = rel
-            .filter(col("hi") =!= Long.MaxValue && col("hi") < cutoffId)
-            .collect()
-            .map(r => (r.getAs[Int]("partition"),
-              ManifestFile(r.getAs[String]("path"), r.getAs[Long]("lo"), r.getAs[Long]("hi"))))
-            .groupBy(_._1).view.mapValues(_.map(_._2).toVector).toMap
-          m.files.foldLeft(fromRel) { case (acc, (p, add)) =>
-            acc + (p -> (acc.getOrElse(p, Vector.empty) ++ add))
-          }
-      }
-      coldBySelect.foreach { case (p, entries) =>
+      import org.apache.spark.sql.functions.col
+      ChunkFiles.all(manifestFilesRel(name, m)
+          .map(_.filter(col("hi") =!= Long.MaxValue && col("hi") < cutoffId)),
+        m.files).foreach { case (p, entries) =>
         // committed data only: cap the cutoff at the partition's id
         // watermark so an uncommitted orphan can never be archived
         val eff = math.min(cutoffId, watermarks.getOrElse(p, 0L))
@@ -2866,7 +2752,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
         var moved = 0
         // materializing here is proportional to the work: every entry is a
         // file move (maintenance surface, not a planner)
-        tierFilesAll(name, t).foreach { case (p, entries) =>
+        ChunkFiles.all(tierFilesRel(name, t), t.files).foreach { case (p, entries) =>
           entries.foreach { f =>
             val src = new Path(f.path)
             val dstDir = new Path(logPath(name), s"partition=$p")
@@ -2990,12 +2876,13 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     acquireCompactLock(src)
     try {
       val m = readManifest(src)
-      // a pre-log (legacy) source with data has no manifest to clone from —
-      // refusing beats silently committing an EMPTY clone at watermark 0
+      // a source with data but no manifest log (lost manifest) has nothing
+      // to clone from — refusing beats silently committing an EMPTY clone
+      // at watermark 0
       if (m.isEmpty && nextIds(src).values.exists(_ > 0L))
         throw new IllegalStateException(
-          s"topic '$src' has data but no manifest log (legacy topic) — run " +
-          "rebuildManifest (or produce once) to migrate it before cloning")
+          s"topic '$src' has data but no manifest log — run rebuildManifest " +
+          "(or produce once) to restore it before cloning")
       createTopic(cfg.copy(name = dst))
       val wm: Map[Int, Long] = m.map(_.watermarks).getOrElse(
         (0 until cfg.partitions).map(_ -> 0L).toMap)
@@ -3003,39 +2890,20 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       def absHot(f: ManifestFile): ManifestFile =
         f.copy(path = new Path(srcLogQ, f.path).toString)
       val tier = tierState(src)
-      // driver-held tails (bounded: post-snapshot deltas / post-roll adds)
-      val tails: Map[Int, Vector[ManifestFile]] = {
-        val hot = m.map(_.files).getOrElse(Map.empty).view
-          .mapValues(_.map(absHot)).toMap
-        tier.map(_.files).getOrElse(Map.empty).foldLeft(hot) {
-          case (acc, (p, add)) => acc + (p -> (acc.getOrElse(p, Vector.empty) ++ add))
-        }
-      }
+      // the source's relations (hot paths made absolute) ∪ its driver-held
+      // tails (bounded: post-snapshot deltas / post-roll adds); a big source
+      // gives the clone a relation-backed inventory from day one
       val rels: Seq[org.apache.spark.sql.DataFrame] =
         m.flatMap(manifestFilesRel(src, _)).map { rel =>
           import org.apache.spark.sql.functions.{col, concat, lit}
           rel.withColumn("path", concat(lit(srcLogQ + "/"), col("path")))
         }.toSeq ++ tier.flatMap(tierFilesRel(src, _)).toSeq
-      val tailTotal = tails.valuesIterator.map(_.size.toLong).sum
-      if (rels.isEmpty && tailTotal <= Catalog.manifestDriverMax(spark)) {
-        writeAtomic(tierPath(dst),
-          TierState(topicPath(src).toString, tails, None, shared = true).toJson)
-      } else {
-        // big source: the clone's inventory is a parquet relation from day
-        // one — a Spark union of the source's relations plus the tails
-        import spark.implicits._
-        val tailDf = tails.toSeq
-          .flatMap { case (p, fsq) => fsq.map(f => (p, f.path, f.lo, f.hi)) }
-          .toDF("partition", "path", "lo", "hi")
-        val ref = "_tier-files-1.parquet"
-        rels.reduceOption(_ unionByName _).map(_.unionByName(tailDf))
-          .getOrElse(tailDf)
-          .write.mode("overwrite")
-          .parquet(new Path(topicPath(dst), ref).toString)
-        writeAtomic(tierPath(dst),
-          TierState(topicPath(src).toString, Map.empty, Some(ref),
-            shared = true).toJson)
-      }
+      val (files, ref) = ChunkFiles.store(spark, topicPath(dst), "_tier-files-1.parquet",
+        rels, ChunkFiles.merge(
+          m.map(_.files).getOrElse(Map.empty).view.mapValues(_.map(absHot)).toMap,
+          tier.map(_.files).getOrElse(Map.empty)))
+      writeAtomic(tierPath(dst),
+        TierState(topicPath(src).toString, files, ref, shared = true).toJson)
       writeNextIds(dst, wm)
       fs.mkdirs(manifestDir(dst))
       writeAtomic(new Path(manifestDir(dst), seqFileName("snap", 1L)),
@@ -5141,16 +5009,6 @@ object Catalog {
   def retryOnRollRace[A](body: => A): A =
     try body catch { case e: Throwable if rootIsFnf(e) => body }
 
-  /** Schema of a parquet-backed manifest's file relation. */
-  val ManifestFilesSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("partition", IntegerType, nullable = false),
-      StructField("path", StringType, nullable = false),
-      StructField("lo", LongType, nullable = false),
-      StructField("hi", LongType, nullable = false)))
-  }
-
   /** Engine log (slf4j, same backend Spark's own logging rides). Used for
     * conditions that are survivable but must not be silent — e.g. a cron
     * maintenance pass whose merge-recovery prologue keeps failing. */
@@ -5576,10 +5434,10 @@ object Catalog {
   }
 
   /** Reader-side assembled view: the newest snapshot seq it was built from,
-    * the last delta seq applied, and the result. Keyed on seqs alone —
-    * sound because snapshot/delta files are immutable-by-name. */
-  /** `lastKey` is the (mtime, len) of the log entry at `lastSeq` as seen
-    * when the cache was filled: manifest-log entries are immutable BY
+    * the last delta seq applied, and the result. Keyed on seqs — sound
+    * because snapshot/delta files are immutable-by-name — plus `lastKey`,
+    * the (mtime, len) of the log entry at `lastSeq` as seen when the cache
+    * was filled: manifest-log entries are immutable BY
     * NAME within one topic's life, but a drop+recreate at the same path
     * restarts seqs at 1 — the key catches the recreated entry aliasing
     * the cached one, so a second Catalog instance that cached the dead
@@ -5593,9 +5451,7 @@ object Catalog {
     * base keeps its reference — deltas never carry one. */
   def applyManifestDelta(base: TopicManifest, d: TopicManifest): TopicManifest =
     TopicManifest(base.watermarks ++ d.watermarks,
-      d.files.foldLeft(base.files) { case (acc, (p, add)) =>
-        acc + (p -> (acc.getOrElse(p, Vector.empty) ++ add))
-      }, base.filesRef,
+      ChunkFiles.merge(base.files, d.files), base.filesRef,
       // the note annotates the COMMIT (e.g. "delete-vector"), so a
       // snapshot roll triggered by a noted delta keeps that delta's note
       d.note)
@@ -5894,14 +5750,15 @@ object Catalog {
   }
 }
 
-/** One manifest-registered chunk file: path relative to the topic's log
-  * directory plus its footer `event_id` range (closed interval). */
 /** What [[Catalog.vacuumTopic]] removed: crashed-produce chunk files,
   * crashed-compaction swap leftovers, stale atomic-write temp files, and
   * the total bytes reclaimed. */
 final case class VacuumReport(uncommittedChunks: Int, swapLeftovers: Int,
                               tmpFiles: Int, bytesReclaimed: Long)
 
+/** One entry of a [[ChunkFiles]] list: a chunk file's path (relative to
+  * the topic's log directory in the hot manifest, absolute in a tier
+  * state) plus its footer `event_id` range (closed interval). */
 final case class ManifestFile(path: String, lo: Long, hi: Long)
 
 /** One retained commit in a topic's manifest log (see
@@ -5978,21 +5835,17 @@ final case class TierReport(filesMoved: Int, bytesMoved: Long)
   * may be a different filesystem) with their footer id ranges, so readers
   * prune cold files exactly like manifest entries.
   *
-  * Past [[Catalog.manifestDriverMax]] total entries, `filesRef` names a
-  * parquet relation (relative to the topic directory) holding the file
-  * list and `files` is empty — at 100 TB the cold tier holds MOST of the
-  * topic, so its file list must no longer round-trip through driver JSON
-  * than the manifest's (planners prune the relation and collect only the
-  * slice-overlapping cold files). */
+  * `files`/`filesRef` are a [[ChunkFiles]] list: past
+  * [[Catalog.manifestDriverMax]] total entries `filesRef` names its
+  * relation (relative to the topic directory) and `files` is empty — at
+  * 100 TB the cold tier holds MOST of the topic, so planners prune the
+  * relation and collect only the slice-overlapping cold files. */
 final case class TierState(coldRoot: String, files: Map[Int, Vector[ManifestFile]],
                            filesRef: Option[String] = None,
                            shared: Boolean = false) {
   def toJson: String = JsonMethods.compact(JsonMethods.render(JObject(
     ("coldRoot" -> (JString(coldRoot): JValue)) ::
-    ("files" -> (JObject(files.toSeq.sortBy(_._1).map { case (p, fsq) =>
-      p.toString -> (JArray(fsq.toList.map(f => JObject(
-        "f" -> JString(f.path), "lo" -> JLong(f.lo), "hi" -> JLong(f.hi)))): JValue)
-    }: _*): JValue)) ::
+    ("files" -> ChunkFiles.toJValue(files)) ::
     (filesRef.map(r => "filesRef" -> (JString(r): JValue)).toList ++
       (if (shared) List("shared" -> (JBool(true): JValue)) else Nil)))))
 }
@@ -6005,9 +5858,7 @@ object TierState {
         case other => throw new IllegalStateException(
           s"bad tier coldRoot: ${JsonMethods.compact(other)}")
       }
-      // same wire shape as the manifest's files map — reuse its parser
-      val files = TopicManifest.fromJson(JsonMethods.compact(JsonMethods.render(
-        JObject("watermarks" -> JObject(), "files" -> o \ "files")))).files
+      val files = ChunkFiles.fromJValue(o \ "files")
       val ref = o \ "filesRef" match {
         case JString(s) => Some(s)
         case _ => None
@@ -6026,8 +5877,9 @@ object TierState {
   * list is complete up to; `files(p)` in filename order (= id order for
   * produce output).
   *
-  * Large topics ([[Catalog.manifestDriverMax]]): `filesRef` names a parquet
-  * relation (relative to `_manifest/`) holding the SNAPSHOT's file entries
+  * `files`/`filesRef` are a [[ChunkFiles]] list. Large topics
+  * ([[Catalog.manifestDriverMax]]): `filesRef` names its relation
+  * (relative to `_manifest/`) holding the SNAPSHOT's file entries
   * — `files` then carries only the entries committed since that snapshot
   * (the deltas), so assembling the manifest never materializes O(files) on
   * the driver. The live set is `filesRef relation ∪ files`; consumers that
@@ -6041,50 +5893,21 @@ final case class TopicManifest(
   def toJson: String = JsonMethods.compact(JsonMethods.render(JObject(
     ("watermarks" -> (JObject(watermarks.toSeq.sortBy(_._1).map {
       case (k, v) => k.toString -> (JLong(v): JValue) }: _*): JValue)) ::
-    ("files" -> (JObject(files.toSeq.sortBy(_._1).map { case (p, fsq) =>
-      p.toString -> (JArray(fsq.toList.map(f => JObject(
-        "f" -> JString(f.path), "lo" -> JLong(f.lo), "hi" -> JLong(f.hi)))): JValue)
-    }: _*): JValue)) ::
+    ("files" -> ChunkFiles.toJValue(files)) ::
     (filesRef.map(r => "filesRef" -> (JString(r): JValue)).toList ++
       note.map(k => "note" -> (JString(k): JValue)).toList))))
 }
 
 object TopicManifest {
-  private def long(j: JValue, what: String): Long = j match {
-    case JInt(v) => v.toLong
-    case JLong(v) => v
-    case other => throw new IllegalStateException(
-      s"bad manifest $what: ${JsonMethods.compact(other)}")
-  }
-
   def fromJson(json: String): TopicManifest = JsonMethods.parse(json) match {
     case o: JObject =>
       val watermarks = o \ "watermarks" match {
-        case JObject(fields) => fields.map { case (k, v) => k.toInt -> long(v, "watermark") }.toMap
+        case JObject(fields) =>
+          fields.map { case (k, v) => k.toInt -> ChunkFiles.jsonLong(v, "watermark") }.toMap
         case other => throw new IllegalStateException(
           s"bad manifest watermarks: ${JsonMethods.compact(other)}")
       }
-      val files = o \ "files" match {
-        case JObject(fields) => fields.map { case (p, v) =>
-          p.toInt -> (v match {
-            case JArray(xs) => xs.map {
-              case f: JObject =>
-                val path = f \ "f" match {
-                  case JString(s) => s
-                  case other => throw new IllegalStateException(
-                    s"bad manifest file path: ${JsonMethods.compact(other)}")
-                }
-                ManifestFile(path, long(f \ "lo", "lo"), long(f \ "hi", "hi"))
-              case other => throw new IllegalStateException(
-                s"bad manifest file entry: ${JsonMethods.compact(other)}")
-            }.toVector
-            case other => throw new IllegalStateException(
-              s"bad manifest file list: ${JsonMethods.compact(other)}")
-          })
-        }.toMap
-        case other => throw new IllegalStateException(
-          s"bad manifest files: ${JsonMethods.compact(other)}")
-      }
+      val files = ChunkFiles.fromJValue(o \ "files")
       val ref = o \ "filesRef" match {
         case JString(s) => Some(s)
         case _ => None

@@ -598,7 +598,7 @@ final class TopicHandle(spark: SparkSession,
    * Per-partition operational summary — the library analog of the
    * reference's `mofkactl topic` inspection surface: committed event count
    * (= the id watermark, ids are dense from 0), registered chunk-file count
-   * (from the manifest; -1 when the topic predates manifests), and the
+   * (from the manifest; -1 when the topic has no manifest log), and the
    * completion flag. Metadata-only — reads two small catalog files, never
    * the log itself.
    */

@@ -29,11 +29,25 @@ private[engine] object IndexCache {
 
   private final case class Entry(sig: String, rows: Seq[Row])
 
-  /** Bounded: an engine session touches a handful of indexes; a runaway
-    * caller (many temp warehouses in one JVM) just cycles the cache. */
-  private val MaxEntries = 256
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+  /** Bounded: an engine session touches a handful of indexes; past the
+    * bound the oldest-installed entry goes first. */
+  private[engine] val MaxEntries = 256
+  // insertion-ordered: the eldest entry is the oldest put
+  private val cache = new java.util.LinkedHashMap[String, Entry]()
+
+  private def get(key: String): Entry = cache.synchronized(cache.get(key))
+
+  /** Remember `rows` under `sig` as the newest entry, evicting the oldest
+    * one when full. */
+  private[engine] def put(key: String, sig: String, rows: Seq[Row]): Unit =
+    cache.synchronized {
+      cache.remove(key)
+      if (cache.size >= MaxEntries) cache.remove(cache.keySet.iterator.next())
+      cache.put(key, Entry(sig, rows)): Unit
+    }
+
+  /** Test seam: called between a miss's signature and its collect. */
+  @volatile private[engine] var afterSignature: Path => Unit = _ => ()
 
   private def signature(fs: FileSystem, dir: Path): String =
     fs.listStatus(dir).filter(_.isFile)
@@ -41,18 +55,23 @@ private[engine] object IndexCache {
       .sorted.mkString(";")
 
   /** Collected rows of an index dir (empty if absent), re-read only when
-    * the installed files change. */
+    * the installed files change. The rows are cached only if the signature
+    * still holds after the collect: an install landing between the two
+    * would otherwise cache the new rows under the old signature. */
   def rows(spark: SparkSession, fs: FileSystem, dir: Path,
            schema: StructType): Seq[Row] = {
     if (!fs.exists(dir)) return Seq.empty
     val sig = signature(fs, dir)
     val key = dir.toString
-    val hit = cache.get(key)
+    val hit = get(key)
     if (hit != null && hit.sig == sig) hit.rows
     else {
+      afterSignature(dir)
       val fresh = spark.read.schema(schema).parquet(key).collect().toSeq
-      if (cache.size >= MaxEntries) cache.clear()
-      cache.put(key, Entry(sig, fresh))
+      val unchanged =
+        try signature(fs, dir) == sig
+        catch { case _: java.io.FileNotFoundException => false }
+      if (unchanged) put(key, sig, fresh)
       fresh
     }
   }
@@ -62,7 +81,7 @@ private[engine] object IndexCache {
     * checks on paths that must not collect a potentially large relation. */
   def cachedHead(fs: FileSystem, dir: Path): Option[Row] = {
     if (!fs.exists(dir)) return None
-    val hit = cache.get(dir.toString)
+    val hit = get(dir.toString)
     if (hit != null && hit.sig == signature(fs, dir)) hit.rows.headOption
     else None
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFacto
 import org.apache.spark.sql.connector.read.streaming._
 import org.apache.spark.sql.types.StructType
 
-import graft.engine.Catalog
+import graft.engine.{Catalog, ChunkFiles}
 
 /**
  * Streaming offset: next-unread EventID per partition — exactly the
@@ -547,10 +547,6 @@ object FileStatsCache {
   val MaxEntries = 200000
 }
 
-/** Shared partition planning: one input slice per topic partition holding
-  * the partition's OVERLAPPING chunk files (file-level pruning via the
-  * produce-committed manifest, falling back to directory listing + the
-  * footer-stats cache; the reader then prunes at row-group granularity). */
 /** How a batch scan treats the topic's deletion vectors. */
 sealed trait GraftDeleteMode
 object GraftDeleteMode {
@@ -570,18 +566,22 @@ object GraftDeleteMode {
                         source: Option[(Long, Long)] = None) extends GraftDeleteMode
 }
 
+/** Shared partition planning: one input slice per topic partition holding
+  * the partition's OVERLAPPING chunk files (file-level pruning via the
+  * produce-committed manifest, falling back to directory listing + the
+  * footer-stats cache; the reader then prunes at row-group granularity). */
 object GraftPartitions {
-  /** @param stats when set, prune files by footer event_id ranges on the
-    *        LISTING fallback path; pass None when nothing can be pruned
-    *        (e.g. unbounded batch scans) — footer reads on the driver are
-    *        not free. The manifest path always prunes (ranges are free). */
   /** Byte-admission probe counter (cumulative file entries planned by
     * sparse window probes in this JVM) — observability hook for scale
     * tests: a byte-budgeted trigger over a large backlog must probe
     * O(admitted) entries, not O(backlog). */
   private[graft] val probePlannedEntries = new java.util.concurrent.atomic.AtomicLong
 
-  /** @param sparse marks byte-admission window probes for the
+  /** @param stats when set, prune files by footer event_id ranges on the
+    *        LISTING fallback path; pass None when nothing can be pruned
+    *        (e.g. unbounded batch scans) — footer reads on the driver are
+    *        not free. The manifest path always prunes (ranges are free).
+    * @param sparse marks byte-admission window probes for the
     *        [[probePlannedEntries]] observability counter. Id-gap ranges
     *        (compliance deletes, emptied partitions) plan as empty slices
     *        for EVERY caller — the manifest is the committed truth, and a
@@ -598,13 +598,10 @@ object GraftPartitions {
     // plan racing that delete hits FileNotFound mid-collect. Retry ONCE
     // from scratch — the fresh reads see the rolled state; a second miss
     // propagates (real trouble, not a race).
-    val t0 = System.nanoTime()
     val r = Catalog.retryOnRollRace(
       planAttempt(catalog, topic, targets, from, until, stats, deleteMode, exclude))
     if (sparse) probePlannedEntries.addAndGet(
       r.collect { case ip: GraftInputPartition => ip.files.size.toLong }.sum): Unit
-    if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-      println(f"[plan] $topic ${(System.nanoTime() - t0) / 1e6}%.1f ms")
     r
   }
 
@@ -623,17 +620,17 @@ object GraftPartitions {
     val fs = logPath.getFileSystem(conf)
 
     // Cold-tier files (tiered topics): absolute paths with footer ranges,
-    // pruned by the slice exactly like manifest entries. Both planning
-    // paths append them — archived history must stay readable through the
-    // source (a fresh stream replaying from id 0 reads mostly cold files).
-    // Parquet-backed tier states (past the driver threshold — at scale the
-    // cold tier is MOST of the topic) are pruned as a relation: one join
-    // against the slice bounds collects only the overlapping cold files.
-    // Deletion vectors ride on every slice (readers prune to their own
-    // partition + id window via parquet row-group statistics); one listing,
-    // empty for the overwhelming majority of topics. The change-data-feed
-    // overrides: Ignore reads the raw log, Only(root) inverts the reader
-    // filter to surface exactly that root's delete preimages.
+    // pruned by the slice exactly like manifest entries (one
+    // [[ChunkFiles.slice]] each — a relation-backed list, at scale the cold
+    // tier is MOST of the topic, collects only the overlapping files). Both
+    // planning paths append them — archived history must stay readable
+    // through the source (a fresh stream replaying from id 0 reads mostly
+    // cold files). Deletion vectors ride on every slice (readers prune to
+    // their own partition + id window via parquet row-group statistics);
+    // one listing, empty for the overwhelming majority of topics. The
+    // change-data-feed overrides: Ignore reads the raw log, Only(root)
+    // inverts the reader filter to surface exactly that root's delete
+    // preimages.
     val deleteFiles: Seq[String] = deleteMode match {
       case GraftDeleteMode.Apply => catalog.deleteVectorFiles(topic)
       case GraftDeleteMode.Ignore => Nil
@@ -644,35 +641,17 @@ object GraftPartitions {
       case GraftDeleteMode.Only(_, src) => src
       case _ => None
     }
+    // every targeted partition with a non-empty id window [lo, hi)
+    val bounds: Seq[(Int, Long, Long)] = (0 until catalog.openTopic(topic).partitions)
+      .filter(p => targets.forall(_.contains(p)))
+      .map(p => (p, math.max(from(p), 0L), until(p)))
+      .filter(b => b._3 > b._2)
     val tierSt = catalog.tierState(topic)
-    val tierTail: Map[Int, Vector[graft.engine.ManifestFile]] =
-      tierSt.map(_.files).getOrElse(Map.empty)
-    val tierRel = tierSt.flatMap(t => catalog.tierFilesRel(topic, t))
-    val hasCold = tierTail.nonEmpty || tierRel.isDefined
-    val keptColdRel: Map[Int, Vector[graft.engine.ManifestFile]] = tierRel match {
-      case None => Map.empty
-      case Some(rel) =>
-        import org.apache.spark.sql.functions.{broadcast, col}
-        import spark.implicits._
-        val bounds = (0 until catalog.openTopic(topic).partitions)
-          .filter(p => targets.forall(_.contains(p)))
-          .map(p => (p, math.max(from(p), 0L), until(p)))
-          .filter(b => b._3 > b._2)
-        if (bounds.isEmpty) Map.empty
-        else rel.join(broadcast(bounds.toDF("p", "plo", "phi")),
-            col("partition") === col("p") &&
-              col("hi") >= col("plo") && col("lo") < col("phi"))
-          .select(col("partition"), col("path"), col("lo"), col("hi"))
-          .collect()
-          .map(r => (r.getAs[Int]("partition"), graft.engine.ManifestFile(
-            r.getAs[String]("path"), r.getAs[Long]("lo"), r.getAs[Long]("hi"))))
-          .groupBy(_._1).view
-          .mapValues(_.map(_._2).sortBy(f => (f.lo, f.path)).toVector).toMap
-    }
-    def coldFiles(p: Int, lo: Long, hi: Long): Seq[String] =
-      (keptColdRel.getOrElse(p, Vector.empty) ++
-        tierTail.getOrElse(p, Vector.empty))
-        .filter(f => f.hi >= lo && f.lo < hi)
+    val hasCold = tierSt.exists(t => t.files.nonEmpty || t.filesRef.isDefined)
+    val coldSlice: ChunkFiles.Files = tierSt.map(t =>
+      ChunkFiles.slice(catalog.tierFilesRel(topic, t), t.files, bounds)).getOrElse(Map.empty)
+    def coldFiles(p: Int): Seq[String] =
+      coldSlice.getOrElse(p, Vector.empty)
         .map(f => new Path(f.path).getFileSystem(conf)
           .makeQualified(new Path(f.path)).toString)
 
@@ -688,38 +667,11 @@ object GraftPartitions {
     // read is the trigger's new files, not the topic's history.
     def manifestPlan(): Option[Array[InputPartition]] = catalog.readManifest(topic) match {
       case Some(m) =>
-        val needed = (0 until catalog.openTopic(topic).partitions)
-          .filter(p => targets.forall(_.contains(p)))
-          .filter(p => until(p) > math.max(from(p), 0L))
-        if (!needed.forall(p => m.watermarks.getOrElse(p, 0L) >= until(p))) None
+        if (!bounds.forall { case (p, _, hi) => m.watermarks.getOrElse(p, 0L) >= hi }) None
         else {
-          val keptFromRel: Map[Int, Vector[graft.engine.ManifestFile]] =
-            catalog.manifestFilesRel(topic, m) match {
-              case None => Map.empty
-              case Some(rel) =>
-                import org.apache.spark.sql.functions.{broadcast, col}
-                import spark.implicits._
-                val boundsDf = needed.map(p => (p, math.max(from(p), 0L), until(p)))
-                  .toDF("p", "plo", "phi")
-                rel.join(broadcast(boundsDf),
-                    col("partition") === col("p") &&
-                      col("hi") >= col("plo") && col("lo") < col("phi"))
-                  .select(col("partition"), col("path"), col("lo"), col("hi"))
-                  .collect()
-                  .map(r => (r.getAs[Int]("partition"), graft.engine.ManifestFile(
-                    r.getAs[String]("path"), r.getAs[Long]("lo"), r.getAs[Long]("hi"))))
-                  .groupBy(_._1).view
-                  // filename order = id order (the manifest's invariant);
-                  // collected row order is not guaranteed, so restore it
-                  .mapValues(_.map(_._2).sortBy(f => (f.lo, f.path)).toVector).toMap
-            }
-          Some(needed.flatMap { p =>
-            val lo = math.max(from(p), 0L)
-            val hi = until(p)
-            val files = coldFiles(p, lo, hi) ++
-              (keptFromRel.getOrElse(p, Vector.empty) ++
-                m.files.getOrElse(p, Vector.empty)
-                  .filter(f => f.hi >= lo && f.lo < hi))
+          val hotSlice = ChunkFiles.slice(catalog.manifestFilesRel(topic, m), m.files, bounds)
+          Some(bounds.flatMap { case (p, lo, hi) =>
+            val files = coldFiles(p) ++ hotSlice.getOrElse(p, Vector.empty)
               // qualify like fs.listStatus would, so both planning paths
               // yield identical strings (FileStatsCache keys, dedup, tests)
               .map(f => fs.makeQualified(new Path(logPath, f.path)).toString)
@@ -779,7 +731,7 @@ object GraftPartitions {
             case _ => None
           }
         }).toMap
-    val allParts = (partDirs.keySet ++ tierTail.keySet ++ keptColdRel.keySet).toSeq.sorted
+    val allParts = (partDirs.keySet ++ coldSlice.keySet).toSeq.sorted
       .filter(p => targets.forall(_.contains(p)))
     allParts.flatMap { p =>
       val lo = from(p); val hi = until(p)
@@ -796,7 +748,7 @@ object GraftPartitions {
               }
             }
         }
-        val files = coldFiles(p, lo, hi) ++ hot
+        val files = coldFiles(p) ++ hot
         if (files.isEmpty) None
         else Some(GraftInputPartition(p, lo, hi, files, deleteFiles,
           deleteKeepOnly, deleteSource = deleteSource,

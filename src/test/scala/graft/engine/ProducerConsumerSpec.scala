@@ -1042,40 +1042,6 @@ class ProducerConsumerSpec extends SparkSpec {
     } finally Catalog.ManifestSnapshotEvery = prevEvery
   }
 
-  test("legacy single-file manifest is served, then folded into the first snapshot") {
-    val (d, topic) = newTopic(partitions = 1)
-    val producer = topic.producer()
-    (0 until 5).foreach(i => producer.push(s"""{"i":$i}"""))
-    producer.flush()
-    import java.nio.file.{Files => JFiles, Paths => JPaths}
-    import scala.jdk.CollectionConverters._
-    // simulate a pre-log topic: the assembled manifest as one _manifest.json,
-    // no _manifest/ log directory
-    val assembled = d.catalog.readManifest("mytopic").get
-    JFiles.writeString(JPaths.get(d.warehouse, "mytopic", "_manifest.json"),
-      assembled.toJson)
-    val manDir = JPaths.get(d.warehouse, "mytopic", "_manifest")
-    JFiles.list(manDir).iterator().asScala.foreach(p => JFiles.delete(p))
-    JFiles.delete(manDir)
-    // a FRESH catalog (no caches) must serve the legacy file as-is
-    val d2 = new GraftDriver(spark, d.warehouse)
-    assert(d2.catalog.readManifest("mytopic").contains(assembled))
-    // the next produce migrates: legacy file folded into snapshot seq-1 and
-    // deleted, manifest view complete across old + new files
-    val p2 = d2.openTopic("mytopic").producer()
-    (5 until 8).foreach(i => p2.push(s"""{"i":$i}"""))
-    p2.flush()
-    assert(!JFiles.exists(JPaths.get(d.warehouse, "mytopic", "_manifest.json")))
-    val entries = JFiles.list(manDir).iterator().asScala
-      .map(_.getFileName.toString).filter(_.endsWith(".json")).toSeq
-    assert(entries.nonEmpty && entries.forall(_.startsWith("snap-")), entries)
-    val m = d2.catalog.readManifest("mytopic").get
-    assert(m.watermarks == Map(0 -> 8L))
-    assert(m.files(0).map(_.lo).min == 0L && m.files(0).map(_.hi).max == 7L)
-    // and the data is intact through the normal read path
-    assert(d2.openTopic("mytopic").events().count() == 8L)
-  }
-
   test("consumer batchSize bounds each feed; pull still drains everything") {
     val (_, topic) = newTopic()
     produce100(topic)

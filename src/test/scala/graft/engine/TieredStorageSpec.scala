@@ -142,6 +142,22 @@ class TieredStorageSpec extends SparkSpec {
         val ip = s.asInstanceOf[graft.streaming.GraftInputPartition]
         assert(ip.files.size == 1, s"expected 1 overlapping cold file: ${ip.files}")
       }
+      // a window straddling the cold/hot boundary, the hot manifest
+      // relation-backed too: ids [9,15) per partition overlap the second
+      // archived wave [6,12) and the hot chunk [12,18) — exactly those two
+      // files plan, cold then hot, in id order
+      assert(d.catalog.readManifest("t").get.filesRef.isDefined,
+        "hot manifest must be parquet-backed")
+      val straddle = graft.streaming.GraftPartitions.plan(
+        d.catalog, "t", targets = None, from = _ => 9L, until = _ => 15L)
+      assert(straddle.length == 2)
+      val conf = spark.sparkContext.hadoopConfiguration
+      straddle.foreach { s =>
+        val ip = s.asInstanceOf[graft.streaming.GraftInputPartition]
+        assert(ip.files.map(f => Catalog.fileIdRange(new org.apache.hadoop.fs.Path(f), conf)) ==
+          Seq((6L, 11L), (12L, 17L)), ip.files)
+        assert(ip.files.head.contains("/cold/") && ip.files(1).contains("/log/"), ip.files)
+      }
       assert(topic.restoreArchive() == 4)
       assert(topic.tierState.isEmpty)
       assert(rows(topic.events()) == before)
