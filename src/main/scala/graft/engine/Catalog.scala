@@ -547,33 +547,56 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   private def commitManifestDelta(name: String, delta: TopicManifest,
                                   assembledPrior: TopicManifest): Unit = {
     val (snaps, deltas) = scanManifestLog(name)
-    val seq = ((snaps ++ deltas).map(_._1) :+ 0L).max + 1
+    val priorSeq = ((snaps ++ deltas).map(_._1) :+ 0L).max
+    val seq = priorSeq + 1
     val snapSeq = if (snaps.nonEmpty) snaps.last._1 else -1L
     val due = deltas.count(_._1 > snapSeq) + 1 >= Catalog.ManifestSnapshotEvery
     fs.mkdirs(manifestDir(name))
-    if (snaps.isEmpty || due) {
-      writeSnapshot(name, seq, Catalog.applyManifestDelta(assembledPrior, delta),
+    val cached = manifestCache.get(name)
+    // what a fresh reader assembles after this commit, parsed from the
+    // entry as written; None when the prior view is not the cached one
+    // assembled through `priorSeq` (the cache is then dropped instead)
+    val (entry, entrySnapSeq, view) = if (snaps.isEmpty || due) {
+      val json = writeSnapshot(name, seq, Catalog.applyManifestDelta(assembledPrior, delta),
         manifestFilesRel(name, assembledPrior).toSeq)
       // folded in: the old snapshot, its deltas and any superseded parquet
       // relations go
       (snaps ++ deltas).foreach { case (_, p) => fs.delete(p, false): Unit }
       purgeOldManifestRelations(name, keepSeq = seq)
+      (new Path(manifestDir(name), seqFileName("snap", seq)), seq,
+        Some(TopicManifest.fromJson(json)))
     } else {
-      writeAtomic(new Path(manifestDir(name), seqFileName("delta", seq)), delta.toJson)
+      val p = new Path(manifestDir(name), seqFileName("delta", seq))
+      val json = delta.toJson
+      writeAtomic(p, json)
+      (p, snapSeq,
+        if (cached != null && cached.snapSeq == snapSeq && cached.lastSeq == priorSeq &&
+            (cached.manifest eq assembledPrior))
+          Some(Catalog.applyManifestDelta(assembledPrior, TopicManifest.fromJson(json)))
+        else None)
     }
-    // our own writes must never be served stale
-    manifestCache.remove(name): Unit
+    // keyed by the entry just written, so the next read lists the log and
+    // reads nothing; a stale view is never served
+    view match {
+      case Some(m) =>
+        val st = fs.getFileStatus(entry)
+        manifestCache.put(name, Catalog.ManifestCacheEntry(entrySnapSeq, seq, m,
+          (st.getModificationTime, st.getLen)))
+      case None => manifestCache.remove(name)
+    }
   }
 
   /** Write snapshot `seq` of manifest `m`, its file list (∪ `prior`
-    * relations) stored through [[ChunkFiles.store]]. */
+    * relations) stored through [[ChunkFiles.store]]; returns the JSON
+    * written. */
   private def writeSnapshot(name: String, seq: Long, m: TopicManifest,
-                            prior: Seq[org.apache.spark.sql.DataFrame]): Unit = {
+                            prior: Seq[org.apache.spark.sql.DataFrame]): String = {
     val snap = seqFileName("snap", seq)
     val (files, ref) = ChunkFiles.store(spark, manifestDir(name),
       s"${snap.stripSuffix(".json")}-files.parquet", prior, m.files)
-    writeAtomic(new Path(manifestDir(name), snap),
-      m.copy(files = files, filesRef = ref).toJson)
+    val json = m.copy(files = files, filesRef = ref).toJson
+    writeAtomic(new Path(manifestDir(name), snap), json)
+    json
   }
 
   /** Delete every `snap-*-files.parquet` relation except `keepSeq`'s —
@@ -842,7 +865,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     val (snaps, deltas) = scanManifestLog(name)
     val seq = ((snaps ++ deltas).map(_._1) :+ minSeq).max + 1
     fs.mkdirs(manifestDir(name))
-    writeSnapshot(name, seq, TopicManifest(next, files), Nil)
+    writeSnapshot(name, seq, TopicManifest(next, files), Nil): Unit
     (snaps ++ deltas).foreach { case (_, p) => fs.delete(p, false): Unit }
     purgeOldManifestRelations(name, keepSeq = seq)
     manifestCache.remove(name): Unit

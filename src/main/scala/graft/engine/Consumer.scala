@@ -17,6 +17,12 @@ import graft.functions.DataView
  * fetch becomes physical, not procedural: when both branches select nothing
  * the `data` column is never read from Parquet (column pruning), and the
  * predicate is an ordinary pushdown-eligible filter expression.
+ *
+ * The predicate runs once per event, so its field lookups are the per-event
+ * cost of a selective read: `get_json_object(metadata, '$.a.b')` with a
+ * plain dotted path is evaluated by [[graft.functions.JsonField]]'s byte
+ * scanner, which hands only documents it cannot prove (escapes,
+ * non-ASCII, floats as the answer, …) to Spark's JSON parser.
  */
 sealed trait DataSelector {
   /** The payload expression over (metadata, data). */

@@ -56,19 +56,21 @@ object PartitionSelector {
     /** Eager evaluation of `assign`'s no-request branch through the SAME
       * catalyst expressions (including null-key handling: xxhash64 of a
       * null key yields the seed). java abs/floorMod agree with Spark's
-      * Abs/Pmod on longs, including the Long.MinValue wrap.
+      * Abs/Pmod on longs, including the Long.MinValue wrap. The key is
+      * extracted by the expression the optimizer puts in `assign`'s place
+      * ([[graft.functions.JsonField.extract]]: the field scanner for a
+      * plain dotted path, `GetJsonObject` otherwise).
       *
       * The expression tree is compiled ONCE per selector (the push hot loop
-      * must not re-build GetJsonObject/XxHash64 and re-parse the JSON path
+      * must not re-build the extraction/XxHash64 and re-parse the JSON path
       * per record); the bound input row is reused — callers serialize
       * (Producer.push is synchronized). */
     @transient private lazy val hashOf: String => Long = {
-      import org.apache.spark.sql.catalyst.expressions.{BoundReference, GetJsonObject, Literal, XxHash64}
+      import org.apache.spark.sql.catalyst.expressions.{BoundReference, XxHash64}
       import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
       import org.apache.spark.sql.types.StringType
-      val expr = XxHash64(Seq(GetJsonObject(
-        BoundReference(0, StringType, nullable = true),
-        Literal.create(fieldPath, StringType))), 42L)
+      val expr = XxHash64(Seq(graft.functions.JsonField.extract(
+        BoundReference(0, StringType, nullable = true), fieldPath)), 42L)
       val row = new GenericInternalRow(1)
       md => {
         row.update(0, org.apache.spark.unsafe.types.UTF8String.fromString(md))
@@ -101,17 +103,16 @@ object PartitionSelector {
     }
 
     /** Eager twin of `assign`'s no-request branch, through the SAME catalyst
-      * expressions (GetJsonObject + TRY-mode Cast): Some(key mod n) when the
-      * field parses, None when missing or malformed. Compiled once per
-      * selector (see [[MetadataHash.hashOf]] — same hot-loop rationale);
+      * expressions (the extraction of [[MetadataHash.hashOf]] + TRY-mode
+      * Cast): Some(key mod n) when the field parses, None when missing or
+      * malformed. Compiled once per selector (same hot-loop rationale);
       * the reused row is safe because Producer.push serializes callers. */
     @transient private lazy val longOf: String => Option[Long] = {
-      import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GetJsonObject, Literal}
+      import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode}
       import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
       import org.apache.spark.sql.types.{LongType, StringType}
-      val expr = Cast(GetJsonObject(
-        BoundReference(0, StringType, nullable = true),
-        Literal.create(fieldPath, StringType)), LongType, None, EvalMode.TRY)
+      val expr = Cast(graft.functions.JsonField.extract(
+        BoundReference(0, StringType, nullable = true), fieldPath), LongType, None, EvalMode.TRY)
       val row = new GenericInternalRow(1)
       md => {
         row.update(0, org.apache.spark.unsafe.types.UTF8String.fromString(md))

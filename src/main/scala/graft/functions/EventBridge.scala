@@ -52,12 +52,12 @@ import org.json4s.jackson.JsonMethods
 object EventBridge {
 
   /** Parse `patternJson` and compile it against `metadata` (JSON string
-    * column). Each referenced field is a `get_json_object` access — i.e. one
-    * JSON parse per referenced field per row (a field a matcher touches
-    * several times is shared post-analysis by the
-    * [[ShareJsonExtractions]] optimizer rule). Fine for a handful of
-    * fields; for wide patterns use the single-parse path ([[schemaFor]] +
-    * [[compileWithStruct]], or [[filterFast]]). */
+    * column). Each referenced field is a `get_json_object` access, which
+    * the optimizer turns into a [[JsonField]] for plain dotted paths: one
+    * byte scan of the document per field reference per row (Spark's
+    * Jackson parse only for documents the scanner defers). Fine for a
+    * handful of fields; for wide patterns use the single-parse path
+    * ([[schemaFor]] + [[compileWithStruct]], or [[filterFast]]). */
   def compile(patternJson: String, metadata: Column): Column =
     JsonMethods.parse(patternJson) match {
       case o: JObject => compilePattern(o, jsonResolver(metadata), Nil)

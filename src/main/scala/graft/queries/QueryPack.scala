@@ -51,16 +51,9 @@ object Q {
     // Schema memo (guide §6: repeated footer/metadata reads are driver-side
     // cost): the parquet schema is inferred ONCE per (path, file identity)
     // and provided to every subsequent read — exactly what a catalog table
-    // does. Keyed by length+mtime (ADVICE r17): a testdata table
-    // regenerated in place within one JVM gets a fresh inference instead
-    // of a stale schema's silent nulls. This caches METADATA only (a
-    // StructType), never rows or results; every query still computes from
-    // the parquet input.
-    val key = {
-      val f = new java.io.File(path)
-      s"$path#${f.length}#${f.lastModified}"
-    }
-    val schema = Q.schemaCache.computeIfAbsent(key,
+    // does. This caches METADATA only (a StructType), never rows or
+    // results; every query still computes from the parquet input.
+    val schema = Q.schemaCache.computeIfAbsent(s"$path#${leafFiles(spark, path)}",
       _ => spark.read.parquet(path).schema)
     val df = spark.read.schema(schema).parquet(path)
     schema.fields.find(_.name == "ts").map(_.dataType) match {
@@ -73,6 +66,24 @@ object Q {
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String,
       org.apache.spark.sql.types.StructType]()
+
+  /** Identity of the table at `path` on its Hadoop file system: every leaf
+    * file's path, length and mtime (a single file or a directory table, on
+    * any scheme). A table rewritten in place — even one file overwritten
+    * under its old name — gets a new identity and so a fresh schema
+    * inference instead of a stale schema's silent nulls. Empty when the
+    * path does not exist (the read then fails as it would unmemoized). */
+  private def leafFiles(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // listStatus, not listFiles: a located status reads each file's
+    // permissions, which the local file system gets by forking `ls`
+    def leaves(st: org.apache.hadoop.fs.FileStatus): Seq[String] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leaves)
+      else Seq(s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
+    try leaves(fs.getFileStatus(p)).sorted.mkString(";")
+    catch { case _: java.io.FileNotFoundException => "" }
+  }
 
   /**
    * Exact-integer view of a monetary/double aggregate: `round(x*100)` as
