@@ -5720,21 +5720,37 @@ object Catalog {
 
   /** [[fileIdRangeOpt]] of each path, in order, read in parallel on the
     * footer pool. A failed read rethrows its own exception (never wrapped),
-    * the first in path order, after cancelling the rest. */
+    * the first in path order (see [[onPool]]). */
   private[engine] def footerRanges(paths: Seq[Path],
       conf: org.apache.hadoop.conf.Configuration): Seq[Option[(Long, Long)]] =
-    if (paths.size <= 1) paths.map(fileIdRangeOpt(_, conf))
+    onPool(footerPool, paths.map(p => () => fileIdRangeOpt(p, conf)))
+
+  /** Runs `tasks` on `pool` (a single task on the calling thread) and
+    * returns their results in order. Returns or throws only once no task
+    * is running: on a failure, the tasks not yet started are cancelled, the
+    * running ones finish, and the first failure in order is rethrown
+    * unwrapped — so a caller that cleans up after a failure never races a
+    * task still writing. */
+  private[engine] def onPool[T](pool: java.util.concurrent.ExecutorService,
+                                tasks: Seq[() => T]): Seq[T] =
+    if (tasks.size <= 1) tasks.map(_())
     else {
-      val futures = paths.map(p => footerPool.submit(
-        new java.util.concurrent.Callable[Option[(Long, Long)]] {
-          def call(): Option[(Long, Long)] = fileIdRangeOpt(p, conf)
-        }))
-      try futures.map(_.get())
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          futures.foreach(_.cancel(true))
-          throw e.getCause
+      val futures = tasks.map(t => pool.submit(
+        new java.util.concurrent.Callable[T] { def call(): T = t() }))
+      var failure: Throwable = null
+      val results = futures.map { f =>
+        try Some(f.get()) catch {
+          case e: java.util.concurrent.ExecutionException =>
+            if (failure == null) {
+              failure = e.getCause
+              futures.foreach(_.cancel(false))
+            }
+            None
+          case _: java.util.concurrent.CancellationException => None
+        }
       }
+      if (failure != null) throw failure
+      results.flatten
     }
 
   /** [[fileIdRangeOpt]] collapsed for callers that only prune/purge by

@@ -20,9 +20,9 @@ sealed trait PartitionSelector {
    * Partition assignment expression. `requested` is the explicit per-event
    * partition column if the producer supplied one (nullable).
    *
-   * Round-robin has no per-row expression form — [[Producer]] implements it
-   * with `repartition(n)` (Spark's round-robin exchange) for rows with no
-   * explicit request; this method then only resolves explicit requests.
+   * A NULL result — a round-robin row with no explicit request, or a
+   * selector row whose key is missing — is placed by [[Producer]]'s
+   * round-robin fallback (see [[PartitionSelector.RoundRobin]]).
    */
   def assign(metadata: Column, requested: Column, n: Int): Column
   def descriptor: JObject
@@ -30,7 +30,16 @@ sealed trait PartitionSelector {
 
 object PartitionSelector {
 
-  /** X1: explicit request honored mod n; otherwise round-robin (see Producer). */
+  /** X1: explicit request honored mod n; otherwise round-robin.
+    *
+    * Round-robin placement is balanced but is NOT a positional contract:
+    * which partition a given row lands on depends on where the batch is
+    * staged. A driver-resident batch sends its k-th unplaced row to
+    * partition `k mod n`; a distributed one uses
+    * `pmod(monotonically_increasing_id(), n)`, which follows Spark's slice
+    * layout of the input. Within each partition, ids still follow input
+    * order. A caller that needs a row on a given partition asks for it
+    * explicitly (a `partition` column) or uses a selector. */
   case object RoundRobin extends PartitionSelector {
     override def assign(metadata: Column, requested: Column, n: Int): Column =
       when(requested.isNotNull, pmod(requested.cast("int"), lit(n)))

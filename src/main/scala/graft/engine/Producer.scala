@@ -4,19 +4,26 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapred.JobConf
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.graftshim.Shims.HadoopConfBroadcast
 import org.apache.spark.sql.types._
+
+import graft.functions.RewriteJsonFields
+import graft.engine.Producer.{Checkpointed, OnDriver, Staged}
 
 /** One chunk file a produce write task wrote: `file` under
   * `partition=<partition>/` of the write's staging dir, holding the dense
@@ -35,8 +42,8 @@ final case class ChunkReport(partition: Int, file: String, first: Long,
  * ID assignment is the port of the reference's linearization contract
  * (`/root/reference/src/DefaultPartitionManager.cpp:398-409`: ids assigned
  * under a queue lock, appends serialized by one write loop per partition):
- * here every event of a partition flows through ONE write task, sorted by
- * producer push order, and the task numbers the events as it appends them
+ * here every event of a partition flows through ONE writer, sorted by
+ * producer push order, and the writer numbers the events as it appends them
  * to the partition's chunk files, so ids are dense and ordered by push order
  * within the partition. N CONCURRENT producers per topic are supported (the
  * reference's many-clients shape, `ProviderImpl.hpp:137-160`): ids are
@@ -45,18 +52,27 @@ final case class ChunkReport(partition: Int, file: String, first: Long,
  * "concurrent produce intents" section.
  *
  * Report-driven commit (the shape of Structured Streaming's file sink): the
- * write tasks write their chunk files straight into a private staging dir,
- * with no Hadoop output committer, and each returns a [[ChunkReport]] per
- * file — partition, file name, first/last id, rows. The commit moves exactly
- * the reported files into the log and registers them in the manifest with
- * their reported id ranges, so a failed or duplicate task attempt's files
- * are never moved or adopted, and no footer of a fresh chunk is re-read.
+ * writers write their chunk files straight into a private staging dir, with
+ * no Hadoop output committer, and report each file ([[ChunkReport]]) —
+ * partition, file name, first/last id, rows. The commit moves exactly the
+ * reported files into the log and registers them in the manifest with their
+ * reported id ranges, so a failed or duplicate task attempt's files are
+ * never moved or adopted, and no footer of a fresh chunk is re-read.
  *
- * Scale shape (100 TB): exactly one shuffle of the incoming batch (by target
- * partition — unavoidable: that IS the partitioning operator), plus a cheap
- * map-side-combined count pass to advance the id watermark. Files are
- * bounded at `chunkMaxRecords` rows — the analog of the reference's 64 MiB /
- * 1M-event chunk rotation (`DefaultPartitionManager.hpp:29-30`).
+ * Scale shape: where the batch lives decides where its data phase runs.
+ *  - A driver-resident batch (a `LocalRelation`: `toDF`/`createDataFrame`
+ *    over local rows, as [[flush]] builds) runs no Spark job, like the
+ *    reference's producer, which appends a batch with no scheduler in the
+ *    way: one projection validates and places its rows, they are counted
+ *    and sorted in memory, and one writer per target partition writes them
+ *    from the driver.
+ *  - Any other input takes one checkpoint job that validates, places and
+ *    counts it (the counts ride the checkpoint as observed metrics), then
+ *    exactly one shuffle by target partition (unavoidable: that IS the
+ *    partitioning operator) into one write task per partition.
+ * Files are bounded at `chunkMaxRecords` rows — the analog of the
+ * reference's 64 MiB / 1M-event chunk rotation
+ * (`DefaultPartitionManager.hpp:29-30`).
  *
  * @param ordering "strict" | "loose" — carried for API parity with the
  *        reference (`include/mofka/MofkaProducer.hpp:37`); both modes funnel
@@ -100,9 +116,11 @@ final class Producer(
    * UNSORTED and skip a global sort exchange (see stageAndCount). `__order`
    * is consumed by the produce and never written to the log.
    *
-   * Invalid metadata (validator predicate false) aborts the job via
-   * `raise_error` — the Spark analog of `Producer.push` throwing
-   * (`MofkaProducer.cpp:69`).
+   * Invalid metadata (validator predicate false) aborts the produce via
+   * `raise_error`, before any id is reserved — the Spark analog of
+   * `Producer.push` throwing (`MofkaProducer.cpp:69`). The error and its
+   * message are the same whether the batch is staged on the driver or by
+   * a Spark job.
    */
   def produce(df: DataFrame): ProduceResult = {
     // CONCURRENT-SAFE plain produce (the reservation-intent protocol —
@@ -170,12 +188,17 @@ final class Producer(
     produceLocked(df, Some(preCommit))
 
   /** Phase shared by both produce paths (no lock needed): validate,
-    * assign partitions, checkpoint the assignment, count per partition. */
-  private def stageAndCount(df: DataFrame): (DataFrame, Map[Int, Long]) = {
+    * assign partitions, pin the assignment, count per partition.
+    *
+    * The input's plan picks where this runs. A driver-resident batch (a
+    * `LocalRelation`, as `toDF` on a local Seq and `createDataFrame` on a
+    * local list build) is staged on the driver by [[stageOnDriver]], with
+    * no Spark job. Any other input is staged by one checkpoint job. Both
+    * evaluate the same validator, selector and `__order` expressions. */
+  private def stageAndCount(df: DataFrame): (Staged, Map[Int, Long]) = {
     require(df.columns.contains("metadata"), "produce() input needs a 'metadata' column")
-    val withData =
-      if (df.columns.contains("data")) df
-      else df.withColumn("data", lit(null).cast(BinaryType))
+    val dataCol =
+      if (df.columns.contains("data")) col("data") else lit(null).cast(BinaryType)
     val requested =
       if (df.columns.contains("partition")) col("partition").cast("int")
       else lit(null).cast("int")
@@ -190,6 +213,96 @@ final class Producer(
       raise_error(concat(lit("Invalid metadata rejected by validator: "),
         col("metadata"))).cast("int"))
 
+    // Explicit push order (r17, guide §2.4 "remove shuffles outright"): a
+    // caller column named `__order` (cast to long) REPLACES input row order
+    // as the id-assignment order. Without it, a caller that needs
+    // deterministic ids must globally SORT its batch — a range exchange
+    // (plus its sample pass) per produce whose only purpose is to define
+    // `__ord`; with it, the unsorted batch flows straight into staging and
+    // each partition's write sorts by the column instead. Values should be
+    // unique per target partition for a well-defined order (ties fall back
+    // to input order on the driver path and to the checkpointed block
+    // order on the distributed one — deterministic within one produce
+    // either way). The column is consumed here: it never reaches the log.
+    val ordExpr =
+      if (df.columns.contains("__order")) {
+        // Fail fast on a misused `__order` (ADVICE r17): a non-numeric
+        // column would cast to null long and silently scramble id order
+        // (nulls-first, tie-arbitrary) — require a numeric type, and raise
+        // on a null value (a null has no defined position).
+        val dt = df.schema("__order").dataType
+        require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType],
+          s"produce() column '__order' must be numeric (it defines " +
+          s"id-assignment order); got ${dt.simpleString}")
+        coalesce(col("__order").cast("long"),
+          raise_error(lit("produce() column '__order' must not be null: " +
+            "it defines id-assignment order")).cast("long"))
+      } else monotonically_increasing_id()
+
+    Producer.driverRows(df) match {
+      case Some(local) =>
+        Catalog.profTimed("produce.stage.driver")(stageOnDriver(df, local,
+          Seq(partitionExpr.as("__p"),
+            serializer.serialize(col("metadata")).cast(StringType).as("metadata"),
+            dataCol.cast(BinaryType).as("data"), ordExpr.as("__ord"))))
+      case None =>
+        val withData =
+          if (df.columns.contains("data")) df else df.withColumn("data", dataCol)
+        val (staged, counts) = stageDistributed(
+          withData.withColumn("__ord", ordExpr).withColumn("__p", partitionExpr))
+        (Checkpointed(staged), counts)
+    }
+  }
+
+  /** Stages a driver-resident batch on the driver, with no Spark job: one
+    * projection of `columns` — the same expressions the distributed path
+    * evaluates, bound to the relation's rows — evaluated row by row, a
+    * count per partition, and a stable sort into write order. The
+    * projection runs as partition 0 of one task, so
+    * `monotonically_increasing_id()` is the input row index: `__ord` is
+    * input order, and the round-robin fallback places the k-th fallback row
+    * at `k mod n`. A validator failure or a null `__order` throws from the
+    * projection, before anything is reserved. */
+  private def stageOnDriver(df: DataFrame, local: LocalRelation,
+                            columns: Seq[Column]): (Staged, Map[Int, Long]) = {
+    val key = (DataTypeUtils.fromAttributes(local.output), spark.conf.getAll)
+    val rows = stagingLock.synchronized {
+      val project = stagingProjection.collect { case (`key`, p) => p }.getOrElse {
+        val exprs = df.select(columns: _*).queryExecution.analyzed match {
+          // the optimizer's expression replacements (a runtime-replaceable
+          // node cannot be evaluated as is) and the JSON field kernel, as
+          // the distributed plan gets them
+          case p: Project => RewriteJsonFields(ReplaceExpressions(p))
+            .asInstanceOf[Project].projectList
+          case other => throw new IllegalStateException(
+            s"produce staging planned as ${other.nodeName}, not a projection")
+        }
+        val built = UnsafeProjection.create(exprs, local.output)
+        stagingProjection = Some(key -> built)
+        built
+      }
+      project.initialize(0)
+      local.data.iterator.map(r => project(r).copy(): InternalRow).toArray
+    }
+    val counts = new Array[Long](n)
+    rows.foreach(r => counts(r.getInt(0)) += 1)
+    // stable: equal `__order` values keep input order
+    java.util.Arrays.sort(rows, Producer.WriteOrder)
+    (OnDriver(rows), counts.indices.collect { case p if counts(p) > 0 => p -> counts(p) }.toMap)
+  }
+
+  /** The staging projection of the last driver-staged batch, with what it
+    * was planned from: the input's column names and types and the
+    * session's SQL confs. The expressions depend on nothing else (the
+    * validator, selector and serializer are fixed per producer), so a
+    * batch of the same shape skips analysis and code generation. Its use is
+    * serialised on `stagingLock`: a projection keeps per-row state. */
+  private val stagingLock = new Object
+  private var stagingProjection: Option[((StructType, Map[String, String]), UnsafeProjection)] = None
+
+  /** The distributed staging: one eager local checkpoint of `pre` (the
+    * input with `__ord` and `__p`), with the per-partition counts. */
+  private def stageDistributed(pre: DataFrame): (DataFrame, Map[Int, Long]) = {
     // __ord and the round-robin fallback in __p embed
     // monotonically_increasing_id, which is non-deterministic across jobs:
     // the count pass and the write pass MUST observe identical assignments
@@ -198,35 +311,6 @@ final class Producer(
     // task retry against a shuffled/sampled upstream) is impossible; a lost
     // cached block fails the job loudly instead of silently corrupting the
     // id space. Batches are micro-batch sized, so the cached copy is bounded.
-    //
-    // Explicit push order (r17, guide §2.4 "remove shuffles outright"): a
-    // caller column named `__order` (cast to long) REPLACES input row order
-    // as the id-assignment order. Without it, a caller that needs
-    // deterministic ids must globally SORT its batch — a range exchange
-    // (plus its sample pass) per produce whose only purpose is to define
-    // `__ord`; with it, the unsorted batch flows straight into staging and
-    // each partition's write task sorts by the column instead. Values
-    // should be unique per target partition for a well-defined order (ties
-    // fall back to the checkpointed block order, which the eager
-    // localCheckpoint pins — still deterministic for this produce's two
-    // passes). The column is consumed here: it never reaches the log.
-    val ordExpr =
-      if (withData.columns.contains("__order")) {
-        // Fail fast on a misused `__order` (ADVICE r17): a non-numeric
-        // column would cast to null long and silently scramble id order
-        // (nulls-first, tie-arbitrary) — require a numeric type, and raise
-        // on a null value (a null has no defined position).
-        val dt = withData.schema("__order").dataType
-        require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType],
-          s"produce() column '__order' must be numeric (it defines " +
-          s"id-assignment order); got ${dt.simpleString}")
-        coalesce(col("__order").cast("long"),
-          raise_error(lit("produce() column '__order' must not be null: " +
-            "it defines id-assignment order")).cast("long"))
-      } else monotonically_increasing_id()
-    val pre = withData
-      .withColumn("__ord", ordExpr)
-      .withColumn("__p", partitionExpr)
 
     // Pass 1 fused into the checkpoint (guide §1.2 "don't compute things
     // twice" / §2.4 "remove passes outright"): the per-partition incoming
@@ -287,52 +371,72 @@ final class Producer(
     }
   }
 
-  /** Pass 2: one shuffle by target partition, then one write task per
-    * target partition appends its events, sorted by push order, to chunk
-    * files under `dest/partition=<p>/`, numbering them from `firstIds(p)`
-    * (dense, push-order) and rotating files at `chunkMaxRecords`. `dest` is
-    * always a private staging dir; nothing here touches the live log.
+  /** Pass 2: each target partition's events, sorted by push order, go to
+    * chunk files under `dest/partition=<p>/`, numbered from `firstIds(p)`
+    * (dense, push-order) and rotated at `chunkMaxRecords`, by
+    * [[Producer.writeChunks]]. `dest` is always a private staging dir;
+    * nothing here touches the live log.
     *
-    * The tasks write through Parquet's own `OutputWriterFactory` and report
-    * each file they wrote ([[ChunkReport]]); there is no Hadoop output
-    * committer, no `_temporary` tree and no `_SUCCESS` marker — the caller's
-    * commit moves exactly the reported files. A failed or duplicate task
-    * attempt writes under its own file tag and goes unreported, so its
-    * files stay in staging and die with it. The reports are checked to
-    * tile each partition's reserved range exactly before anything commits.
+    * A batch staged on the driver is already in write order and is
+    * written from the driver, with no Spark job. A checkpointed batch takes
+    * one shuffle by target partition, and one write task per target
+    * partition writes its share. The query runs on a cached AQE-free child
+    * session (see [[Producer.writeSession]]), so map stage → sorted write
+    * stage is ONE job submission; the exchange width is pinned to the
+    * topic's partition count by an explicit `repartition(n, __p)`.
     *
-    * The query runs on a cached AQE-free child session (see
-    * [[Producer.writeSession]]), so map stage → sorted write stage is ONE
-    * job submission; the exchange width is pinned to the topic's partition
-    * count by an explicit `repartition(n, __p)`. */
-  private def writeEvents(staged: DataFrame, firstIds: Map[Int, Long],
+    * Both write through Parquet's own `OutputWriterFactory`, prepared on
+    * the write session, and report each file they wrote ([[ChunkReport]]);
+    * there is no Hadoop output committer, no `_temporary` tree and no
+    * `_SUCCESS` marker — the caller's commit moves exactly the reported
+    * files. A failed or duplicate task attempt writes under its own file
+    * tag and goes unreported, so its files stay in staging and die with it.
+    * The reports are checked to tile each partition's reserved range
+    * exactly before anything commits. */
+  private def writeEvents(staged: Staged, firstIds: Map[Int, Long],
                           counts: Map[Int, Long], dest: Path): Seq[ChunkReport] =
     Catalog.profTimed("produce.write") {
       val ws = Producer.writeSession(spark)
-      val (rows, factory, conf) = Catalog.profTimed("produce.write.plan") {
-        // `staged` is an eagerly checkpointed LogicalRDD: re-wrapping its
-        // RDD in the write session triggers no job and no recompute, and
-        // the id assignment stays pinned to the checkpointed blocks.
-        val rows = Shims.asBatchDataFrame(ws, staged)
-          .repartition(n, col("__p"))
-          .sortWithinPartitions(col("__p"), col("__ord"))
-          .select(col("__p"),
-            serializer.serialize(col("metadata")).cast(StringType),
-            col("data").cast(BinaryType))
-          .queryExecution.toRdd
-        val job = Job.getInstance(Shims.newHadoopConf(ws))
-        val factory = new ParquetFileFormat()
-          .prepareWrite(ws, job, Map.empty, Producer.ChunkSchema)
-        (rows, factory, Producer.broadcastConf(ws, job.getConfiguration))
-      }
-      val chunks = described(s"graft produce ${config.name}: write") {
-        Catalog.profTimed("produce.write.job") {
-          val dir = dest.toString
-          val max = chunkMaxRecords
-          rows.mapPartitions(it =>
-            Producer.writeChunks(it, dir, firstIds, max, factory, conf))
-            .collect().toSeq
+      val job = Job.getInstance(Shims.newHadoopConf(ws))
+      val factory = new ParquetFileFormat()
+        .prepareWrite(ws, job, Map.empty, Producer.ChunkSchema)
+      val dir = dest.toString
+      val max = chunkMaxRecords
+      val chunks = staged match {
+        case OnDriver(rows) => Catalog.profTimed("produce.write.driver") {
+          // one writer per target partition, as one write task each on the
+          // distributed path, run side by side on the driver
+          val starts = rows.indices.filter(i => i == 0 || rows(i).getInt(0) != rows(i - 1).getInt(0))
+          val ranges = starts.zip(starts.drop(1) :+ rows.length)
+          Catalog.onPool(Producer.writePool, ranges.map { case (from, until) =>
+            () => Producer.writeChunks(rows.iterator.slice(from, until), dir, firstIds,
+              max, factory, job.getConfiguration,
+              new TaskAttemptID("graft", 0, TaskType.MAP, rows(from).getInt(0), 0)).toSeq
+          }).flatten
         }
+        case Checkpointed(df) =>
+          val (rows, conf) = Catalog.profTimed("produce.write.plan") {
+            // `df` is an eagerly checkpointed LogicalRDD: re-wrapping its
+            // RDD in the write session triggers no job and no recompute,
+            // and the id assignment stays pinned to the checkpointed blocks.
+            val rows = Shims.asBatchDataFrame(ws, df)
+              .repartition(n, col("__p"))
+              .sortWithinPartitions(col("__p"), col("__ord"))
+              .select(col("__p"),
+                serializer.serialize(col("metadata")).cast(StringType),
+                col("data").cast(BinaryType))
+              .queryExecution.toRdd
+            (rows, Producer.broadcastConf(ws, job.getConfiguration))
+          }
+          described(s"graft produce ${config.name}: write") {
+            Catalog.profTimed("produce.write.job") {
+              rows.mapPartitions { it =>
+                val tc = TaskContext.get()
+                Producer.writeChunks(it, dir, firstIds, max, factory, conf.value,
+                  new TaskAttemptID("graft", 0, TaskType.MAP, tc.partitionId(), tc.attemptNumber()))
+              }.collect().toSeq
+            }
+          }
       }
       Producer.checkTiling(config.name, chunks, firstIds, counts)
       Producer.afterWrite(dest)
@@ -466,6 +570,14 @@ final class Producer(
 }
 
 object Producer {
+  /** A validated, placed batch as `stageAndCount` hands it to the write:
+    * the rows `(__p, metadata, data, __ord)` already on the driver, with
+    * the metadata serialized and sorted by `(__p, __ord)`, or the
+    * checkpointed frame of the distributed path. */
+  private sealed trait Staged
+  private final case class OnDriver(rows: Array[InternalRow]) extends Staged
+  private final case class Checkpointed(df: DataFrame) extends Staged
+
   /**
    * One AQE-free child session per engine session, for the produce WRITE
    * query only (see writeEvents). `newSession()` shares the SparkContext,
@@ -525,23 +637,24 @@ object Producer {
     StructField("event_id", LongType), StructField("metadata", StringType),
     StructField("data", BinaryType)))
 
-  /** Test seam: called in the producing thread after a produce's write
-    * job, before its commit, with the write's staging dir. */
+  /** Test seam: called in the producing thread after a produce's write,
+    * before its commit, with the write's staging dir. */
   @volatile private[engine] var afterWrite: Path => Unit = _ => ()
 
-  /** One write task's body: `rows` are `(partition, metadata, data)`,
-    * sorted by (partition, push order). Numbers each partition's rows from
-    * `firstIds`, starts a new file per partition and every `maxRecords`
-    * rows, and reports every file it closed. File names carry a fresh tag
-    * per task attempt, so two attempts of one task never share a file. */
+  /** One writer's body, on a write task or on the driver: `rows` are
+    * `(partition, metadata, data, …)`, sorted by (partition, push order).
+    * Numbers each partition's rows from `firstIds`, starts a new file per
+    * partition and every `maxRecords` rows, and reports every file it
+    * closed. `attempt` tags the files: their names carry its task number
+    * and a fresh UUID, so two attempts of one task never share a file. */
   private[engine] def writeChunks(rows: Iterator[InternalRow], dir: String,
                                   firstIds: Map[Int, Long], maxRecords: Long,
                                   factory: OutputWriterFactory,
-                                  conf: HadoopConfBroadcast): Iterator[ChunkReport] = {
-    val tc = TaskContext.get()
-    val ctx = new TaskAttemptContextImpl(new Configuration(conf.value),
-      new TaskAttemptID("graft", 0, TaskType.MAP, tc.partitionId(), tc.attemptNumber()))
-    val prefix = f"part-${tc.partitionId()}%05d-${java.util.UUID.randomUUID()}"
+                                  conf: Configuration,
+                                  attempt: TaskAttemptID): Iterator[ChunkReport] = {
+    // a JobConf is taken as is: the context copies any other conf
+    val ctx = new TaskAttemptContextImpl(new JobConf(conf), attempt)
+    val prefix = f"part-${attempt.getTaskID.getId}%05d-${java.util.UUID.randomUUID()}"
     val ext = factory.getFileExtension(ctx)
     val out = new GenericInternalRow(3)
     val reports = ArrayBuffer.empty[ChunkReport]
@@ -609,4 +722,40 @@ object Producer {
     * width the per-row branch chain would dominate and the map-side-
     * combined second pass wins. */
   private[engine] val FusedCountMaxPartitions = 256
+
+  /** Threads that write driver-staged partitions side by side, shared by
+    * all producers of the JVM. Kept apart from the catalog's footer pool,
+    * which serves commits inside the produce lock and must not queue
+    * behind data writes. */
+  private val DriverWriteThreads = 4
+  private lazy val writePool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newFixedThreadPool(DriverWriteThreads, r => {
+      val t = new Thread(r, "graft-chunk-write")
+      t.setDaemon(true)
+      t
+    })
+
+  /** Staged rows `(__p, metadata, data, __ord)` in write order. */
+  private val WriteOrder: java.util.Comparator[InternalRow] =
+    (a: InternalRow, b: InternalRow) => {
+      val c = Integer.compare(a.getInt(0), b.getInt(0))
+      if (c != 0) c else java.lang.Long.compare(a.getLong(3), b.getLong(3))
+    }
+
+  /** The input's rows when it is a driver-resident batch: a plan over
+    * local relations only that the optimizer folds into one
+    * `LocalRelation` (as it does for `toDF`/`createDataFrame` on local
+    * data, renamed or projected). None for anything else: a Spark job
+    * stages it. */
+  private def driverRows(df: DataFrame): Option[LocalRelation] =
+    df.queryExecution.analyzed match {
+      case l: LocalRelation => Some(l).filterNot(_.isStreaming)
+      case analyzed if analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]) =>
+        df.queryExecution.optimizedPlan match {
+          case l: LocalRelation if !l.isStreaming &&
+              l.output.map(_.exprId) == analyzed.output.map(_.exprId) => Some(l)
+          case _ => None
+        }
+      case _ => None
+    }
 }

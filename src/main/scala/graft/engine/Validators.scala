@@ -2,11 +2,12 @@ package graft.engine
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.functions.EventBridge
+import graft.functions.{EventBridge, JsonDocument}
 
 /**
  * Producer-side metadata validation (reference F1-F3): a validator compiles
@@ -34,9 +35,16 @@ object Validator {
     override def descriptor: JObject = TopicConfig.DefaultValidator
   }
 
+  /** EventBridge pattern over the metadata, which must also be one whole
+    * JSON document: a one-field pattern compiles to `get_json_object`,
+    * which reads only the first value, so without the document check
+    * `{"kind":"good"} x` would pass `{"kind":["good"]}`. The check lives
+    * here, not in [[EventBridge.matches]], which consumer-side matchers
+    * share. */
   final case class EventBridgeValidator(pattern: String) extends Validator {
     override def predicate(metadata: Column): Column =
-      EventBridge.matches(metadata, pattern)
+      EventBridge.matches(metadata, pattern) &&
+        Shims.column(JsonDocument(Shims.expression(metadata)))
     override def descriptor: JObject = JObject(
       "type" -> JString("eventbridge"),
       "pattern" -> JsonMethods.parse(pattern))

@@ -2,13 +2,16 @@ package graft.functions
 
 import java.nio.charset.StandardCharsets
 
+import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonProcessingException}
+import com.fasterxml.jackson.core.json.JsonReadFeature
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.json.GetJsonObjectEvaluator
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -73,6 +76,34 @@ object JsonField {
     case Some(fields) => JsonField(json, fields, path)
     case None => GetJsonObject(json, Literal(path))
   }
+}
+
+/**
+ * True when the string is one whole JSON value with nothing but whitespace
+ * around it; NULL for a NULL input. `get_json_object` reads only the first
+ * value of its input, so `{"a":1} x` and `{"a":1}{"b":2}` answer `$.a` as
+ * if they were `{"a":1}`; a check that must see the whole document ANDs
+ * this in. The text is read with the leniency of `get_json_object` (single
+ * quotes and raw control characters inside strings are allowed), so the
+ * two agree on every document that is one value.
+ */
+final case class JsonDocument(json: Expression) extends UnaryExpression {
+  override def child: Expression = json
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = true
+  override def prettyName: String = "json_document"
+
+  override def eval(input: InternalRow): Any = {
+    val s = json.eval(input)
+    if (s == null) null else JsonFields.isDocument(s.asInstanceOf[UTF8String])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, s =>
+      s"${ev.value} = graft.functions.JsonFields.isDocument($s);")
+
+  override protected def withNewChildInternal(newChild: Expression): JsonDocument =
+    copy(json = newChild)
 }
 
 /**
@@ -141,6 +172,26 @@ object JsonFields {
       fallback.evaluate().asInstanceOf[UTF8String]
     }
   }
+
+  /** A path key no document holds (a string's body never contains its
+    * closing quote), so [[scan]] follows no path and only validates. */
+  private val NoKey = Array(Array('"'.toByte))
+  // the features Spark's `get_json_object` parser enables
+  private lazy val lenient = new JsonFactoryBuilder()
+    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS)
+    .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES)
+    .build()
+
+  /** Whether `json` is one whole JSON value, surrounded by whitespace only:
+    * proven by [[scan]] on its fast path, otherwise decided by Jackson
+    * reading to the end of the input. */
+  def isDocument(json: UTF8String): Boolean =
+    scan(json.getBaseObject, json.getBaseOffset, json.numBytes, NoKey) == Absent || {
+      val parser = lenient.createParser(json.getBytes)
+      try parser.nextToken() != null && { parser.skipChildren(); parser.nextToken() == null }
+      catch { case _: JsonProcessingException => false }
+      finally parser.close()
+    }
 
   private final val Value = 0
   private final val After = 1

@@ -20,7 +20,9 @@ import graft.SparkSpec
  * manifest's, dense push-order ids, rotation), that unreported debris is
  * never moved or adopted on either produce path, that a failed write leaves
  * nothing in the log, that the writer follows the session's Parquet conf,
- * and the footer-read pool behind the manifest heal.
+ * and the footer-read pool behind the manifest heal. Each spec runs once on
+ * a driver-resident batch (written from the driver) and once on the same
+ * rows as a distributed input (written by Spark tasks).
  */
 class ChunkWriterSpec extends SparkSpec {
 
@@ -70,6 +72,13 @@ class ChunkWriterSpec extends SparkSpec {
     dst
   }
 
+  /** Registers `name` once per produce input: the driver-resident batch
+    * under `name` itself, the distributed one with its label appended. */
+  private def onBothPaths(name: String)(body: ProduceInput => Unit): Unit =
+    ProduceInput.Both.foreach { in =>
+      test(if (in == ProduceInput.Local) name else s"$name [${in.label}]")(body(in))
+    }
+
   private def withAfterWrite[T](hook: Path => Unit)(body: => T): T = {
     Producer.afterWrite = hook
     try body finally Producer.afterWrite = _ => ()
@@ -81,11 +90,11 @@ class ChunkWriterSpec extends SparkSpec {
     finally r.close()
   }
 
-  test("rotating produces: manifest ranges equal footer ranges; ids dense in push order") {
+  onBothPaths("rotating produces: manifest ranges equal footer ranges; ids dense in push order") { in =>
     val (d, topic, fs) = newTopic(partitions = 3)
     val producer = topic.producer(chunkMaxRecords = 7)
     // unordered path: push order is input row order
-    producer.produce(rows(0 until 60)): Unit
+    in.run(spark)(producer.produce(in(rows(0 until 60)))): Unit
     // __order path: a shuffled batch whose __order restores push order
     val shuffled = new scala.util.Random(7).shuffle((60 until 120).toVector)
     val ordered = {
@@ -94,7 +103,7 @@ class ChunkWriterSpec extends SparkSpec {
         if (i % 4 == 0) null else s"payload-$i".getBytes("UTF-8"), i % 3, i.toLong))
         .toDF("metadata", "data", "partition", "__order")
     }
-    producer.produce(ordered): Unit
+    in.run(spark)(producer.produce(in(ordered))): Unit
 
     val m = d.catalog.readManifest("t").get
     val entries = m.files.toSeq.flatMap { case (p, fsq) => fsq.map(p -> _) }
@@ -128,12 +137,12 @@ class ChunkWriterSpec extends SparkSpec {
     }
   }
 
-  test("unreported debris in a concurrent produce's staging is neither moved nor adopted") {
+  onBothPaths("unreported debris in a concurrent produce's staging is neither moved nor adopted") { in =>
     val (d, topic, fs) = newTopic(partitions = 1)
-    topic.producer().produce(rows(0 until 5)): Unit
+    topic.producer().produce(in(rows(0 until 5))): Unit
     var planted: Path = null
     withAfterWrite(dir => planted = plantDebris(dir, first = 5L, n = 2)) {
-      topic.producer().produce(rows(5 until 10)): Unit
+      in.run(spark)(topic.producer().produce(in(rows(5 until 10)))): Unit
     }
     assert(planted != null && planted.toString.contains("log.staging"))
     assert(!logChunks(d, fs).exists(_.getName.contains("debris")), "debris was moved")
@@ -144,13 +153,13 @@ class ChunkWriterSpec extends SparkSpec {
     assert(ids.toSeq == (0L until 10L))
   }
 
-  test("unreported debris on the lock-held path is neither moved nor adopted") {
+  onBothPaths("unreported debris on the lock-held path is neither moved nor adopted") { in =>
     val (d, topic, fs) = newTopic(partitions = 1)
-    topic.producer().produce(rows(0 until 5)): Unit
+    topic.producer().produce(in(rows(0 until 5))): Unit
     var planted: Path = null
     val tx = topic.beginTransaction("held")
     withAfterWrite(dir => planted = plantDebris(dir, first = 5L, n = 2)) {
-      tx.produce(rows(5 until 10)): Unit
+      in.run(spark)(tx.produce(in(rows(5 until 10)))): Unit
     }
     tx.commit()
     assert(planted != null && planted.toString.contains("log.staging"),
@@ -163,7 +172,7 @@ class ChunkWriterSpec extends SparkSpec {
     assert(ids.toSeq == (0L until 10L))
   }
 
-  test("a produce whose write job throws leaves no chunk in the log, on either path") {
+  onBothPaths("a produce whose write job throws leaves no chunk in the log, on either path") { in =>
     /** A plain file where the staging root belongs: every write task fails. */
     def blocked[T](d: GraftDriver, fs: FileSystem)(body: => T): T = {
       val blocker = new Path(d.catalog.topicPath("t"), "log.staging")
@@ -173,12 +182,12 @@ class ChunkWriterSpec extends SparkSpec {
     }
     // concurrent path, then a produce that takes the same ids
     val (d, topic, fs) = newTopic(partitions = 2)
-    topic.producer().produce(rows(0 until 6)): Unit
+    topic.producer().produce(in(rows(0 until 6))): Unit
     val before = logChunks(d, fs).toSet
-    blocked(d, fs)(intercept[Exception](topic.producer().produce(rows(6 until 12))))
+    blocked(d, fs)(intercept[Exception](topic.producer().produce(in(rows(6 until 12)))))
     assert(logChunks(d, fs).toSet == before, "a failed write left chunks in the log")
     assert(d.catalog.listProduceIntents("t").isEmpty)
-    topic.producer().produce(rows(6 until 12)): Unit
+    in.run(spark)(topic.producer().produce(in(rows(6 until 12)))): Unit
     val ev = topic.events().select("partition", "event_id").collect()
       .map(r => r.getInt(0) -> r.getLong(1))
     assert(ev.length == 12)
@@ -187,15 +196,15 @@ class ChunkWriterSpec extends SparkSpec {
 
     // lock-held path
     val (d2, topic2, fs2) = newTopic(partitions = 2)
-    topic2.producer().produce(rows(0 until 6)): Unit
+    topic2.producer().produce(in(rows(0 until 6))): Unit
     val before2 = logChunks(d2, fs2).toSet
     val tx = topic2.beginTransaction("fails")
-    blocked(d2, fs2)(intercept[Exception](tx.produce(rows(6 until 12))))
+    blocked(d2, fs2)(intercept[Exception](tx.produce(in(rows(6 until 12)))))
     assert(logChunks(d2, fs2).toSet == before2, "a failed write left chunks in the log")
     assert(stagingLeft(d2, fs2).isEmpty)
   }
 
-  test("the chunk writer follows the session's Parquet codec, changed after a produce") {
+  onBothPaths("the chunk writer follows the session's Parquet codec, changed after a produce") { in =>
     val (d, topic, _) = newTopic(partitions = 1)
     val key = "spark.sql.parquet.compression.codec"
     def newest(): Path = {
@@ -204,10 +213,10 @@ class ChunkWriterSpec extends SparkSpec {
     }
     val prev = spark.conf.getOption(key)
     try {
-      topic.producer().produce(rows(0 until 3)): Unit
+      in.run(spark)(topic.producer().produce(in(rows(0 until 3)))): Unit
       assert(codecOf(newest()) == CompressionCodecName.SNAPPY)
       spark.conf.set(key, "gzip")
-      topic.producer().produce(rows(3 until 6)): Unit
+      in.run(spark)(topic.producer().produce(in(rows(3 until 6)))): Unit
       assert(codecOf(newest()) == CompressionCodecName.GZIP)
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)
@@ -216,9 +225,9 @@ class ChunkWriterSpec extends SparkSpec {
     assert(topic.events().count() == 6)
   }
 
-  test("a manifest heal adopts many files through the footer pool; errors surface unwrapped") {
+  onBothPaths("a manifest heal adopts many files through the footer pool; errors surface unwrapped") { in =>
     val (d, topic, fs) = newTopic(partitions = 1)
-    topic.producer(chunkMaxRecords = 1).produce(rows(0 until 40)): Unit
+    in.run(spark)(topic.producer(chunkMaxRecords = 1).produce(in(rows(0 until 40)))): Unit
     assert(logChunks(d, fs).size == 40)
     // lose the manifest: the next non-produce commit heals it from the log
     assert(fs.delete(new Path(d.catalog.topicPath("t"), "_manifest"), true))

@@ -3,10 +3,14 @@ package graft.functions
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
+import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonProcessingException}
+import com.fasterxml.jackson.core.json.JsonReadFeature
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.SparkSpec
 
@@ -252,6 +256,31 @@ class JsonFieldsSpec extends SparkSpec {
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       diff(codegen = false)
     }
+  }
+
+  test("isDocument: every document the scanner proves whole, Jackson reads whole too") {
+    val lenient = new JsonFactoryBuilder()
+      .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS)
+      .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES)
+      .build()
+    def jackson(d: Array[Byte]): Boolean = {
+      val p = lenient.createParser(d)
+      try p.nextToken() != null && { p.skipChildren(); p.nextToken() == null }
+      catch { case _: JsonProcessingException => false }
+      finally p.close()
+    }
+    val noKey = Array(Array('"'.toByte))
+    var proven, whole = 0
+    docs.flatten.foreach { d =>
+      if (JsonFields.scan(d, Platform.BYTE_ARRAY_OFFSET.toLong, d.length, noKey) == JsonFields.Absent)
+        proven += 1
+      val expected = jackson(d)
+      if (expected) whole += 1
+      assert(JsonFields.isDocument(UTF8String.fromBytes(d)) == expected, new String(d, UTF_8))
+    }
+    val n = docs.flatten.size
+    assert(proven > n / 5 && whole - proven > n / 50 && n - whole > n / 50,
+      s"proven=$proven whole=$whole of $n")
   }
 
   test("hand-picked edges answer like get_json_object") {
