@@ -110,7 +110,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     Serializer.fromDescriptor(config.serializer)
     if (topicExists(name))
       throw new IllegalStateException("Topic already exists")
-    fs.mkdirs(topicPath(name))
+    FileCreate.mkdirs(fs, topicPath(name))
     writeTopicConfig(config)
     writeAtomic(new Path(topicPath(name), "_ids.json"),
       idsJson((0 until config.partitions).map(_ -> 0L).toMap))
@@ -551,7 +551,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     val seq = priorSeq + 1
     val snapSeq = if (snaps.nonEmpty) snaps.last._1 else -1L
     val due = deltas.count(_._1 > snapSeq) + 1 >= Catalog.ManifestSnapshotEvery
-    fs.mkdirs(manifestDir(name))
+    FileCreate.mkdirs(fs, manifestDir(name))
     val cached = manifestCache.get(name)
     // what a fresh reader assembles after this commit, parsed from the
     // entry as written; None when the prior view is not the cached one
@@ -864,7 +864,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       }.toMap
     val (snaps, deltas) = scanManifestLog(name)
     val seq = ((snaps ++ deltas).map(_._1) :+ minSeq).max + 1
-    fs.mkdirs(manifestDir(name))
+    FileCreate.mkdirs(fs, manifestDir(name))
     writeSnapshot(name, seq, TopicManifest(next, files), Nil): Unit
     (snaps ++ deltas).foreach { case (_, p) => fs.delete(p, false): Unit }
     purgeOldManifestRelations(name, keepSeq = seq)
@@ -1507,7 +1507,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     {
       failOnUndecidedTxnGates(name, vectorRootInventory(name)._2, exemptTxn = None)
       val dir = deletesDir(name)
-      fs.mkdirs(dir): Unit
+      FileCreate.mkdirs(fs, dir): Unit
       // staged under a NON-hidden name (a dot prefix would make Spark's
       // file index ignore the count read below) that readers still never
       // list — deleteVectorFiles keeps only `d-*` entries
@@ -1631,10 +1631,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     // sidecar rides inside the root (underscore name: invisible to every
     // parquet listing) and commits atomically with it via the rename —
     // written pre-rename, so a plain create is safe
-    val sideOut = fs.create(new Path(staged, "_sources.json"), true)
-    try sideOut.write(
+    FileCreate.write(fs, new Path(staged, "_sources.json"),
       VectorSource.seqToJson(sources).getBytes(StandardCharsets.UTF_8))
-    finally sideOut.close()
     // MIN source millis in the name keeps even legacy timestamp
     // attribution conservative (never attributes folded deletes to a
     // commit AFTER their original)
@@ -1652,7 +1650,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     // rename and a marker leaves a live replica — source-level dedupe in
     // the planners keeps that exact too.
     files.foreach { f =>
-      fs.create(new Path(new Path(f), Catalog.FoldedMarker), true).close()
+      FileCreate.touch(fs, new Path(new Path(f), Catalog.FoldedMarker))
     }
     files.size
   }
@@ -2492,7 +2490,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       writeAtomic(txnPath(name, txnId), st.copy(offsets = st.offsets :+
         TxnOffsets(sourceTopic, consumer, floors)).toJson)
     } finally releaseProduceLock(name)
-    fs.mkdirs(cursorPendDir(sourceTopic)): Unit
+    FileCreate.mkdirs(fs, cursorPendDir(sourceTopic)): Unit
     writeAtomic(txnPointerPath(sourceTopic, name, txnId),
       Catalog.txnPointerJson(name, txnId))
   }
@@ -2724,7 +2722,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
             val src = new Path(logPath(name), f.path)
             val dstDir = new Path(root, s"partition=$p")
             val dst = new Path(dstDir, src.getName)
-            coldFs.mkdirs(dstDir)
+            FileCreate.mkdirs(coldFs, dstDir)
             // CRASH-RESUMABLE: a prior archive attempt that died before its
             // tier-state write left this file already at dst — record it
             // and move on instead of throwing on the missing src (the
@@ -2801,7 +2799,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
               throw new java.io.IOException(
                 s"restore: hot file already exists: $dst")
             } else {
-              fs.mkdirs(dstDir)
+              FileCreate.mkdirs(fs, dstDir)
               val sameFs = fs.getUri == coldFs.getUri
               val ok =
                 if (sameFs && !t.shared) fs.rename(src, dst)
@@ -2928,7 +2926,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       writeAtomic(tierPath(dst),
         TierState(topicPath(src).toString, files, ref, shared = true).toJson)
       writeNextIds(dst, wm)
-      fs.mkdirs(manifestDir(dst))
+      FileCreate.mkdirs(fs, manifestDir(dst))
       writeAtomic(new Path(manifestDir(dst), seqFileName("snap", 1L)),
         TopicManifest(wm, Map.empty).toJson)
       // deletion vectors: O(deleted) small parquet files — copy, don't share
@@ -3004,7 +3002,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     try {
       if (txnState(name, txnId).isDefined) throw new IllegalStateException(
         s"transaction '$txnId' already exists on topic '$name'")
-      fs.mkdirs(txnDir(name))
+      FileCreate.mkdirs(fs, txnDir(name))
       writeAtomic(txnPath(name, txnId), TxnState("open", Vector.empty).toJson)
     } finally releaseProduceLock(name)
   }
@@ -3246,7 +3244,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
         val matched = dedup.filter(coalesce(cond, lit(false)))
           .select(col("partition"), col("event_id"))
         val dir = deletesDir(name)
-        fs.mkdirs(dir): Unit
+        FileCreate.mkdirs(fs, dir): Unit
         // dash-free suffix: the root name's last segment must BE the
         // suffix (see txnRootsBySuffix)
         val suffix = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
@@ -3460,8 +3458,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   private def storeNowMs(dir: Path): Long =
     try {
       val probe = new Path(dir, ".nowprobe")
-      val out = fs.create(probe, true)
-      try out.write('t': Int) finally out.close()
+      FileCreate.write(fs, probe, Array('t'.toByte))
       fs.getFileStatus(probe).getModificationTime
     } catch { case scala.util.control.NonFatal(_) => localNowMs }
 
@@ -3772,7 +3769,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
           val merged = readStringResilient(path).map(RemoteTxn.fromJson)
             .map(r => r.copy(ranges = r.ranges ++ TxnRange.toRanges(ranges)))
             .getOrElse(RemoteTxn(coord, txnId, TxnRange.toRanges(ranges)))
-          fs.mkdirs(remoteTxnDir(target)): Unit
+          FileCreate.mkdirs(fs, remoteTxnDir(target)): Unit
           writeAtomic(path, merged.toJson)
         })
       } finally releaseProduceLock(target)
@@ -3796,7 +3793,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     readStringResilient(pidPath(name, pid)).map(PidState.fromJson)
 
   private[engine] def writeProducerState(name: String, pid: String, st: PidState): Unit = {
-    fs.mkdirs(pidDir(name))
+    FileCreate.mkdirs(fs, pidDir(name))
     writeAtomic(pidPath(name, pid), st.toJson)
   }
 
@@ -4167,7 +4164,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       p -> math.max(wm.getOrElse(p, 0L), ends.getOrElse(p, 0L)) }
     val id = java.util.UUID.randomUUID().toString.take(12)
     val ranges = TxnRange.toRanges(counts.map { case (p, c) => p -> (firstIds(p), c) })
-    fs.mkdirs(intentsDir(name))
+    FileCreate.mkdirs(fs, intentsDir(name))
     writeAtomic(intentPath(name, id), JsonMethods.compact(JsonMethods.render(
       JObject("ranges" -> TxnRange.toJValue(ranges)))))
     (id, firstIds)
@@ -4213,7 +4210,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     try {
       if (heartbeatForceWriteRefresh || !Catalog.refreshMtimeVerified(fs, p)) {
         val lease = intentLeasePath(name, id)
-        fs.create(lease, true).close()
+        FileCreate.touch(fs, lease)
         // self-heal the create-vs-rollback race: a rollback deletes lease
         // then record; a lease landing between those deletes (or after
         // both) must not linger — re-check the record and retract
@@ -4488,7 +4485,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
                                  chunks: Seq[ChunkReport]): Unit =
     chunks.groupBy(_.partition).foreach { case (p, cs) =>
       val dst = new Path(logPath(name), s"partition=$p")
-      fs.mkdirs(dst): Unit
+      FileCreate.mkdirs(fs, dst): Unit
       cs.foreach { c =>
         if (!fs.rename(new Path(staging, c.rel), new Path(dst, c.file)))
           throw new java.io.IOException(
@@ -4590,13 +4587,13 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     // delete is re-planted within one keeper period.
     var keeper: Thread = null
     def ensureKeeper(): Unit = if (keeper == null) {
-      try fs.create(request, true).close()
+      try FileCreate.touch(fs, request)
       catch { case scala.util.control.NonFatal(_) => () } // advisory only
       val period = math.max(200L, drainRequestFreshMs / 3)
       val t = new Thread(() => {
         try while (!Thread.currentThread().isInterrupted) {
           Thread.sleep(period)
-          try fs.create(request, true).close()
+          try FileCreate.touch(fs, request)
           catch { case scala.util.control.NonFatal(_) => () }
         } catch { case _: InterruptedException => () }
       }, s"graft-drain-request-$name")
@@ -4640,7 +4637,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
 
   private[engine] def writeMergeIntent(name: String, mergeId: String,
                                        intent: MergeIntent): Unit = {
-    fs.mkdirs(mergesDir(name))
+    FileCreate.mkdirs(fs, mergesDir(name))
     writeAtomic(mergeIntentPath(name, mergeId), intent.toJson)
   }
 
@@ -4828,10 +4825,11 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     val tmp = new Path(p.getParent, s".${p.getName}.tmp")
     var attempt = 0
     while (attempt < 4) {
-      try {
-        if (fs.exists(p)) return Some(readString(p))
-        if (!fs.exists(tmp)) return None
-      } catch { case _: java.io.FileNotFoundException => () }
+      try return Some(readString(p))
+      catch {
+        case _: java.io.FileNotFoundException =>
+          if (!fs.exists(tmp)) return None
+      }
       attempt += 1
       Thread.sleep(2L * attempt)
     }
@@ -4845,10 +4843,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     // + tmp present" also describes a LIVE writer's first-ever write
     // mid-flight — and on mtime-at-create filesystems a half-written temp
     // can look arbitrarily old, so age is not proof.
-    try {
-      if (fs.exists(p)) Some(readString(p))
-      else readTmpIfComplete(tmp)
-    } catch { case _: java.io.FileNotFoundException => None }
+    try Some(readString(p))
+    catch { case _: java.io.FileNotFoundException => readTmpIfComplete(tmp) }
   }
 
   /** A crashed writer's temp, served ONLY on structural proof of
@@ -4880,14 +4876,12 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * filesystems — the produce path pays this several times per commit.) */
   private def writeAtomic(p: Path, content: String): Unit = {
     val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-    val out = fs.create(tmp, true)
     // the trailer is the STRUCTURAL completeness proof: a reader serving
     // a crashed writer's temp validates the trailer instead of trusting
     // file age (mtime-at-create filesystems would otherwise serve a live
     // writer's half-written temp as committed content)
-    try out.write(Catalog.withTrailer(content).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
+    FileCreate.write(fs, tmp, Catalog.withTrailer(content).getBytes(StandardCharsets.UTF_8))
+    fs.delete(p, false) // false when there is none
     if (!fs.rename(tmp, p))
       throw new java.io.IOException(s"atomic write failed: rename $tmp -> $p")
   }
@@ -5157,7 +5151,7 @@ object Catalog {
     val fut = heartbeatExec.scheduleWithFixedDelay(
       () => gate.synchronized {
         if (!stopped)
-          try fs.create(p, true).close()
+          try FileCreate.touch(fs, p)
           catch { case scala.util.control.NonFatal(_) => () }
       },
       period, period, java.util.concurrent.TimeUnit.MILLISECONDS)
@@ -5253,7 +5247,7 @@ object Catalog {
       try exclWrite()
       catch { // unlike fs.create, O_EXCL does not auto-create parents
         case _: java.nio.file.NoSuchFileException =>
-          fs.mkdirs(p.getParent); exclWrite()
+          FileCreate.mkdirs(fs, p.getParent); exclWrite()
       }
     } else {
       // A store advertising conditional create arbitrates exactly by

@@ -137,7 +137,7 @@ object MergeCommit {
     val stopHeartbeat: () => Unit =
       if (!ownMarker) () => ()
       else {
-        fs.create(marker, true).close()
+        FileCreate.touch(fs, marker)
         Catalog.startFileHeartbeat(fs, marker)
       }
     try commitInner(spark, warehouse, topic, files, deletes, inserts,

@@ -5,8 +5,10 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapred.JobConf
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.{Job, RecordWriter, TaskAttemptContext, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.ParquetOutputFormat
+import org.apache.parquet.hadoop.codec.CodecConfig
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -15,7 +17,6 @@ import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProj
 import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shims
@@ -385,8 +386,9 @@ final class Producer(
     * stage is ONE job submission; the exchange width is pinned to the
     * topic's partition count by an explicit `repartition(n, __p)`.
     *
-    * Both write through Parquet's own `OutputWriterFactory`, prepared on
-    * the write session, and report each file they wrote ([[ChunkReport]]);
+    * Both write through Parquet's own record writer on the conf Spark's
+    * Parquet format prepares on the write session, creating each file
+    * through [[FileCreate]], and report each file they wrote ([[ChunkReport]]);
     * there is no Hadoop output committer, no `_temporary` tree and no
     * `_SUCCESS` marker — the caller's commit moves exactly the reported
     * files. A failed or duplicate task attempt writes under its own file
@@ -398,8 +400,9 @@ final class Producer(
     Catalog.profTimed("produce.write") {
       val ws = Producer.writeSession(spark)
       val job = Job.getInstance(Shims.newHadoopConf(ws))
-      val factory = new ParquetFileFormat()
-        .prepareWrite(ws, job, Map.empty, Producer.ChunkSchema)
+      // fills the job conf the chunk writers read: write support, schema,
+      // codec and the session's Parquet settings
+      new ParquetFileFormat().prepareWrite(ws, job, Map.empty, Producer.ChunkSchema): Unit
       val dir = dest.toString
       val max = chunkMaxRecords
       val chunks = staged match {
@@ -410,7 +413,7 @@ final class Producer(
           val ranges = starts.zip(starts.drop(1) :+ rows.length)
           Catalog.onPool(Producer.writePool, ranges.map { case (from, until) =>
             () => Producer.writeChunks(rows.iterator.slice(from, until), dir, firstIds,
-              max, factory, job.getConfiguration,
+              max, job.getConfiguration,
               new TaskAttemptID("graft", 0, TaskType.MAP, rows(from).getInt(0), 0)).toSeq
           }).flatten
         }
@@ -432,7 +435,7 @@ final class Producer(
             Catalog.profTimed("produce.write.job") {
               rows.mapPartitions { it =>
                 val tc = TaskContext.get()
-                Producer.writeChunks(it, dir, firstIds, max, factory, conf.value,
+                Producer.writeChunks(it, dir, firstIds, max, conf.value,
                   new TaskAttemptID("graft", 0, TaskType.MAP, tc.partitionId(), tc.attemptNumber()))
               }.collect().toSeq
             }
@@ -649,23 +652,22 @@ object Producer {
     * and a fresh UUID, so two attempts of one task never share a file. */
   private[engine] def writeChunks(rows: Iterator[InternalRow], dir: String,
                                   firstIds: Map[Int, Long], maxRecords: Long,
-                                  factory: OutputWriterFactory,
                                   conf: Configuration,
                                   attempt: TaskAttemptID): Iterator[ChunkReport] = {
     // a JobConf is taken as is: the context copies any other conf
     val ctx = new TaskAttemptContextImpl(new JobConf(conf), attempt)
     val prefix = f"part-${attempt.getTaskID.getId}%05d-${java.util.UUID.randomUUID()}"
-    val ext = factory.getFileExtension(ctx)
+    val ext = CodecConfig.from(ctx).getCodec.getExtension + ".parquet"
     val out = new GenericInternalRow(3)
     val reports = ArrayBuffer.empty[ChunkReport]
-    var writer: OutputWriter = null
+    var writer: RecordWriter[Void, InternalRow] = null
     var p = -1
     var file = ""
     var fileNo = 0
     var first = 0L
     var next = 0L
     def close(): Unit = if (writer != null) {
-      writer.close()
+      writer.close(ctx)
       writer = null
       reports += ChunkReport(p, file, first, next - 1, next - first)
     }
@@ -678,22 +680,36 @@ object Producer {
           first = next
           file = f"$prefix.c$fileNo%03d$ext"
           fileNo += 1
-          writer = factory.newInstance(s"$dir/partition=$p/$file", ChunkSchema, ctx)
+          writer = chunkWriter(new Path(s"$dir/partition=$p/$file"), ctx)
         }
         out.setLong(0, next)
         out.update(1, if (r.isNullAt(1)) null else r.getUTF8String(1))
         out.update(2, if (r.isNullAt(2)) null else r.getBinary(2))
-        writer.write(out)
+        writer.write(null, out)
         next += 1
       }
       close()
     } catch {
       case t: Throwable =>
         if (writer != null)
-          try writer.close() catch { case scala.util.control.NonFatal(_) => () }
+          try writer.close(ctx) catch { case scala.util.control.NonFatal(_) => () }
         throw t
     }
     reports.iterator
+  }
+
+  /** A Parquet record writer for the chunk `file`: Spark's
+    * `ParquetOutputWriter` body (Parquet's own `ParquetOutputFormat`, so the
+    * write support, codec and every Parquet setting come from the prepared
+    * conf in `ctx`), with the file's `OutputFile` opened on the create seam
+    * ([[FileCreate]]) instead of the configured file system, which Spark's
+    * writer would resolve from the path. */
+  private[engine] def chunkWriter(file: Path,
+                                  ctx: TaskAttemptContext): RecordWriter[Void, InternalRow] = {
+    val onSeam = FileCreate.path(file, ctx.getConfiguration)
+    new ParquetOutputFormat[InternalRow]() {
+      override def getDefaultWorkFile(c: TaskAttemptContext, extension: String): Path = onSeam
+    }.getRecordWriter(ctx)
   }
 
   /** The reports of one write must tile each written partition's reserved

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.FileCreate
+
 /**
  * Similarity search over embedding columns (`array<float>`).
  *
@@ -279,8 +281,7 @@ object Similarity {
   private def markSuperseded(fs: org.apache.hadoop.fs.FileSystem, path: String,
                              ver: String): Unit =
     if (!isSuperseded(fs, path, ver))
-      fs.create(new org.apache.hadoop.fs.Path(s"$path/$ver/$SupersededMarker"),
-        true).close()
+      FileCreate.touch(fs, new org.apache.hadoop.fs.Path(s"$path/$ver/$SupersededMarker"))
 
   /** Complete, NOT-superseded version dirs under `path`, newest first —
     * the READ-ONLY crash-recovery view: if the pointer writer died inside
@@ -345,9 +346,7 @@ object Similarity {
     val (fs, _) = fsOf(spark, path)
     val cur = new org.apache.hadoop.fs.Path(s"$path/_current")
     val tmp = new org.apache.hadoop.fs.Path(s"$path/._current.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(ver.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    FileCreate.write(fs, tmp, ver.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     if (fs.exists(cur)) fs.delete(cur, false)
     if (!fs.rename(tmp, cur))
       throw new java.io.IOException(s"index install: cannot rename $tmp -> $cur")
@@ -546,8 +545,8 @@ object Similarity {
       .hint("rebalance", "cell")
       .write.mode("append").partitionBy("shard", "cell").parquet(s"$root/cells")
     val marker = new org.apache.hadoop.fs.Path(s"$root/_committed/$shardId")
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, true).close() // the commit point: shard becomes visible
+    FileCreate.mkdirs(fs, marker.getParent)
+    FileCreate.touch(fs, marker) // the commit point: shard becomes visible
   }
 
   /** Stage a complete version (centroids + one base shard) and install it.
@@ -564,12 +563,10 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$stage/centroids")
     if (foldedIds.nonEmpty) {
       val f = new org.apache.hadoop.fs.Path(s"$stage/_folded.json")
-      fs.mkdirs(f.getParent)
-      val out = fs.create(f, true)
-      try out.write(org.json4s.jackson.JsonMethods.compact(
+      FileCreate.mkdirs(fs, f.getParent)
+      FileCreate.write(fs, f, org.json4s.jackson.JsonMethods.compact(
         org.json4s.JArray(foldedIds.sorted.map(org.json4s.JString(_)).toList))
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
     }
     writeShard(spark, stage, assigned, BaseShard)
     val prior = completeVersions(fs, path).filterNot(_ == ver)

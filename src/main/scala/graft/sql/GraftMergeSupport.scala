@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.engine.{Catalog, MergeCommit}
+import graft.engine.{Catalog, FileCreate, MergeCommit}
 import graft.streaming.GraftTopicTable
 
 /**
@@ -181,7 +181,7 @@ private final class GraftDeltaBatchWrite(
     val spark = SparkSession.active
     val fs = new Path(stagingDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new Path(stagingDir, "_inprogress")
-    fs.create(marker, true).close()
+    FileCreate.touch(fs, marker)
     stopHeartbeat = Catalog.startFileHeartbeat(fs, marker)
     new GraftDeltaWriterFactory(stagingDir, rowSchema, confEntries)
   }
