@@ -2,7 +2,9 @@ package graft
 
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /**
  * Driver-run benchmark main: times every registered query at the scale
@@ -66,18 +68,25 @@ object Bench {
     // stays the sum, but the split is what makes a READ-PATH regression
     // visible inside an entry whose total is 60-90% fixture cost (e.g.
     // the q_txn_* family: 4-6 produce/commit cycles before the graded
-    // read) — fixture noise can no longer hide a slow graded read.
-    final case class Split(fixture: Double, query: Double) {
+    // read) — fixture noise can no longer hide a slow graded read. Each
+    // sample also counts the classes Spark's codegen compiled during it and
+    // their Janino time: on a warm sample both should be 0, so a class
+    // cache that evicts the working set shows here, not as a vague slowdown.
+    final case class Split(fixture: Double, query: Double,
+                           compiles: Long, compileMs: Double) {
       def total: Double = fixture + query
       def min(o: Split): Split = if (total <= o.total) this else o
     }
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def once(name: String): Either[String, Split] = {
+      val (c0, ns0) = (compiles, CodeGenerator.compileTime)
       val t0 = System.nanoTime()
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
         val t1 = System.nanoTime()
         df.count()
-        Right(Split((t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9))
+        Right(Split((t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9,
+          compiles - c0, (CodeGenerator.compileTime - ns0) / 1e6))
       } catch {
         case e: Throwable =>
           Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
@@ -223,13 +232,17 @@ object Bench {
     val splitJson = splits.map { case (k, v) =>
       s"""${jstr(k)}:{"fixture_s":${jnum(v.fixture)},"query_s":${jnum(v.query)}}"""
     }.mkString("{", ",", "}")
+    // codegen work of the same sample: classes compiled and Janino ms
+    val codegenJson = splits.map { case (k, v) =>
+      s"""${jstr(k)}:{"compiles":${v.compiles},"compile_ms":${jnum(v.compileMs)}}"""
+    }.mkString("{", ",", "}")
     val unst = unstable.map(jstr).mkString("[", ",", "]")
     val rer = reran.map(r =>
       s"""{"q":${jstr(r.name)},"prior":${jnum(r.prior)},""" +
       s""""before":${jnum(r.before)},"after":${jnum(r.after)}}""")
       .mkString("[", ",", "]")
     val fullJson =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":${timings.size},$totals,"queries":$full,"split":$splitJson,"errors":$es,"unstable":$unst,"reran":$rer,"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":${timings.size},$totals,"queries":$full,"split":$splitJson,"codegen":$codegenJson,"errors":$es,"unstable":$unst,"reran":$rer,"sf":${jstr(sfDir)}}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
       (fullJson + "\n").getBytes(StandardCharsets.UTF_8)): Unit
     catch { case scala.util.control.NonFatal(_) => () }

@@ -5721,7 +5721,7 @@ object Catalog {
 
   /** Runs `tasks` on `pool` (a single task on the calling thread) and
     * returns their results in order. Returns or throws only once no task
-    * is running: on a failure, the tasks not yet started are cancelled, the
+    * is running: on a failure, the tasks not yet started are skipped, the
     * running ones finish, and the first failure in order is rethrown
     * unwrapped — so a caller that cleans up after a failure never races a
     * task still writing. */
@@ -5729,18 +5729,21 @@ object Catalog {
                                 tasks: Seq[() => T]): Seq[T] =
     if (tasks.size <= 1) tasks.map(_())
     else {
-      val futures = tasks.map(t => pool.submit(
-        new java.util.concurrent.Callable[T] { def call(): T = t() }))
+      // a task that starts after a failure skips its work; none is
+      // cancelled, since `get` on a cancelled future returns at once while
+      // a task that had already started still runs
+      val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val futures = tasks.map(t => pool.submit(new java.util.concurrent.Callable[Option[T]] {
+        def call(): Option[T] =
+          if (failed.get) None
+          else try Some(t()) catch { case e: Throwable => failed.set(true); throw e }
+      }))
       var failure: Throwable = null
       val results = futures.map { f =>
-        try Some(f.get()) catch {
+        try f.get() catch {
           case e: java.util.concurrent.ExecutionException =>
-            if (failure == null) {
-              failure = e.getCause
-              futures.foreach(_.cancel(false))
-            }
+            if (failure == null) failure = e.getCause
             None
-          case _: java.util.concurrent.CancellationException => None
         }
       }
       if (failure != null) throw failure

@@ -287,18 +287,22 @@ object CurationPack extends QueryPack {
       // interpolation fraction — the q_agg_percentile argument)
       def tc(c: org.apache.spark.sql.Column) = round(c * 10000).cast("long")
       // global percentiles via exactGrouped over a constant group (r18,
-      // §4/§5 — same IEEE result, no per-group histogram buffer); the
-      // 1-row × 1-row crossJoin is a broadcast
+      // §4/§5 — same IEEE result, no per-group histogram buffer). On empty
+      // input exactGrouped has no row while the global count still has
+      // one (as `percentile` does: null quantiles), so the count side
+      // drives a left join on the constant group; the 1-row side is a
+      // broadcast
       val perKey = t(s, dir, "lineitem")
         .groupBy(col("l_orderkey")).agg(count(lit(1)).as("n"))
       val pct = graft.operators.Quantiles.exactGrouped(
           perKey.withColumn("__g", lit(1)), "__g", "n",
           Seq("p50" -> 0.5, "p99" -> 0.99))
-        .select(tc(col("p50")).as("p50_tc"), tc(col("p99")).as("p99_tc"))
+        .select(col("__g"), tc(col("p50")).as("p50_tc"), tc(col("p99")).as("p99_tc"))
       perKey
-        .agg(count(lit(1)).as("n_keys"),
+        .agg(lit(1).as("__g"), count(lit(1)).as("n_keys"),
           sum(col("n")).as("n_rows"), max(col("n")).as("max_n"))
-        .crossJoin(broadcast(pct))
+        .join(broadcast(pct), Seq("__g"), "left")
+        .drop("__g")
     },
   )
 

@@ -82,7 +82,9 @@ object Relational extends QueryPack {
       // but spillable codegen operators instead of a per-group value
       // histogram buffered in ObjectHashAggregate (the §5 memory hazard at
       // 100 TB cardinalities). min/max stay a plain hash aggregate; the
-      // 3-group join is a broadcast.
+      // 3-group join is a broadcast. It is a LEFT join from the min/max
+      // side: exactGrouped has no row for a group whose prices are all
+      // null, where `percentile` (and the oracle) give null quantiles.
       def tc(c: org.apache.spark.sql.Column) = round(c * 10000).cast("long")
       val li = t(s, dir, "lineitem")
       val pct = graft.operators.Quantiles.exactGrouped(
@@ -90,7 +92,7 @@ object Relational extends QueryPack {
       li.groupBy($"l_returnflag")
         .agg(cents(min($"l_extendedprice")).as("min_c"),
           cents(max($"l_extendedprice")).as("max_c"))
-        .join(broadcast(pct), Seq("l_returnflag"))
+        .join(broadcast(pct), Seq("l_returnflag"), "left")
         .select($"l_returnflag", tc($"p50").as("p50_tc"), tc($"p95").as("p95_tc"),
           $"min_c", $"max_c")
         .orderBy($"l_returnflag")

@@ -243,4 +243,17 @@ class ChunkWriterSpec extends SparkSpec {
       Catalog.footerRanges(paths :+ missing, hc))
     assert(Catalog.footerRanges(paths, hc).flatten.size == 40)
   }
+
+  test("a failed task on a pool returns only after the tasks already running finish") {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val started = new java.util.concurrent.CountDownLatch(1)
+      val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val e = intercept[IllegalStateException](Catalog.onPool(pool, Seq(
+        () => { started.await(); throw new IllegalStateException("first") },
+        () => { started.countDown(); Thread.sleep(300); finished.set(true) })))
+      assert(e.getMessage == "first")
+      assert(finished.get, "onPool returned while a task still ran")
+    } finally pool.shutdown()
+  }
 }

@@ -24,6 +24,11 @@ class CountingOpsFileSystem extends RawLocalFileSystem {
   override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
                       replication: Short, blockSize: Long, progress: Progressable) =
     counted(super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress))
+  // RawLocalFileSystem serves this overload on its own; `create(Path, Boolean)`
+  // and Parquet's HadoopOutputFile reach it, not the one above
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: Progressable) =
+    counted(super.create(f, overwrite, bufferSize, replication, blockSize, progress))
   override def rename(src: Path, dst: Path): Boolean = counted(super.rename(src, dst))
   override def delete(f: Path, recursive: Boolean): Boolean = counted(super.delete(f, recursive))
   override def mkdirs(f: Path, permission: FsPermission): Boolean =

@@ -53,6 +53,55 @@ class QuantilesSpec extends SparkSpec {
     compare(rows)
   }
 
+  /** `lineitem.parquet` with the columns the two percentile queries read,
+    * in a fresh directory that a registry query can take as its table dir. */
+  private def lineitemDir(rows: Seq[(Long, String, java.lang.Double)]): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-quantiles").toString
+    rows.toDF("l_orderkey", "l_returnflag", "l_extendedprice")
+      .write.parquet(s"$dir/lineitem.parquet")
+    dir
+  }
+
+  private def tc(c: org.apache.spark.sql.Column) = round(c * 10000).cast("long")
+
+  /** q_agg_percentile against the same query written with `percentile`. */
+  private def checkAggPercentile(dir: String): Unit = {
+    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val v = col("l_extendedprice")
+    val expected = li.groupBy(col("l_returnflag"))
+      .agg(tc(percentile(v, lit(0.5))).as("p50_tc"), tc(percentile(v, lit(0.95))).as("p95_tc"),
+        round(min(v) * 100).cast("long").as("min_c"), round(max(v) * 100).cast("long").as("max_c"))
+      .orderBy(col("l_returnflag")).collect().toSeq
+    assert(graft.SparkEntry.queries("q_agg_percentile")(spark, dir).collect().toSeq == expected)
+  }
+
+  /** q_profile_skew against the same query written with `percentile`. */
+  private def checkProfileSkew(dir: String): Unit = {
+    val n = col("n")
+    val expected = spark.read.parquet(s"$dir/lineitem.parquet")
+      .groupBy(col("l_orderkey")).agg(count(lit(1)).as("n"))
+      .agg(count(lit(1)).as("n_keys"), sum(n).as("n_rows"), max(n).as("max_n"),
+        tc(percentile(n, lit(0.5))).as("p50_tc"), tc(percentile(n, lit(0.99))).as("p99_tc"))
+      .collect().toSeq
+    assert(graft.SparkEntry.queries("q_profile_skew")(spark, dir).collect().toSeq == expected)
+  }
+
+  test("q_agg_percentile keeps a group whose values are all null, as percentile does") {
+    val rows = (0 until 60).map(i => (i.toLong, "A", java.lang.Double.valueOf(i * 1.25))) ++
+      (0 until 5).map(i => (i.toLong, "N", null: java.lang.Double)) ++
+      (0 until 7).map(i => (i.toLong, "R", java.lang.Double.valueOf(100.0 - i)))
+    checkAggPercentile(lineitemDir(rows))
+  }
+
+  test("both percentile queries match percentile on empty input") {
+    val dir = lineitemDir(Seq.empty)
+    checkAggPercentile(dir)
+    checkProfileSkew(dir)
+    // a global aggregate has one row even on no input: null quantiles
+    assert(graft.SparkEntry.queries("q_profile_skew")(spark, dir).collect().length == 1)
+  }
+
   test("plan shape: no ObjectHashAggregate, codegen operators only") {
     import spark.implicits._
     val df = (0 until 100).map(i => ("g", i.toLong)).toDF("g", "v")
