@@ -72,21 +72,31 @@ object Bench {
     // sample also counts the classes Spark's codegen compiled during it and
     // their Janino time: on a warm sample both should be 0, so a class
     // cache that evicts the working set shows here, not as a vague slowdown.
+    // It also counts the Spark jobs each part launched. The graded read is
+    // a count(), which lets Catalyst drop a final sort (and prune graded
+    // aggregates), so graded jobs and time miss any cost of the result's
+    // ordering; fixtures that collect sorted results do show it.
     final case class Split(fixture: Double, query: Double,
-                           compiles: Long, compileMs: Double) {
+                           compiles: Long, compileMs: Double,
+                           fixtureJobs: Long, queryJobs: Long) {
       def total: Double = fixture + query
       def min(o: Split): Split = if (total <= o.total) this else o
     }
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val jobs = new JobCounter(spark)
     def once(name: String): Either[String, Split] = {
-      val (c0, ns0) = (compiles, CodeGenerator.compileTime)
+      val (c0, ns0, j0) = (compiles, CodeGenerator.compileTime, jobs.count)
       val t0 = System.nanoTime()
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
         val t1 = System.nanoTime()
+        val j1 = jobs.count
+        val t2 = System.nanoTime()
         df.count()
-        Right(Split((t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9,
-          compiles - c0, (CodeGenerator.compileTime - ns0) / 1e6))
+        val t3 = System.nanoTime()
+        Right(Split((t1 - t0) / 1e9, (t3 - t2) / 1e9,
+          compiles - c0, (CodeGenerator.compileTime - ns0) / 1e6,
+          j1 - j0, jobs.count - j1))
       } catch {
         case e: Throwable =>
           Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
@@ -236,13 +246,17 @@ object Bench {
     val codegenJson = splits.map { case (k, v) =>
       s"""${jstr(k)}:{"compiles":${v.compiles},"compile_ms":${jnum(v.compileMs)}}"""
     }.mkString("{", ",", "}")
+    // Spark jobs of the same sample, fixture and graded read apart
+    val jobsJson = splits.map { case (k, v) =>
+      s"""${jstr(k)}:{"fixture":${v.fixtureJobs},"query":${v.queryJobs}}"""
+    }.mkString("{", ",", "}")
     val unst = unstable.map(jstr).mkString("[", ",", "]")
     val rer = reran.map(r =>
       s"""{"q":${jstr(r.name)},"prior":${jnum(r.prior)},""" +
       s""""before":${jnum(r.before)},"after":${jnum(r.after)}}""")
       .mkString("[", ",", "]")
     val fullJson =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":${timings.size},$totals,"queries":$full,"split":$splitJson,"codegen":$codegenJson,"errors":$es,"unstable":$unst,"reran":$rer,"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":${timings.size},$totals,"queries":$full,"split":$splitJson,"codegen":$codegenJson,"jobs":$jobsJson,"errors":$es,"unstable":$unst,"reran":$rer,"sf":${jstr(sfDir)}}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
       (fullJson + "\n").getBytes(StandardCharsets.UTF_8)): Unit
     catch { case scala.util.control.NonFatal(_) => () }

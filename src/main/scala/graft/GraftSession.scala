@@ -89,7 +89,15 @@ object GraftSession {
   }
 
   /** Apply graft's required runtime confs to an externally-built session
-    * (and register graft's native SQL functions). */
+    * (and register graft's native SQL functions).
+    *
+    * Rules cannot be added to a session after it exists, so a session built
+    * without `spark.sql.extensions=graft.functions.GraftExtensions` gets none
+    * of graft's injected rules: [[graft.functions.SortInPlace]],
+    * [[graft.functions.RewriteJsonFields]] and
+    * [[graft.functions.SimplifyJsonRoundTrip]]. Its results are the same;
+    * small sorted results cost a range shuffle more, and JSON field lookups
+    * go through Spark's `get_json_object`. */
   def configure(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -219,8 +219,36 @@ object GraftFunctions {
 
 /**
  * `spark.sql.extensions`-injectable extensions: registers graft's native
- * functions into every session built with
- * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`.
+ * functions and rules into every session built with
+ * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
+ * (they cannot be added to a session after it exists; see
+ * [[graft.GraftSession.configure]]).
+ *
+ *  - `graft_dot` ([[DotProduct]]).
+ *  - [[SimplifyJsonRoundTrip]] and [[RewriteJsonFields]], logical rules over
+ *    JSON field lookups.
+ *  - [[SortInPlace]], an AQE query-stage preparation rule. It rewrites
+ *    `SortExec(global) ← ShuffleExchangeExec(RangePartitioning,
+ *    ENSURE_REQUIREMENTS)` to `SortExec(global) ← CoalesceExec(1)`, so the
+ *    sort runs in the task that computes its input, with no sample job and
+ *    no map stage, when all of these hold at re-planning time:
+ *    - every leaf of the sort's input is a materialized shuffle stage whose
+ *      origin `CoalesceShufflePartitions` may coalesce, or a materialized
+ *      broadcast stage, and at least one is such a shuffle stage (a file
+ *      scan, a cached relation's stage, a local relation or a
+ *      `repartition(n)` stage declines);
+ *    - no union splits the input into separately coalesced groups;
+ *    - the shuffle stages' total map output fits in the one partition
+ *      `CoalesceShufflePartitions` would make of it:
+ *      `spark.sql.adaptive.coalescePartitions.minPartitionSize` under
+ *      `parallelismFirst` (the default), otherwise the larger of that and
+ *      `spark.sql.adaptive.advisoryPartitionSizeInBytes`;
+ *    - partition coalescing is enabled.
+ *    It needs no knob of its own: it only moves the sort into the single
+ *    task Spark's own coalescing would have produced anyway, so its bound is
+ *    that coalescing's confs, and turning coalescing off turns it off.
+ *    Sessions without AQE (streaming, the produce write session) never run
+ *    it.
  */
 final class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
@@ -238,5 +266,6 @@ final class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions
     // pushes the filter back through it by alias substitution). Each
     // extraction is one JsonField scan of the document, with no Jackson
     // parser unless the scanner defers.
+    ext.injectQueryStagePrepRule(SortInPlace(_))
   }
 }

@@ -72,4 +72,8 @@ object Shims {
 
   def broadcastHadoopConf(sc: SparkContext, conf: Configuration): HadoopConfBroadcast =
     new HadoopConfBroadcast(sc.broadcast(new SerializableConfiguration(conf)))
+
+  /** Returns once the listener bus (`private[spark]`) has delivered every
+    * event posted before the call, so a listener's counts are complete. */
+  def awaitListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
