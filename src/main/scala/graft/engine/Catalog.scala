@@ -662,15 +662,29 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   }
 
   /**
-   * Register a commit: diff each written partition directory against the
-   * manifest's known files, register the unknown ones, and advance the
-   * manifest watermark to `newNext`. A produce commit brings its own
-   * files' id ranges (`produced`, the write tasks' reports), so none of
-   * its fresh chunks has its footer read. Any OTHER unknown file gets its
-   * footer read once (on [[Catalog.footerRanges]]' I/O pool) — this is the
-   * HEAL of partitions whose manifest fell behind the on-disk state
-   * (lost manifest), and the one path non-produce callers (delete-vector
-   * version bumps, heals) take for every file.
+   * Register a commit and advance the manifest watermark to `newNext`.
+   *
+   * A produce commit brings its own files' id ranges (`produced`, the
+   * write tasks' reports), so none of its fresh chunks has its footer read.
+   * When the prior manifest exists and its watermark on every written
+   * partition already reaches the produce's first id there (so it is at
+   * least the pre-commit id watermark), the commit registers exactly
+   * `produced` and lists no directory: O(new files) however long the log
+   * is. That is sound because of the log's invariant: a chunk file sits in
+   * `log/` without a manifest entry only while a durable crash marker
+   * covers it — a concurrent produce's intent record, whose reserved range
+   * holds the file's ids, or a lock-held produce's `log.staging/held-*`
+   * dir — and whoever finds the marker purges the file before the marker
+   * goes ([[rollbackProduceIntentLocked]], [[purgeAtEntryLocked]]). So no
+   * unknown file can be waiting for this commit to adopt it.
+   *
+   * Every other commit diffs each partition of `newNext` against the
+   * manifest's known files and registers the unknown ones: a produce over
+   * a decided-dead gap or onto a missing or lagging manifest, and every
+   * non-produce caller (delete-vector version bumps). Any unknown file
+   * that is not the produce's own gets its footer read once (on
+   * [[Catalog.footerRanges]]' I/O pool) — the HEAL of partitions whose
+   * manifest fell behind the on-disk state.
    *
    * @param excludeGap per-partition `[lo, hi)` id interval whose unknown
     *        files must NOT be adopted — a concurrent produce's commit
@@ -690,11 +704,15 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     val prior = priorOpt.getOrElse(TopicManifest(Map.empty, Map.empty))
     val reported: Map[String, Option[(Long, Long)]] =
       produced.map(c => c.rel -> Some((c.first, c.last))).toMap
+    val firstIds: Map[Int, Long] =
+      produced.groupBy(_.partition).view.mapValues(_.map(_.first).min).toMap
+    val complete = priorOpt.isDefined && produced.nonEmpty && newNext.keys.forall(p =>
+      firstIds.get(p).exists(prior.watermarks.getOrElse(p, 0L) >= _))
     // unknown = listed ∖ manifest (normally exactly this produce's output),
     // plus the reported files themselves, so a listing that lags the moves
     // can never drop one
     val unknown: Seq[(Int, String)] =
-      (unlistedChunkFiles(name, prior, newNext.keys) ++
+      ((if (complete) Nil else unlistedChunkFiles(name, prior, newNext.keys)) ++
         produced.map(c => c.partition -> c.rel)).distinct
     val unreported = unknown.map(_._2).filterNot(reported.contains)
     val idRanges: Map[String, Option[(Long, Long)]] = reported ++
@@ -734,17 +752,9 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
           idRanges(rel) match {
             case None =>
               if (!excludeGap.contains(p)) {
-                val f = new Path(logPath(name), rel)
-                if (priorOpt.isDefined) {
-                  val q = new Path(f.getParent, s".${f.getName}.quarantined")
-                  if (fs.rename(f, q))
-                    Catalog.log.warn(s"topic '$name': quarantined torn chunk " +
-                      s"$f at manifest update (structurally corrupt footer — " +
-                      "crashed-writer debris, never adopted)")
-                  else
-                    Catalog.log.warn(s"topic '$name': torn chunk $f could " +
-                      "not be quarantined — left unlisted, not adopted")
-                } else
+                if (priorOpt.isDefined)
+                  quarantineTorn(name, new Path(logPath(name), rel), "at manifest update")
+                else
                   Catalog.log.warn(s"topic '$name': torn chunk $rel on " +
                     "pre-manifest topic — not adopted into the healed manifest")
               }
@@ -763,29 +773,60 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   }
 
   /**
-   * Crash hygiene, run at produce start (BEFORE this produce writes
-   * anything): delete chunk files that are not in the manifest AND whose
-   * footer id range starts at or above the committed watermark. Such files
-   * can only be the output of a produce that died (or aborted on the
-   * compaction guard) between its parquet write and its id commit —
-   * leaving them would let this produce assign the same ids again, putting
-   * duplicate (partition, event_id) rows in the log. Must precede the
-   * write: afterwards this produce's own fresh files match the same
-   * signature. Pre-manifest topics skip (unknown-file set is undefined
-   * there); the listing cost mirrors what updateManifest already pays per
-   * produce.
+   * Crash hygiene: delete chunk files that are not in the manifest AND
+   * whose footer id range starts at or above the committed watermark. Such
+   * files can only be the output of a produce that died between moving its
+   * chunks into the log and its manifest entry — leaving them would let a
+   * later produce assign the same ids again, putting duplicate
+   * (partition, event_id) rows in the log. On a manifest-backed topic an
+   * unknown file with a structurally corrupt footer is quarantined, as a
+   * listing commit of [[updateManifest]] would. Lists every partition
+   * directory, so no produce runs it in steady state: the log's invariant
+   * (see [[updateManifest]]) confines such files to the ranges of crash
+   * markers, and the purge runs only where a marker, or a catalog that
+   * has not yet seen the topic, says it is needed ([[purgeAtEntryLocked]];
+   * an intent's own ranges at its rollback). Archiving runs it too.
    */
-  def purgeUncommitted(name: String): Unit = readManifest(name).foreach { m =>
+  def purgeUncommitted(name: String): Unit = purgeUncommitted(name, nextIds(name))
+
+  private def purgeUncommitted(name: String, wm: Map[Int, Long]): Unit =
+    purgeUnregistered(name, wm.keys)((p, lo) => lo >= wm.getOrElse(p, 0L))
+
+  /** Deletes the unregistered chunk files of `partitions` whose first id
+    * `lo` satisfies `doomed(partition, lo)` (without a manifest every file
+    * is unregistered; `doomed` then carries the whole judgment), and
+    * quarantines unregistered torn ones on a manifest-backed topic.
+    * Idempotent: a crash inside it just repeats it. */
+  private def purgeUnregistered(name: String, partitions: Iterable[Int])(
+      doomed: (Int, Long) => Boolean): Unit = {
     val conf = hadoopConf
-    unknownChunkFiles(name, m, nextIds(name)).foreach { case (f, watermark) =>
-      val (lo, _) = Catalog.fileIdRange(f, conf)
-      if (lo != Long.MinValue && lo >= watermark) fs.delete(f, false): Unit
-    }
+    val manifest = readManifest(name)
+    unlistedChunkFiles(name, manifest.getOrElse(TopicManifest(Map.empty, Map.empty)), partitions)
+      .foreach { case (p, rel) =>
+        val f = new Path(logPath(name), rel)
+        Catalog.fileIdRangeOpt(f, conf) match {
+          case Some((lo, _)) if lo != Long.MinValue && doomed(p, lo) => fs.delete(f, false): Unit
+          case None if manifest.isDefined => quarantineTorn(name, f, "at crash recovery")
+          case _ => ()
+        }
+      }
   }
 
+  /** Rename an unknown chunk with a structurally corrupt footer to its
+    * dot-prefixed quarantine name (invisible to listings, un-adoptable,
+    * bytes kept). */
+  private def quarantineTorn(name: String, f: Path, where: String): Unit =
+    if (fs.rename(f, new Path(f.getParent, s".${f.getName}.quarantined")))
+      Catalog.log.warn(s"topic '$name': quarantined torn chunk $f $where " +
+        "(structurally corrupt footer — crashed-writer debris, never adopted)")
+    else
+      Catalog.log.warn(s"topic '$name': torn chunk $f could not be " +
+        "quarantined — left unlisted, not adopted")
+
   /** Chunk files present on disk but absent from the manifest — the ONE
-    * "listed ∖ manifest" diff shared by [[updateManifest]] (this produce's
-    * fresh files), [[purgeUncommitted]] and the vacuum chunk pass. Driver-
+    * "listed ∖ manifest" diff shared by a listing [[updateManifest]], the
+    * crash purges ([[purgeUncommitted]], an intent's rollback, the gap
+    * purge) and the vacuum chunk pass. Driver-
     * sized manifests diff against the in-memory map; parquet-backed ones
     * anti-join the relation in Spark, so only the (few) unknown names come
     * back to the driver — the listing itself is per-partition transient. */
@@ -817,8 +858,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   }
 
   /** Listed-but-not-in-manifest chunk files, with their partition's
-    * watermark — the shared candidate set of [[purgeUncommitted]] and the
-    * vacuum chunk pass (callers apply the footer signature). Driver-sized
+    * watermark — the vacuum chunk pass's candidate set (it applies the
+    * footer signature). Driver-sized
     * manifests diff in memory; parquet-backed ones anti-join the relation,
     * so only the (few) unknown paths are ever collected. */
   private def unknownChunkFiles(name: String, m: TopicManifest,
@@ -1100,8 +1141,9 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    * produce lock makes concurrent produce safe-by-rejection: one wins, the
    * other throws. Held for the duration of purge→write→commit; released in
    * the producer's `finally`. A crashed producer's lock is reclaimed after
-   * [[Catalog.CompactLockStaleMs]] (its orphan files are then purged by
-   * `purgeUncommitted`).
+   * [[Catalog.CompactLockStaleMs]] (its moved-but-unregistered chunk files
+   * are purged at the next entry that finds its crash marker — see
+   * [[updateManifest]]).
    */
   private[engine] def acquireProduceLock(name: String): Unit =
     acquireProduceLock(name, 0L)
@@ -1938,7 +1980,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    *
    *  1. uncommitted chunk files (a produce that died between its parquet
    *     write and its id commit — same signature `purgeUncommitted` uses
-   *     on the produce path: not in the manifest AND footer ids at/above
+   *     at crash recovery: not in the manifest AND footer ids at/above
    *     the committed watermark, so a committed file can never match);
    *  2. `log.compact.tmp` (always garbage) and `log.compact.old` once the
    *     live log exists (a crashed compactor's moved-aside copy — restored
@@ -3824,11 +3866,12 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    *    marker is discarded — BEFORE a later produce advances the watermark
    *    over those ids and would falsely promote it.
    *
-   * @return the merge intents that SURVIVE reconciliation (live merges
-   *         mid-delete-phase) — most callers ignore it; MergeCommit's
-   *         serialization gate reuses the listing
+   * @return the healed committed watermark (a reserve takes it instead of
+   *         reading `_ids.json` again) and the merge intents that SURVIVE
+   *         reconciliation (live merges mid-delete-phase) — most callers
+   *         ignore it; MergeCommit's serialization gate reuses the listing
    */
-  private[engine] def reconcileProduceState(name: String): Map[String, MergeIntent] = {
+  private[engine] def reconcileProduceState(name: String): Catalog.Reconciled = {
     // WATERMARK HEAL — the produce commit's crash window (updateManifest
     // landed, writeNextIds did not) leaves the manifest watermark ahead of
     // `_ids.json`. The manifest write IS the commit point (its files are
@@ -3890,7 +3933,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
           writeAtomic(new Path(path), r.copy(ranges = fixed).toJson)
       }
     }
-    reconcileMergeState(name)
+    Catalog.Reconciled(wm, reconcileMergeState(name))
   }
 
   // -- concurrent produce intents (multi-producer ingest) --------------------
@@ -3929,9 +3972,16 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    * intent removed; a successor then GAP-ADVANCES the watermark over the
    * dead range (marking id gaps) so the chain never wedges. A rolled-back
    * range is re-issued only when NO successor reserved above it
-   * (reservations floor at live intent ends), which is safe because the
-   * dead producer's files only ever existed under its own staging UUID —
-   * they can never be adopted into the log.
+   * (reservations floor at live intent ends). The intent record is the
+   * crash marker of the files its commit moves: a commit that dies
+   * between its renames and its manifest delta leaves chunks in `log/`
+   * that no manifest lists, with ids inside the reserved range, and the
+   * record still in place. The rollback purges exactly those files before
+   * it deletes anything else ([[rollbackProduceIntentLocked]]), and a
+   * producer's own non-crash failure after its renames deletes them by
+   * name first ([[commitChunks]]) — so an unregistered file never
+   * outlives its marker, and a later commit never has to list the log to
+   * find it.
    *
    * Exclusive-statement writers (transactional/idempotent produce, SQL
    * MERGE — they hold the lock across their data write and commit a
@@ -3994,6 +4044,31 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     new Path(topicPath(name), s"log.staging/held-${java.util.UUID.randomUUID()}")
 
   private[engine] def deleteStaging(dir: Path): Unit = fs.delete(dir, true): Unit
+
+  /** Topics whose first locked write-path entry through this catalog ran
+    * its purge ([[purgeAtEntryLocked]]). */
+  private val enteredTopics = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Crash hygiene at a produce's locked entry (caller holds the produce
+    * lock and has reconciled; `wm` is the committed watermark it read).
+    * Lists `log.staging` (bounded by the live writers) for `held-*` dirs:
+    * a lock-held produce keeps its dir until its moved chunks are
+    * registered or deleted again, and held writers hold the lock we hold,
+    * so any such dir is a dead produce's crash marker — its chunks are
+    * purged ([[purgeUncommitted]]), then the dir goes. The first entry
+    * through this catalog on a topic purges too, whatever it finds: debris
+    * from before the markers existed, or of a crash whose marker was lost,
+    * goes before this catalog's commits stop listing. */
+  private[engine] def purgeAtEntryLocked(name: String, wm: Map[Int, Long]): Unit = {
+    val held =
+      try fs.listStatus(new Path(topicPath(name), "log.staging")).toSeq.collect {
+        case s if s.isDirectory && s.getPath.getName.startsWith("held-") => s.getPath
+      } catch { case _: java.io.FileNotFoundException => Nil }
+    val first = !enteredTopics.contains(name)
+    if (first || held.nonEmpty) purgeUncommitted(name, wm)
+    held.foreach(deleteStaging)
+    if (first) enteredTopics.add(name): Unit
+  }
 
   /** Produce-intent lease horizon (the concurrent-produce analog of the
     * transaction lease): an intent idle past it is presumed crashed and
@@ -4151,12 +4226,12 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   }
 
   /** Reserve dense id ranges for a concurrent produce (caller holds the
-    * produce lock): base = max(committed watermark, live intent ends) per
-    * partition, so reservations stack above everything committed OR in
-    * flight. Returns (intentId, firstIds). */
-  private[engine] def reserveProduce(name: String,
-                                     counts: Map[Int, Long]): (String, Map[Int, Long]) = {
-    val wm = nextIds(name)
+    * produce lock): base = max(committed watermark `wm`, live intent ends)
+    * per partition, so reservations stack above everything committed OR in
+    * flight. `wm` is the watermark the caller's reconcile healed, read
+    * once in this locked section. Returns (intentId, firstIds). */
+  private[engine] def reserveProduce(name: String, counts: Map[Int, Long],
+                                     wm: Map[Int, Long]): (String, Map[Int, Long]) = {
     val ends: Map[Int, Long] = listProduceIntents(name)
       .flatMap(_._2).groupBy(_.partition)
       .view.mapValues(_.map(r => r.first + r.count).max).toMap
@@ -4222,13 +4297,24 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     }
   }
 
-  /** Roll back ONE intent (caller holds the produce lock): staging
-    * deleted first, then the lease marker, then the intent record — the
-    * record goes LAST so its presence always implies the others may
+  /** Roll back ONE intent (caller holds the produce lock). First the
+    * chunks its commit may have moved into the log before dying: in the
+    * intent's partitions, every unregistered file whose first id lies in
+    * the reserved ranges and at or above the committed watermark is
+    * deleted. Then staging, then the lease marker, then the intent record
+    * — the record goes LAST so its presence always implies the others may
     * exist, and its absence is the terminal signal every observer keys
-    * on. The watermark does NOT move here — a successor's commit
+    * on. Idempotent, so a crash inside it just repeats it at the next
+    * rollback. The watermark does NOT move here — a successor's commit
     * gap-advances over the dead range. */
   private[engine] def rollbackProduceIntentLocked(name: String, id: String): Unit = {
+    readStringResilient(intentPath(name, id)).foreach { json =>
+      val ranges = TxnRange.fromJValue(JsonMethods.parse(json) \ "ranges")
+      val wm = nextIds(name)
+      purgeUnregistered(name, ranges.map(_.partition).distinct)((p, lo) =>
+        lo >= wm.getOrElse(p, 0L) && ranges.exists(r =>
+          r.partition == p && lo >= r.first && lo < r.first + r.count))
+    }
     fs.delete(produceStagingDir(name, id), true): Unit
     fs.delete(intentLeasePath(name, id), false): Unit
     fs.delete(intentPath(name, id), false): Unit
@@ -4258,12 +4344,19 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     }
   }
 
-  /** Best-effort self-rollback for a producer's own failure path (no lock
-    * requirement: both deletes are idempotent, and a racing janitor
-    * rollback deletes the same two paths in the same order — ONE body,
-    * [[rollbackProduceIntentLocked]], owns that ordering proof). */
-  private[engine] def abandonProduceIntent(name: String, id: String): Unit =
-    rollbackProduceIntentLocked(name, id)
+  /** Self-rollback for a producer's own failure path, through the one
+    * rollback body ([[rollbackProduceIntentLocked]]) under the lock: its
+    * log purge must not race a successor that re-reserved the range. When
+    * the lock cannot be had within the brief patience, only the private
+    * staging goes; the record stays, and a janitor's rollback purges and
+    * removes it once the lease goes stale. */
+  private[engine] def abandonProduceIntent(name: String, id: String): Unit = {
+    val locked =
+      try { acquireProduceLock(name, briefLockWaitMs); true }
+      catch { case _: LockConflictException => false }
+    if (locked) try rollbackProduceIntentLocked(name, id) finally releaseProduceLock(name)
+    else deleteStaging(produceStagingDir(name, id))
+  }
 
   /** Write-phase lease heartbeat (daemon; cancel() before the commit). */
   private[engine] def startIntentHeartbeat(name: String, id: String): Thread = {
@@ -4367,13 +4460,12 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
             markIdGaps(name)
             purgeGapOrphans(name, gaps)
           }
-          Catalog.profTimed("commit.move")(
-            moveChunks(name, produceStagingDir(name, intentId), chunks))
-          // manifest delta carries ONLY the written partitions (O(written)
-          // directory listings); the id watermark write needs the full map
+          // manifest delta carries ONLY the written partitions; the id
+          // watermark write needs the full map
           val ends = counts.map { case (p, c) => p -> (firstIds(p) + c) }
-          Catalog.profTimed("commit.manifest")(
-            updateManifest(name, ends, excludeGap = gaps, produced = chunks))
+          commitChunks(name, produceStagingDir(name, intentId), chunks, dropStaging = false)(
+            Catalog.profTimed("commit.manifest")(
+              updateManifest(name, ends, excludeGap = gaps, produced = chunks)))
           Catalog.profTimed("commit.ids")(writeNextIds(name, wm ++ ends))
           fs.delete(intentPath(name, intentId), false): Unit
           fs.delete(intentLeasePath(name, intentId), false): Unit
@@ -4477,6 +4569,36 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
         case _ => () // readable outside the gap proof (or no-manifest): leave
       }
     }
+  }
+
+  /** Move a commit's reported `chunks` from `staging` into the log, then
+    * run `register`, the manifest delta that is the commit point (lock
+    * held). In between, the moved files are covered only by the caller's
+    * crash marker: the intent record, or the `held-*` staging dir of a
+    * lock-held produce, which goes here (`dropStaging`) once they are
+    * registered. A non-crash failure in between deletes the moved files
+    * again by their reported names before it propagates — unless the
+    * manifest's watermark shows the commit point landed first, which makes
+    * them committed data — so the marker may go; the `held-*` dir goes
+    * with them. If that cleanup fails too, the marker stays for the next
+    * entry's purge. */
+  private[engine] def commitChunks(name: String, staging: Path, chunks: Seq[ChunkReport],
+                                   dropStaging: Boolean)(register: => Unit): Unit = {
+    try {
+      Catalog.profTimed("commit.move")(moveChunks(name, staging, chunks))
+      Catalog.beforeRegister(staging)
+      register
+    } catch {
+      case t: Throwable =>
+        try {
+          val landed = readManifest(name).exists(m =>
+            chunks.forall(c => m.watermarks.getOrElse(c.partition, 0L) > c.last))
+          if (!landed) chunks.foreach(c => fs.delete(new Path(logPath(name), c.rel), false): Unit)
+          if (dropStaging) deleteStaging(staging)
+        } catch { case scala.util.control.NonFatal(e) => t.addSuppressed(e) }
+        throw t
+    }
+    if (dropStaging) deleteStaging(staging)
   }
 
   /** Rename a commit's reported chunk files from its staging dir into the
@@ -4928,6 +5050,16 @@ object Catalog {
     * and produces flip visible in ONE atomic state write
     * ([[Catalog.commitTxn]]). */
   private[engine] val TxnGateMarker = "_txn"
+
+  /** What a write-path entry's [[Catalog.reconcileProduceState]] leaves:
+    * the committed id watermark and the merge intents still live. */
+  private[engine] final case class Reconciled(watermark: Map[Int, Long],
+                                              liveMerges: Map[String, MergeIntent])
+
+  /** Test seam: called in the committing thread after a produce commit
+    * moved its chunks into the log, before their manifest entry, with the
+    * commit's staging dir. */
+  @volatile private[engine] var beforeRegister: Path => Unit = _ => ()
 
   /** Lock staleness horizon (produce AND compact locks): a lock file whose
     * mtime is older than this is presumed a crashed owner's leftover and

@@ -208,7 +208,7 @@ object MergeCommit {
       // the held lock (see Catalog's concurrent-produce intent protocol)
       catalog.acquireProduceLockDraining(topic)
       try {
-        val survivors = catalog.reconcileProduceState(topic)
+        val survivors = catalog.reconcileProduceState(topic).liveMerges
         // serialize the conflict check (three gates, in order):
         //  1. no FOREIGN intent may survive the reconcile — a LIVE merge
         //     past its produce commit is an undetectable pending removal

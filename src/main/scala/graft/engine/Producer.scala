@@ -145,10 +145,10 @@ final class Producer(
       try {
         // decide any crashed transactional/idempotent/concurrent intent
         // before this produce can re-issue ids
-        catalog.reconcileProduceState(config.name): Unit
+        val wm = catalog.reconcileProduceState(config.name).watermark
         catalog.failIfCompacting(config.name)
-        catalog.purgeUncommitted(config.name)
-        if (counts.isEmpty) None else Some(catalog.reserveProduce(config.name, counts))
+        catalog.purgeAtEntryLocked(config.name, wm)
+        if (counts.isEmpty) None else Some(catalog.reserveProduce(config.name, counts, wm))
       } finally catalog.releaseProduceLock(config.name)
     }
     reserved match {
@@ -451,12 +451,13 @@ final class Producer(
     // refuse to append while a live compaction holds the topic — a produce
     // racing the swap window would land in the moved-aside log (data loss)
     catalog.failIfCompacting(config.name)
-    // crash hygiene: a previous produce that died between its parquet write
-    // and its id commit left files above the watermark — delete them before
-    // this produce re-assigns those ids (see Catalog.purgeUncommitted)
-    catalog.purgeUncommitted(config.name)
-    val (staged, counts) = stageAndCount(df)
     val base = catalog.nextIds(config.name)
+    // crash hygiene: a lock-held produce that died between its chunk moves
+    // and its manifest entry left its `held-*` dir beside files above the
+    // watermark — delete them before this produce re-assigns those ids
+    // (see Catalog.purgeAtEntryLocked)
+    catalog.purgeAtEntryLocked(config.name, base)
+    val (staged, counts) = stageAndCount(df)
     val firstIds: Map[Int, Long] =
       counts.map { case (p, _) => p -> base.getOrElse(p, 0L) }
     val ranges: ProduceResult = counts.map { case (p, c) => p -> (firstIds(p), c) }
@@ -471,30 +472,33 @@ final class Producer(
       // reach the log (vacuum's staging reaper cannot take this dir while
       // it is live — vacuum refuses under a held produce lock)
       val staging = catalog.heldStagingDir(config.name)
-      try {
-        val chunks = writeEvents(staged, firstIds, counts, staging)
+      val chunks =
+        try {
+          val written = writeEvents(staged, firstIds, counts, staging)
+          // The write job above may have run for minutes — re-check the
+          // compact lock before committing, so a compaction that started
+          // mid-produce fails this commit loudly instead of advancing
+          // watermarks under a swapped log.
+          catalog.failIfCompacting(config.name)
+          written
+        } catch { case t: Throwable => catalog.deleteStaging(staging); throw t }
 
-        // The write job above may have run for minutes — re-check the
-        // compact lock before committing, so a compaction that started
-        // mid-produce fails this commit loudly instead of advancing
-        // watermarks under a swapped log.
-        catalog.failIfCompacting(config.name)
-        catalog.moveChunks(config.name, staging, chunks)
-
-        // Manifest BEFORE the id-watermark commit: register this produce's
-        // new chunk files with their reported ranges, so trigger planning
-        // is O(new files), never a full directory re-list. The manifest
-        // write is the COMMIT POINT: a crash between the two writes leaves
-        // the manifest watermark ahead of _ids.json, and the next
-        // write-path entry heals the id watermark forward to it
-        // (reconcileProduceState) so the committed ids are never re-issued.
-        // A crash between the moves and the manifest leaves files above the
-        // watermark, which purgeUncommitted deletes at the next produce.
-        val advanced = base ++ counts.map { case (p, c) => p -> (firstIds(p) + c) }
+      // Manifest BEFORE the id-watermark commit: register this produce's
+      // new chunk files with their reported ranges, so trigger planning
+      // is O(new files), never a full directory re-list. The manifest
+      // write is the COMMIT POINT: a crash between the two writes leaves
+      // the manifest watermark ahead of _ids.json, and the next
+      // write-path entry heals the id watermark forward to it
+      // (reconcileProduceState) so the committed ids are never re-issued.
+      // The staging dir is the crash marker of the moved chunks and goes
+      // only once they are registered (or deleted again): a crash between
+      // the moves and the manifest leaves it beside files above the
+      // watermark, and the next locked entry that finds it deletes them.
+      val advanced = base ++ counts.map { case (p, c) => p -> (firstIds(p) + c) }
+      catalog.commitChunks(config.name, staging, chunks, dropStaging = true)(
         catalog.updateManifest(config.name,
-          counts.map { case (p, _) => p -> advanced(p) }, produced = chunks)
-        catalog.writeNextIds(config.name, advanced)
-      } finally catalog.deleteStaging(staging)
+          counts.map { case (p, _) => p -> advanced(p) }, produced = chunks))
+      catalog.writeNextIds(config.name, advanced)
     }
     // (the checkpointed blocks are released by the ContextCleaner once this
     // frame goes out of scope — no explicit unpersist hook exists for

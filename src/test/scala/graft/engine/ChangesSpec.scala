@@ -169,8 +169,10 @@ class ChangesSpec extends SparkSpec {
   test("a vectored delete's commit never adopts a crashed produce's orphans") {
     import spark.implicits._
     val (d, topic) = mkTopic() // 100 rows, 2 partitions, watermark 50 each
-    // fabricate a crashed produce: a chunk file with ids AT the watermark,
-    // unknown to the manifest (the state purgeUncommitted exists for)
+    // fabricate a crashed lock-held produce: a chunk file with ids AT the
+    // watermark, unknown to the manifest, beside the `held-*` staging dir
+    // such a produce keeps until its moved chunks are registered (its
+    // crash marker — the state purgeUncommitted exists for)
     val tmp = java.nio.file.Files.createTempDirectory("orphan").toString
     (50L until 60L).map(i => (i, s"""{"k":${9000 + i}}""", Array[Byte](1)))
       .toDF("event_id", "metadata", "data")
@@ -185,6 +187,7 @@ class ChangesSpec extends SparkSpec {
       d.catalog.logPath("t") + "/partition=0", "orphan-" + part.getName)
     fs.mkdirs(orphan.getParent)
     fs.rename(part, orphan): Unit
+    fs.mkdirs(d.catalog.heldStagingDir("t")): Unit
 
     // the delete commits a version; the orphan must stay UNKNOWN to the
     // manifest (adopting it would shield it from the purge and let the

@@ -89,6 +89,67 @@ class ManifestCacheSpec extends SparkSpec {
     assert(d.catalog.readManifest("t").get.watermarks.values.sum == 40 * 20)
   }
 
+  test("a produce makes as many FS calls into partitions of 1,000 chunk files as into partitions of 1, on both paths") {
+    /** FS calls of a concurrent and of a lock-held produce into a topic
+      * whose partitions hold `files` chunk files each. */
+    def opsInto(files: Int): (Long, Long) = {
+      val (d, _) = newTopic()
+      val topic = d.openTopic("t")
+      import spark.implicits._
+      // one-event chunks; this first produce through the catalog also
+      // spends its once-per-topic purge
+      topic.producer(chunkMaxRecords = 1).produce((0 until 2 * files)
+        .map(i => (s"""{"i":$i}""", i % 2)).toDF("metadata", "partition")): Unit
+      assert(d.catalog.readManifest("t").get.files.values.map(_.size).toSet == Set(files))
+      val concurrent = opsOf(topic.producer().produce(batch(1)): Unit)
+      val held = opsOf(topic.idempotentProducer("p").produce(batch(2), 0L): Unit)
+      (concurrent, held)
+    }
+    val one = opsInto(1)
+    val many = opsInto(1000)
+    assert(one == many, s"FS calls (concurrent, lock-held): 1 file $one, 1,000 files $many")
+  }
+
+  test("a lost or lagging manifest heals at the next produce commit") {
+    val (d, wh) = newTopic()
+    val topic = d.openTopic("t")
+    val producer = topic.producer()
+    val fs = new Path(wh).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val manifestDir = new Path(d.catalog.topicPath("t"), "_manifest")
+    def onDisk: Set[String] = fs.listStatus(new Path(d.catalog.logPath("t"))).toSeq
+      .flatMap(dir => fs.listStatus(dir.getPath).toSeq)
+      .map(f => s"${f.getPath.getParent.getName}/${f.getPath.getName}").toSet
+    def assertExact(events: Long): Unit = {
+      val m = d.catalog.readManifest("t").get
+      assert(m.files.values.flatten.map(_.path).toSet == onDisk, "every chunk file registered")
+      assert(m.watermarks.values.sum == events)
+      val ids = topic.events().groupBy(col("partition"))
+        .agg(count(lit(1)), countDistinct(col("event_id")), max(col("event_id"))).collect()
+      assert(ids.map(_.getLong(1)).sum == events)
+      ids.foreach(r => assert(r.getLong(1) == r.getLong(2) && r.getLong(3) == r.getLong(1) - 1))
+    }
+    (0 until 3).foreach(k => producer.produce(batch(k)): Unit)
+    // lost: the next commit lists the partitions and adopts every file
+    assert(fs.delete(manifestDir, true))
+    producer.produce(batch(3)): Unit
+    assertExact(80)
+    // lagging: the manifest log rewound to an older entry set while
+    // `_ids.json` kept advancing
+    val saved = fs.listStatus(manifestDir).map(st => st.getPath -> {
+      val in = fs.open(st.getPath)
+      try in.readAllBytes() finally in.close()
+    })
+    (4 until 6).foreach(k => producer.produce(batch(k)): Unit)
+    fs.listStatus(manifestDir).foreach(st => fs.delete(st.getPath, false))
+    saved.foreach { case (p, bytes) =>
+      val out = fs.create(p, true)
+      try out.write(bytes) finally out.close()
+    }
+    assert(d.catalog.readManifest("t").get.watermarks.values.sum == 80)
+    producer.produce(batch(6)): Unit
+    assertExact(140)
+  }
+
   test("after every commit, delta or snapshot roll, the cached manifest is what a fresh catalog reads") {
     val every = Catalog.ManifestSnapshotEvery
     Catalog.ManifestSnapshotEvery = 4

@@ -163,7 +163,7 @@ object IntentTestOps {
   def reserve(d: GraftDriver, topic: String,
               counts: Map[Int, Long]): (String, Map[Int, Long]) = {
     d.catalog.acquireProduceLock(topic)
-    try d.catalog.reserveProduce(topic, counts)
+    try d.catalog.reserveProduce(topic, counts, d.catalog.nextIds(topic))
     finally d.catalog.releaseProduceLock(topic)
   }
   def stagingDir(d: GraftDriver, topic: String, id: String): String =
@@ -244,7 +244,7 @@ class ObjectStorePostureSpec extends SparkSpec {
     cat.setConfOverride("spark.graft.produce.intentTimeoutMs", "2000")
     try {
       cat.acquireProduceLock("t")
-      val (id, first) = try cat.reserveProduce("t", Map(0 -> 3L))
+      val (id, first) = try cat.reserveProduce("t", Map(0 -> 3L), cat.nextIds("t"))
         finally cat.releaseProduceLock("t")
       val hb = cat.startIntentHeartbeat("t", id) // beats every 500ms here
       try {
@@ -282,7 +282,7 @@ class ObjectStorePostureSpec extends SparkSpec {
     cat.setConfOverride("spark.graft.produce.intentTimeoutMs", "300")
     try {
       cat.acquireProduceLock("t")
-      val (id, _) = try cat.reserveProduce("t", Map(0 -> 2L))
+      val (id, _) = try cat.reserveProduce("t", Map(0 -> 2L), cat.nextIds("t"))
         finally cat.releaseProduceLock("t")
       // one beat happened (lease marker written), then the producer died
       cat.touchProduceIntent("t", id)
@@ -305,7 +305,7 @@ class ObjectStorePostureSpec extends SparkSpec {
     val cat = d.catalog
     val fs = fsOf(wh)
     cat.acquireProduceLock("t")
-    val (id, _) = try cat.reserveProduce("t", Map(0 -> 2L))
+    val (id, _) = try cat.reserveProduce("t", Map(0 -> 2L), cat.nextIds("t"))
       finally cat.releaseProduceLock("t")
     cat.touchProduceIntent("t", id)
     cat.acquireProduceLock("t")
@@ -414,7 +414,7 @@ class ObjectStorePostureSpec extends SparkSpec {
     val cat = d.catalog
     val fs = fsOf(wh)
     cat.acquireProduceLock("t")
-    val (id, _) = try cat.reserveProduce("t", Map(0 -> 2L))
+    val (id, _) = try cat.reserveProduce("t", Map(0 -> 2L), cat.nextIds("t"))
       finally cat.releaseProduceLock("t")
     cat.acquireProduceLock("t")
     try cat.rollbackProduceIntentLocked("t", id)
@@ -426,7 +426,7 @@ class ObjectStorePostureSpec extends SparkSpec {
       "a lease without a record must never surface as an intent")
     // a later reservation on the same topic is unaffected
     cat.acquireProduceLock("t")
-    val (id2, _) = try cat.reserveProduce("t", Map(0 -> 1L))
+    val (id2, _) = try cat.reserveProduce("t", Map(0 -> 1L), cat.nextIds("t"))
       finally cat.releaseProduceLock("t")
     assert(cat.listProduceIntents("t").map(_._1) == Seq(id2))
     cat.acquireProduceLock("t")
@@ -633,7 +633,7 @@ class ObjectStorePostureSpec extends SparkSpec {
       // horizon, rolls the stale intent back, and proceeds.
       Seq(dA, dB).foreach { d =>
         d.catalog.acquireProduceLock("t")
-        try d.catalog.reserveProduce("t", Map(0 -> 2L)): Unit
+        try d.catalog.reserveProduce("t", Map(0 -> 2L), d.catalog.nextIds("t")): Unit
         finally d.catalog.releaseProduceLock("t")
       }
       intercept[LockConflictException](
@@ -690,7 +690,7 @@ class ObjectStorePostureSpec extends SparkSpec {
     cat.setConfOverride("spark.graft.heartbeat.forceWriteRefresh", "true")
     try {
       cat.acquireProduceLock("t")
-      val (id, _) = try cat.reserveProduce("t", Map(0 -> 2L))
+      val (id, _) = try cat.reserveProduce("t", Map(0 -> 2L), cat.nextIds("t"))
         finally cat.releaseProduceLock("t")
       assert(cat.touchProduceIntent("t", id))
       assert(fs.exists(cat.intentLeasePath("t", id)),
@@ -801,8 +801,10 @@ class ObjectStorePostureSpec extends SparkSpec {
     val garbage = new Path(cat.logPath("t") + "/partition=0/part-torn.parquet")
     val out = fs.create(garbage, true)
     try out.write("not a parquet file".getBytes("UTF-8")) finally out.close()
-    // a plain sequential produce — no gap decided anywhere
-    topic.producer().produce(
+    // a plain sequential produce — no gap decided anywhere — from a
+    // restarted driver, the one crash state that leaves debris without a
+    // marker beside it: its first produce on the topic purges
+    new GraftDriver(spark, wh).openTopic("t").producer().produce(
       (4 until 6).map(i => (s"""{"i":$i}""", 0)).toDF("metadata", "partition")): Unit
     assert(!fs.exists(garbage),
       "torn debris must be quarantined at the off-gap manifest update")
@@ -826,7 +828,7 @@ class ObjectStorePostureSpec extends SparkSpec {
     // A reserves [4,7) and dies; B reserves [7,9)
     def reserve(n: Long) = {
       cat.acquireProduceLock("t")
-      try cat.reserveProduce("t", Map(0 -> n)) finally cat.releaseProduceLock("t")
+      try cat.reserveProduce("t", Map(0 -> n), cat.nextIds("t")) finally cat.releaseProduceLock("t")
     }
     val (idA, _) = reserve(3)
     val (idB, firstB) = reserve(2)

@@ -60,7 +60,7 @@ class ProduceIntentPropertySpec extends SparkSpec {
           (0 to rnd.nextInt(2)).map(_ => rnd.nextInt(2)).distinct
             .map(p => p -> (1L + rnd.nextInt(4))).toMap
         cat.acquireProduceLock("t")
-        val (id, firstIds) = try cat.reserveProduce("t", counts)
+        val (id, firstIds) = try cat.reserveProduce("t", counts, cat.nextIds("t"))
           finally cat.releaseProduceLock("t")
         val ranges = counts.map { case (p, c) => p -> (firstIds(p), c) }
         // stage the data right away (phase 2)

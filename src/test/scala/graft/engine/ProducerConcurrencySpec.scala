@@ -46,7 +46,7 @@ class ProducerConcurrencySpec extends SparkSpec {
     val cat = d.catalog
     def reserve(n: Long): (String, Map[Int, Long]) = {
       cat.acquireProduceLock("t")
-      try cat.reserveProduce("t", Map(0 -> n))
+      try cat.reserveProduce("t", Map(0 -> n), cat.nextIds("t"))
       finally cat.releaseProduceLock("t")
     }
     val (idA, firstA) = reserve(5)
@@ -82,10 +82,10 @@ class ProducerConcurrencySpec extends SparkSpec {
     val (d, topic) = newTopic()
     val cat = d.catalog
     cat.acquireProduceLock("t")
-    val (idA, _) = try cat.reserveProduce("t", Map(0 -> 5L))
+    val (idA, _) = try cat.reserveProduce("t", Map(0 -> 5L), cat.nextIds("t"))
       finally cat.releaseProduceLock("t")
     cat.acquireProduceLock("t")
-    val (idB, firstB) = try cat.reserveProduce("t", Map(0 -> 4L))
+    val (idB, firstB) = try cat.reserveProduce("t", Map(0 -> 4L), cat.nextIds("t"))
       finally cat.releaseProduceLock("t")
     writeStaging(d, idB, 5L, 4, "b")
     // A dies: its intent lease goes stale (compressed horizon, scoped
@@ -115,7 +115,7 @@ class ProducerConcurrencySpec extends SparkSpec {
     val (d, topic) = newTopic()
     val cat = d.catalog
     cat.acquireProduceLock("t")
-    val (_, _) = try cat.reserveProduce("t", Map(0 -> 5L))
+    val (_, _) = try cat.reserveProduce("t", Map(0 -> 5L), cat.nextIds("t"))
       finally cat.releaseProduceLock("t")
     // a transactional statement cannot start while the intent is live
     cat.setConfOverride("spark.graft.produce.commitWaitMs", "300")
@@ -141,7 +141,7 @@ class ProducerConcurrencySpec extends SparkSpec {
     val (d, _) = newTopic()
     val cat = d.catalog
     cat.acquireProduceLock("t")
-    try cat.reserveProduce("t", Map(0 -> 5L)): Unit
+    try cat.reserveProduce("t", Map(0 -> 5L), cat.nextIds("t")): Unit
     finally cat.releaseProduceLock("t")
     val e1 = intercept[IllegalStateException](d.dropTopic("t"))
     assert(e1.getMessage.contains("concurrent produces are in flight"))
@@ -160,7 +160,7 @@ class ProducerConcurrencySpec extends SparkSpec {
     val (d, topic) = newTopic()
     val cat = d.catalog
     cat.acquireProduceLock("t")
-    val (idA, _) = try cat.reserveProduce("t", Map(0 -> 5L))
+    val (idA, _) = try cat.reserveProduce("t", Map(0 -> 5L), cat.nextIds("t"))
       finally cat.releaseProduceLock("t")
     writeStaging(d, idA, 0L, 5, "dead")
     // simulate the crash: renames done (files in the log), manifest not
@@ -177,7 +177,7 @@ class ProducerConcurrencySpec extends SparkSpec {
       }
     // successor commits over the now-stale predecessor
     cat.acquireProduceLock("t")
-    val (idB, firstB) = try cat.reserveProduce("t", Map(0 -> 4L))
+    val (idB, firstB) = try cat.reserveProduce("t", Map(0 -> 4L), cat.nextIds("t"))
       finally cat.releaseProduceLock("t")
     writeStaging(d, idB, 5L, 4, "live")
     cat.setConfOverride("spark.graft.produce.intentTimeoutMs", "1")
@@ -207,7 +207,7 @@ class ProducerConcurrencySpec extends SparkSpec {
     val (d, _) = newTopic()
     val cat = d.catalog
     cat.acquireProduceLock("t")
-    val (idA, firstA) = try cat.reserveProduce("t", Map(0 -> 5L))
+    val (idA, firstA) = try cat.reserveProduce("t", Map(0 -> 5L), cat.nextIds("t"))
       finally cat.releaseProduceLock("t")
     writeStaging(d, idA, 0L, 5, "z")
     val intentFile = new java.io.File(new org.apache.hadoop.fs.Path(
@@ -232,7 +232,7 @@ class ProducerConcurrencySpec extends SparkSpec {
     val (d, _) = newTopic()
     val cat = d.catalog
     cat.acquireProduceLock("t")
-    val (id, _) = try cat.reserveProduce("t", Map(0 -> 3L))
+    val (id, _) = try cat.reserveProduce("t", Map(0 -> 3L), cat.nextIds("t"))
       finally cat.releaseProduceLock("t")
     val f = new java.io.File(new org.apache.hadoop.fs.Path(
       cat.topicPath("t"), s"_intents/$id.json").toUri.getPath)
