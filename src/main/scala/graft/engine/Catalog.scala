@@ -857,17 +857,6 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     }
   }
 
-  /** Listed-but-not-in-manifest chunk files, with their partition's
-    * watermark — the vacuum chunk pass's candidate set (it applies the
-    * footer signature). Driver-sized
-    * manifests diff in memory; parquet-backed ones anti-join the relation,
-    * so only the (few) unknown paths are ever collected. */
-  private def unknownChunkFiles(name: String, m: TopicManifest,
-                                next: Map[Int, Long]): Seq[(Path, Long)] =
-    unlistedChunkFiles(name, m, next.keys).map { case (p, rel) =>
-      (new Path(logPath(name), rel), next.getOrElse(p, 0L))
-    }
-
   /** Rebuild the manifest wholesale from the log (compaction replaced every
     * file; a fresh listing + footer pass is cheap relative to the rewrite).
     * Writes one fresh snapshot at a seq ABOVE everything prior — seqs are
@@ -2022,9 +2011,11 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     // 1. uncommitted chunks — purgeUncommitted's signature, counted
     readManifest(name).foreach { m =>
       val conf = hadoopConf
-      unknownChunkFiles(name, m, nextIds(name)).foreach { case (f, watermark) =>
+      val wm = nextIds(name)
+      unlistedChunkFiles(name, m, wm.keys).foreach { case (p, rel) =>
+        val f = new Path(logPath(name), rel)
         val (lo, _) = Catalog.fileIdRange(f, conf)
-        if (lo != Long.MinValue && lo >= watermark) {
+        if (lo != Long.MinValue && lo >= wm.getOrElse(p, 0L)) {
           chunks += 1; drop(f, recursive = false)
         }
       }
@@ -3884,7 +3875,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     // manifest writer commits at the current watermark.
     val wm: Map[Int, Long] = healWatermarkLocked(name)
     // decide abandoned CONCURRENT-produce intents before anything judges
-    // against reservations (same entry-hygiene slot as purgeUncommitted)
+    // against reservations (before any entry purge reads the watermark)
     rollbackStaleIntentsLocked(name): Unit
     // ONE _txns listing feeds both passes below (every produce entry
     // pays this path)

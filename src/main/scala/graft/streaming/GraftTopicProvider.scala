@@ -178,9 +178,15 @@ final class GraftStreamSink(warehouse: String, topic: String, sinkId: String)
 
   override def name(): String = s"graft:$topic"
 
+  // one catalog for the query's lifetime (triggers run one at a time): its
+  // first produce into the topic runs the once-per-catalog crash purge,
+  // so later triggers commit without listing the log
+  private var driver: GraftDriver = _
+
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val spark = data.sparkSession
-    val handle = new GraftDriver(spark, warehouse).openTopic(topic)
+    if (driver == null) driver = new GraftDriver(spark, warehouse)
+    val handle = driver.openTopic(topic)
     // rewrap the micro-batch rows as a batch DataFrame: produce() runs its
     // own jobs, which the streaming-tagged plan would refuse
     val batch = org.apache.spark.sql.graftshim.Shims.asBatchDataFrame(spark, data)

@@ -16,10 +16,10 @@ import graft.SparkSpec
   * registered under the `countops:` scheme. A call made inside another one
   * (RawLocalFileSystem's listStatus stats every child) is not counted. */
 class CountingOpsFileSystem extends RawLocalFileSystem {
-  import CountingOpsFileSystem.counted
+  import CountingOpsFileSystem.{counted, listed}
   override def getUri: java.net.URI = java.net.URI.create("countops:///")
   override def open(f: Path, bufferSize: Int) = counted(super.open(f, bufferSize))
-  override def listStatus(f: Path): Array[FileStatus] = counted(super.listStatus(f))
+  override def listStatus(f: Path): Array[FileStatus] = counted(listed(super.listStatus(f)))
   override def getFileStatus(f: Path): FileStatus = counted(super.getFileStatus(f))
   override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
                       replication: Short, blockSize: Long, progress: Progressable) =
@@ -37,7 +37,13 @@ class CountingOpsFileSystem extends RawLocalFileSystem {
 
 object CountingOpsFileSystem {
   private val ops = new ConcurrentHashMap[Thread, AtomicLong]
+  private val entries = new ConcurrentHashMap[Thread, AtomicLong]
   private val inCall = ThreadLocal.withInitial[java.lang.Boolean](() => false)
+
+  def listed(statuses: Array[FileStatus]): Array[FileStatus] = {
+    entries.computeIfAbsent(Thread.currentThread, _ => new AtomicLong).addAndGet(statuses.length)
+    statuses
+  }
 
   def counted[T](body: => T): T =
     if (inCall.get) body
@@ -49,6 +55,9 @@ object CountingOpsFileSystem {
 
   /** Operations made so far by the calling thread. */
   def mine: Long = Option(ops.get(Thread.currentThread)).map(_.get).getOrElse(0L)
+
+  /** Directory entries the calling thread's listings have returned so far. */
+  def mineListed: Long = Option(entries.get(Thread.currentThread)).map(_.get).getOrElse(0L)
 }
 
 /** The writer's manifest cache: a commit leaves the manifest it wrote in
@@ -89,18 +98,23 @@ class ManifestCacheSpec extends SparkSpec {
     assert(d.catalog.readManifest("t").get.watermarks.values.sum == 40 * 20)
   }
 
+  /** A new topic whose two partitions hold `files` one-event chunk files
+    * each; the filling produce also spends its catalog's once-per-topic
+    * purge. */
+  private def topicOfChunks(files: Int): (GraftDriver, String) = {
+    val (d, wh) = newTopic()
+    import spark.implicits._
+    d.openTopic("t").producer(chunkMaxRecords = 1).produce((0 until 2 * files)
+      .map(i => (s"""{"i":$i}""", i % 2)).toDF("metadata", "partition")): Unit
+    assert(d.catalog.readManifest("t").get.files.values.map(_.size).toSet == Set(files))
+    (d, wh)
+  }
+
   test("a produce makes as many FS calls into partitions of 1,000 chunk files as into partitions of 1, on both paths") {
     /** FS calls of a concurrent and of a lock-held produce into a topic
       * whose partitions hold `files` chunk files each. */
     def opsInto(files: Int): (Long, Long) = {
-      val (d, _) = newTopic()
-      val topic = d.openTopic("t")
-      import spark.implicits._
-      // one-event chunks; this first produce through the catalog also
-      // spends its once-per-topic purge
-      topic.producer(chunkMaxRecords = 1).produce((0 until 2 * files)
-        .map(i => (s"""{"i":$i}""", i % 2)).toDF("metadata", "partition")): Unit
-      assert(d.catalog.readManifest("t").get.files.values.map(_.size).toSet == Set(files))
+      val topic = topicOfChunks(files)._1.openTopic("t")
       val concurrent = opsOf(topic.producer().produce(batch(1)): Unit)
       val held = opsOf(topic.idempotentProducer("p").produce(batch(2), 0L): Unit)
       (concurrent, held)
@@ -108,6 +122,21 @@ class ManifestCacheSpec extends SparkSpec {
     val one = opsInto(1)
     val many = opsInto(1000)
     assert(one == many, s"FS calls (concurrent, lock-held): 1 file $one, 1,000 files $many")
+  }
+
+  test("the stream sink's triggers after its first list as many entries and make as many FS calls into partitions of 1,000 chunk files as into partitions of 1") {
+    /** (FS calls, listed entries) of each of three sink triggers. */
+    def triggersInto(files: Int): Seq[(Long, Long)] = {
+      val sink = new graft.streaming.GraftStreamSink(topicOfChunks(files)._2, "t", "sink")
+      (0 until 3).map { k =>
+        val listedBefore = CountingOpsFileSystem.mineListed
+        val ops = opsOf(sink.addBatch(k.toLong, batch(k)))
+        (ops, CountingOpsFileSystem.mineListed - listedBefore)
+      }
+    }
+    val one = triggersInto(1)
+    val many = triggersInto(1000)
+    assert(one.tail == many.tail, s"(FS calls, listed entries) per trigger: 1 file $one, 1,000 files $many")
   }
 
   test("a lost or lagging manifest heals at the next produce commit") {
