@@ -18,10 +18,14 @@ import org.json4s.jackson.JsonMethods
  * <warehouse>/<topic>/
  *   _topic.json            TopicConfig (validator/selector/serializer triple,
  *                          partition count, completed flag)
- *   _ids.json              per-partition next EventID (producer commit state)
+ *   _manifest/             the manifest log: every commit's chunk files and
+ *                          per-partition next EventID (see [[readManifest]])
  *   _cursors/<name>.json   per-consumer-name cursor (acknowledge state)
  *   log/partition=<p>/     the event log, Parquet
  * }}}
+ *
+ * The manifest log is the one id watermark: [[nextIds]] reads its latest
+ * entry, and a produce commits by appending one.
  *
  * Small-file updates are atomic (write temp + rename). N producers ingest
  * one topic CONCURRENTLY — where the reference linearizes many clients via
@@ -37,7 +41,7 @@ import org.json4s.jackson.JsonMethods
  * idempotent produce, SQL MERGE) still hold the lock across their whole
  * span — they enter via [[acquireProduceLockDraining]], which waits out
  * live intents, and racing writers beyond that fail loudly instead of
- * corrupting the `_ids.json` watermark.
+ * re-issuing ids.
  */
 final class Catalog(spark: SparkSession, val warehouse: String) {
 
@@ -110,10 +114,9 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     Serializer.fromDescriptor(config.serializer)
     if (topicExists(name))
       throw new IllegalStateException("Topic already exists")
-    FileCreate.mkdirs(fs, topicPath(name))
+    // an empty manifest log: nothing committed yet (a missing one is lost)
+    FileCreate.mkdirs(fs, manifestDir(name))
     writeTopicConfig(config)
-    writeAtomic(new Path(topicPath(name), "_ids.json"),
-      idsJson((0 until config.partitions).map(_ -> 0L).toMap))
   }
 
   /** C2 `openTopic` — "not found" on missing (`MofkaDriver.cpp:351-358`).
@@ -167,16 +170,13 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
 
   /** C5 `addPartition` — grows the partition count by one. */
   def addPartition(name: String): Int = {
-    // brief lock: the `_ids.json` read-modify-write below must not race a
-    // produce commit's watermark write (a lost update in either direction
-    // drops the new partition's zero entry or regresses a commit)
+    // brief lock: _topic.json is a read-modify-write (see markAsComplete);
+    // the new partition's watermark reads 0 until a produce writes it
     acquireProduceLock(name, briefLockWaitMs)
     try {
       val config = openTopic(name)
       val grown = config.copy(partitions = config.partitions + 1)
       writeTopicConfig(grown)
-      val ids = nextIds(name)
-      writeNextIds(name, ids + ((grown.partitions - 1) -> 0L))
       grown.partitions
     } finally releaseProduceLock(name)
   }
@@ -305,57 +305,55 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
 
   // -- producer commit state ------------------------------------------------
 
-  /** Next EventID per partition (dense id assignment base). If the watermark
-    * file is missing but a log exists, recover from the log itself — the
-    * restart-recovery scan of the reference
-    * (`DefaultPartitionManager.cpp:682-735`: rebuild counters from chunk
-    * indices; here the Parquet footers are the index). */
-  def nextIds(name: String): Map[Int, Long] = {
-    val p = new Path(topicPath(name), "_ids.json")
-    readStringResilient(p) match {
-      case Some(json) => Catalog.idMapFromJson(json)
-      case None =>
-        // memoized per Catalog instance: a consumer-only deployment with a
-        // lost watermark file would otherwise re-run the full log aggregation
-        // on every call (the streaming source calls this per trigger). The
-        // cache is only consulted while the file stays missing; any producer
-        // commit writes the file and takes precedence.
-        recoveredCache.computeIfAbsent(name, recoverIds(_))
+  /** Next EventID per partition (dense id assignment base): the latest
+    * manifest-log entry's watermark, every configured partition a key (0
+    * where none was ever written). While a rewrite's swap has the manifest
+    * log moved aside, that copy answers. With no manifest log at all, the
+    * watermark is recovered from the log itself — the restart-recovery
+    * scan of the reference (`DefaultPartitionManager.cpp:682-735`: rebuild
+    * counters from chunk indices; here the Parquet footers are the index). */
+  def nextIds(name: String): Map[Int, Long] =
+    idsOf(name, Catalog.retryOnRollRace(readManifestOnce(name)))
+
+  /** [[nextIds]] from the manifest the caller just read. */
+  private def idsOf(name: String, manifest: Option[TopicManifest]): Map[Int, Long] = {
+    val committed = manifest.map(_.watermarks)
+      .orElse(asideWatermarks(name))
+      // the swap's rebuild landed between the two reads above
+      .orElse(Catalog.retryOnRollRace(readManifestOnce(name)).map(_.watermarks))
+    committed.foreach(_ => recoveredCache.remove(name))
+    val known =
+      try (0 until openTopic(name).partitions).map(_ -> 0L).toMap
+      catch { case _: NoSuchElementException => Map.empty[Int, Long] }
+    known ++ committed.getOrElse {
+      // an empty log is a topic nothing was committed to yet
+      if (fs.exists(manifestDir(name))) Map.empty[Int, Long]
+      // memoized while the manifest log stays absent: a consumer-only
+      // deployment would otherwise re-run the full log aggregation on
+      // every call (the streaming source calls this per trigger)
+      else recoveredCache.computeIfAbsent(name, recoverIds(_))
     }
   }
 
   private val recoveredCache =
     new java.util.concurrent.ConcurrentHashMap[String, Map[Int, Long]]()
 
-  def writeNextIds(name: String, ids: Map[Int, Long]): Unit =
-    writeAtomic(new Path(topicPath(name), "_ids.json"), idsJson(ids))
-
-  /** S10 recovery: rebuild per-partition next ids as `max(event_id)+1` from
-    * the log itself. Compute-only — persisting happens on the next producer
-    * commit. (The read path must never write: `nextIds` is called by
-    * concurrent readers — e.g. the streaming source on every trigger — and
-    * a reader racing `writeAtomic`'s delete→rename window would otherwise
-    * write back a mid-append stale watermark.) Partitions with no data yet
-    * map to 0 via the topic's partition count. */
-  def recoverIds(name: String): Map[Int, Long] = {
-    val known: Map[Int, Long] =
-      if (topicExists(name)) (0 until openTopic(name).partitions).map(_ -> 0L).toMap
-      else Map.empty
+  /** S10 recovery: `max(event_id)+1` per partition holding data. Compute-
+    * only — the next commit's manifest entry persists it (`nextIds` is a
+    * read path, called by concurrent readers). */
+  private def recoverIds(name: String): Map[Int, Long] =
     // hot ∪ cold: a partition whose files were ALL archived must still
     // recover its real watermark, or ids would be re-issued. Deletion
     // vectors deliberately NOT applied: the watermark is max(id)+1 over
     // everything ever committed — dropping a vector-deleted tail here
     // would regress it and re-issue ids (same caveat as purgeTopic's)
     fullLogDF(name) match {
-      case None => known
+      case None => Map.empty
       case Some(df) =>
         import org.apache.spark.sql.functions.{col, max}
-        val recovered = df
-          .groupBy(col("partition")).agg(max(col("event_id")).as("m"))
+        df.groupBy(col("partition")).agg(max(col("event_id")).as("m"))
           .collect().map(r => r.getInt(0) -> (r.getLong(1) + 1)).toMap
-        known ++ recovered
     }
-  }
 
   // -- chunk-file manifest (scale: O(new files) trigger planning) -----------
 
@@ -371,12 +369,9 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    * `watermarks(p)` is the next-EventID the file list is complete up to: a
    * reader may plan from the manifest iff `watermarks(p) >= until(p)`, and
    * must fall back to a directory listing otherwise (manifest lost). The
-   * file list itself is a [[ChunkFiles]] list. Written BEFORE the id
-   * watermark commit — the manifest write is the COMMIT POINT: a crash
-   * between the two leaves the manifest watermark ahead of `_ids.json`,
-   * and the next write-path entry heals the id watermark forward to it
-   * ([[reconcileProduceState]]), so the committed files stay visible and
-   * their ids are never re-issued.
+   * file list itself is a [[ChunkFiles]] list. The entry's write is a
+   * produce's COMMIT POINT: its files become visible and its ids issued
+   * ([[nextIds]]) in that one write.
    *
    * Metadata scale bound (snapshot + delta log, the Delta-Lake shape): each
    * produce commit APPENDS one `delta-<seq>.json` holding only that
@@ -397,12 +392,17 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    * falling back to the directory-listing path (None) rather than crashing
    * a streaming trigger.
    */
-  def readManifest(name: String): Option[TopicManifest] = readManifest(name, retry = true)
+  def readManifest(name: String): Option[TopicManifest] =
+    // a snapshot roll deleted an entry under our listing: the fresh scan
+    // sees the rolled snapshot; a second miss means real trouble — fall
+    // back to the listing path rather than crash the trigger
+    try Catalog.retryOnRollRace(readManifestOnce(name))
+    catch { case _: java.io.FileNotFoundException => None }
 
-  private def readManifest(name: String, retry: Boolean): Option[TopicManifest] = {
-    val (snaps, deltas) = scanManifestLogStatuses(name)
-    if (snaps.isEmpty && deltas.isEmpty) return None
-    try {
+  private def readManifestOnce(name: String): Option[TopicManifest] = {
+    val (snaps, deltas) = scanManifestLogStatuses(manifestDir(name))
+    if (snaps.isEmpty && deltas.isEmpty) None
+    else {
       val snapSeq = if (snaps.nonEmpty) snaps.last._1 else -1L
       // entry keys come free from the ONE listing: they validate the cache
       // against drop+recreate aliasing (same path, seqs restarted) — the
@@ -426,12 +426,6 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       manifestCache.put(name, Catalog.ManifestCacheEntry(snapSeq, lastSeq, assembled,
         keyBySeq.getOrElse(lastSeq, (-1L, -1L))))
       Some(assembled)
-    } catch {
-      case _: java.io.FileNotFoundException =>
-        // a snapshot roll deleted an entry under our listing: the fresh
-        // scan sees the rolled snapshot; a second miss means real trouble —
-        // fall back to the listing path rather than crash the trigger
-        if (retry) readManifest(name, retry = false) else None
     }
   }
 
@@ -452,7 +446,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * the per-trigger history read of a change-feed stream stays O(1)
     * catalog I/O. */
   def versionHistory(name: String): Vector[TopicVersion] = Catalog.retryOnRollRace {
-    val (snaps, deltas) = scanManifestLogStatuses(name)
+    val (snaps, deltas) = scanManifestLogStatuses(manifestDir(name))
     val entries = (snaps.map { case (s, p) => (s, p, "snapshot") } ++
       deltas.map { case (s, p) => (s, p, "delta") }).sortBy(_._1)
     var wm = Map.empty[Int, Long]
@@ -503,13 +497,27 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
 
   private def manifestDir(name: String): Path = new Path(topicPath(name), "_manifest")
 
+  /** Where a rewrite's swap keeps the manifest log ([[recoverSwapLocked]]). */
+  private def asideDir(name: String): Path = new Path(topicPath(name), "_manifest.compact.old")
+
+  /** The moved-aside manifest log's watermark, None when there is none. */
+  private def asideWatermarks(name: String): Option[Map[Int, Long]] = {
+    val (snaps, deltas) = scanManifestLog(asideDir(name))
+    val entries = snaps.lastOption.toSeq ++
+      deltas.filter(d => snaps.lastOption.forall(_._1 < d._1))
+    try entries.map(e => TopicManifest.fromJson(readString(e._2)).watermarks)
+      .reduceOption(_ ++ _)
+    // the swap finished and dropped it under our listing
+    catch { case _: java.io.FileNotFoundException => None }
+  }
+
   private def seqFileName(prefix: String, seq: Long): String = f"$prefix-$seq%020d.json"
 
-  /** (snapshots, deltas) in the manifest log, each (seq, path) seq-ascending.
-    * Missing dir → both empty. The listing is O(entries), bounded by
-    * ManifestSnapshotEvery + 1 via the snapshot-roll cleanup. */
-  private def scanManifestLog(name: String): (Vector[(Long, Path)], Vector[(Long, Path)]) = {
-    val (snaps, deltas) = scanManifestLogStatuses(name)
+  /** (snapshots, deltas) in the manifest log at `dir`, each (seq, path)
+    * seq-ascending. Missing dir → both empty. The listing is O(entries),
+    * bounded by ManifestSnapshotEvery + 1 via the snapshot-roll cleanup. */
+  private def scanManifestLog(dir: Path): (Vector[(Long, Path)], Vector[(Long, Path)]) = {
+    val (snaps, deltas) = scanManifestLogStatuses(dir)
     (snaps.map { case (s, st) => (s, st.getPath) },
       deltas.map { case (s, st) => (s, st.getPath) })
   }
@@ -517,11 +525,11 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   /** Same scan, keeping the listing's `FileStatus` — callers that need
     * entry mtimes/lengths (e.g. [[versionHistory]]'s immutable-entry
     * cache keys) get them from the ONE listing, no per-entry stat. */
-  private def scanManifestLogStatuses(name: String)
+  private def scanManifestLogStatuses(dir: Path)
       : (Vector[(Long, org.apache.hadoop.fs.FileStatus)],
          Vector[(Long, org.apache.hadoop.fs.FileStatus)]) = {
     val entries =
-      try fs.listStatus(manifestDir(name)).toVector.filter(_.isFile)
+      try fs.listStatus(dir).toVector.filter(_.isFile)
       catch { case _: java.io.FileNotFoundException => Vector.empty }
     def bySeq(prefix: String) = entries.flatMap { st =>
       val n = st.getPath.getName
@@ -546,7 +554,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * tail — O(deltas) driver memory. */
   private def commitManifestDelta(name: String, delta: TopicManifest,
                                   assembledPrior: TopicManifest): Unit = {
-    val (snaps, deltas) = scanManifestLog(name)
+    val (snaps, deltas) = scanManifestLog(manifestDir(name))
     val priorSeq = ((snaps ++ deltas).map(_._1) :+ 0L).max
     val seq = priorSeq + 1
     val snapSeq = if (snaps.nonEmpty) snaps.last._1 else -1L
@@ -662,7 +670,9 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   }
 
   /**
-   * Register a commit and advance the manifest watermark to `newNext`.
+   * Register a commit and advance the manifest watermark to `newNext`
+   * (onto a missing manifest log, also to the recovered one of every
+   * partition with data that `newNext` skips).
    *
    * A produce commit brings its own files' id ranges (`produced`, the
    * write tasks' reports), so none of its fresh chunks has its footer read.
@@ -680,7 +690,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    *
    * Every other commit diffs each partition of `newNext` against the
    * manifest's known files and registers the unknown ones: a produce over
-   * a decided-dead gap or onto a missing or lagging manifest, and every
+   * a decided-dead gap or onto a missing manifest, and every
    * non-produce caller (delete-vector version bumps). Any unknown file
    * that is not the produce's own gets its footer read once (on
    * [[Catalog.footerRanges]]' I/O pool) — the HEAL of partitions whose
@@ -702,6 +712,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
                      produced: Seq[ChunkReport] = Nil): Unit = {
     val priorOpt = readManifest(name)
     val prior = priorOpt.getOrElse(TopicManifest(Map.empty, Map.empty))
+    val next = if (priorOpt.isDefined) newNext
+      else nextIds(name).filter(_._2 > 0L) ++ newNext
     val reported: Map[String, Option[(Long, Long)]] =
       produced.map(c => c.rel -> Some((c.first, c.last))).toMap
     val firstIds: Map[Int, Long] =
@@ -712,7 +724,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     // plus the reported files themselves, so a listing that lags the moves
     // can never drop one
     val unknown: Seq[(Int, String)] =
-      ((if (complete) Nil else unlistedChunkFiles(name, prior, newNext.keys)) ++
+      ((if (complete) Nil else unlistedChunkFiles(name, prior, next.keys)) ++
         produced.map(c => c.partition -> c.rel)).distinct
     val unreported = unknown.map(_._2).filterNot(reported.contains)
     val idRanges: Map[String, Option[(Long, Long)]] = reported ++
@@ -760,16 +772,16 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
               }
               None
             case Some((lo, hi)) =>
-              if (lo != Long.MinValue && (lo >= newNext.getOrElse(p, 0L) ||
+              if (lo != Long.MinValue && (lo >= next.getOrElse(p, 0L) ||
                   excludeGap.get(p).exists { case (glo, ghi) =>
                     lo >= glo && lo < ghi })) None
               else Some(ManifestFile(rel, lo, hi))
           }
         }.toVector
       }.filter(_._2.nonEmpty).toMap
-    // the delta carries ONLY this produce's files + watermarks — the
+    // the delta carries ONLY this commit's files + watermarks — the
     // produce-path write is O(new files) regardless of live-file count
-    commitManifestDelta(name, TopicManifest(newNext, freshFiles, None, note), prior)
+    commitManifestDelta(name, TopicManifest(next, freshFiles, None, note), prior)
   }
 
   /**
@@ -867,8 +879,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * survives in the JSON or the cache.
     *
     * @param minSeq floor for the rebuilt snapshot's seq — callers that
-    *        deleted the manifest log before rebuilding (the compaction
-    *        swap) pass the pre-delete max so commit versions stay strictly
+    *        moved the manifest log aside before rebuilding (the compaction
+    *        swap) pass the aside's max so commit versions stay strictly
     *        increasing across the rewrite: a version number handed out
     *        before the compaction must fold away loudly, never silently
     *        alias the rebuilt snapshot ([[watermarkAsOf]]). */
@@ -892,7 +904,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
           case _ => None
         }
       }.toMap
-    val (snaps, deltas) = scanManifestLog(name)
+    val (snaps, deltas) = scanManifestLog(manifestDir(name))
     val seq = ((snaps ++ deltas).map(_._1) :+ minSeq).max + 1
     FileCreate.mkdirs(fs, manifestDir(name))
     writeSnapshot(name, seq, TopicManifest(next, files), Nil): Unit
@@ -1125,7 +1137,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    * Cross-process produce mutual exclusion: the reference serves many client
    * producers at once because a server-side write queue linearizes id
    * assignment; this engine's producer commit is a read-modify-write of
-   * `_ids.json`, so a SECOND producer process racing it would re-issue ids
+   * the manifest watermark, so a SECOND producer process racing it would re-issue ids
    * (duplicate (partition, event_id) rows — corruption, not an error). The
    * produce lock makes concurrent produce safe-by-rejection: one wins, the
    * other throws. Held for the duration of purge→write→commit; released in
@@ -1256,11 +1268,11 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    * data, event_id, partition). Unlike [[expireTopic]] this can leave GAPS
    * in the id sequence — that is the point of deletion; readers and
    * cursors tolerate gaps (consumption is `event_id >= cursor`, never
-   * rank-based). The produce watermark is untouched. CAVEAT: do not run
-   * while the id watermark file is lost — [[recoverIds]] rebuilds the
-   * watermark as max(id)+1 from the log, so purging the tail first would
-   * regress it and re-issue ids. Same lock/swap/manifest contract as
-   * [[compactTopic]].
+   * rank-based). The produce watermark is untouched. CAVEAT: while the
+   * manifest log is lost, [[nextIds]] recovers the watermark as max(id)+1
+   * from the log, so a tail this purge dropped would regress it and
+   * re-issue ids (the rewrite rebuilds a lost log before it drops
+   * anything). Same lock/swap/manifest contract as [[compactTopic]].
    */
   def purgeTopic(name: String, cond: org.apache.spark.sql.Column,
                  chunkMaxRecords: Long = 1000000L): Unit = {
@@ -1973,8 +1985,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    *     the committed watermark, so a committed file can never match);
    *  2. `log.compact.tmp` (always garbage) and `log.compact.old` once the
    *     live log exists (a crashed compactor's moved-aside copy — restored
-   *     first if it is the ONLY copy, mirroring `rewriteLocked`'s
-   *     recovery ordering);
+   *     first if it is the ONLY copy, and its moved-aside manifest log
+   *     replaced by a rebuilt one, by `rewriteLocked`'s recovery);
    *  3. `.*.tmp` leftovers of `writeAtomic`, only when older than
    *     [[Catalog.CompactLockStaleMs]] — cursor acknowledgements write
    *     outside the topic locks, so a FRESH tmp file may be an in-flight
@@ -1997,17 +2009,12 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
         catch { case _: java.io.FileNotFoundException => 0L })
       fs.delete(p, recursive): Unit
     }
-    // 0. crash recovery FIRST (same ordering rule as rewriteLocked): if a
-    // compactor died between its two renames, the moved-aside copy is the
-    // only copy — restore it before any listing or delete, so the chunk
-    // pass below scans the restored log
-    val log0 = new Path(logPath(name))
+    // 0. crash recovery FIRST (same ordering rule as rewriteLocked): a
+    // compactor that died inside its swap is finished before any listing
+    // or delete, so the chunk pass below scans the restored log and reads
+    // the rebuilt manifest
+    recoverSwapLocked(name)
     val old0 = new Path(topicPath(name), "log.compact.old")
-    if (fs.exists(old0) && !fs.exists(log0)) {
-      if (!fs.rename(old0, log0))
-        throw new java.io.IOException(
-          s"vacuum: cannot restore moved-aside log from crashed run: $old0")
-    }
     // 1. uncommitted chunks — purgeUncommitted's signature, counted
     readManifest(name).foreach { m =>
       val conf = hadoopConf
@@ -2318,18 +2325,14 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     val log = new Path(logPath(name))
     val tmp = new Path(topicPath(name), "log.compact.tmp")
     val old = new Path(topicPath(name), "log.compact.old")
-    // Crash recovery ordering: `old` is the ONLY copy of the data when a
-    // previous run died between its two renames (log missing). Restore it
-    // before any delete; only a leftover `old` alongside a live log (crash
-    // after the second rename) is safe garbage.
-    if (fs.exists(old) && !fs.exists(log)) {
-      if (!fs.rename(old, log))
-        throw new java.io.IOException(
-          s"compact: cannot restore moved-aside log from crashed run: $old")
-    }
+    // a previous run's crash first; then a leftover `old` alongside a live
+    // log (crash after the second rename) is safe garbage
+    recoverSwapLocked(name)
     fs.delete(tmp, true)
     fs.delete(old, true)
     if (!fs.exists(log)) return
+    // a lost manifest log is rebuilt before the rewrite can drop its tail
+    if (readManifest(name).isEmpty) rebuildManifest(name)
     val n = openTopic(name).partitions
     // FOLD deletion vectors: the rewrite's input is the vector-applied log,
     // so vectored rows are physically purged by any rewrite — then the now-
@@ -2344,16 +2347,11 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       .option("maxRecordsPerFile", chunkMaxRecords)
       .partitionBy("partition")
       .parquet(tmp.toString)
-    // drop the manifest BEFORE touching the log: a crash anywhere in the
-    // swap window then leaves no manifest (readers fall back to listing the
-    // restored log) rather than a manifest pointing at replaced files.
-    // Remember the log's max seq first — the rebuilt snapshot must advance
-    // past it so commit versions are never reused across the rewrite.
-    val priorSeq = {
-      val (s0, d0) = scanManifestLog(name)
-      ((s0 ++ d0).map(_._1) :+ 0L).max
-    }
-    fs.delete(manifestDir(name), true)
+    // manifest log aside BEFORE touching the log: a crash in the swap
+    // then leaves readers listing the live log, never planning replaced
+    // files, and the watermark readable from the aside
+    if (!fs.rename(manifestDir(name), asideDir(name)))
+      throw new java.io.IOException(s"compact: cannot move the manifest log aside")
     manifestCache.remove(name): Unit
     if (!fs.rename(log, old))
       throw new java.io.IOException(s"compact: cannot move live log aside: $log")
@@ -2362,11 +2360,31 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       throw new java.io.IOException(s"compact: cannot install compacted log: $tmp")
     }
     fs.delete(old, true): Unit
-    // every chunk file was replaced — re-derive the manifest from the
-    // compacted log so readers never plan against the dead files
-    rebuildManifest(name, minSeq = priorSeq)
+    // every chunk file was replaced: the manifest is rebuilt from them
+    recoverSwapLocked(name)
     // the rewrite's input had the vectors applied — they are folded now
     fs.delete(deletesDir(name), true): Unit
+  }
+
+  /** Finish a rewrite's swap (caller holds the compact lock, or the
+    * produce lock while no live compaction holds the topic). A missing
+    * log is restored first: the moved-aside copy is then the ONLY one. The
+    * moved-aside manifest log keeps the watermark ([[nextIds]]) until a
+    * manifest rebuilt from the live log (pre- or post-rewrite, both hold
+    * every committed id) lands past its seqs. Idempotent. */
+  private def recoverSwapLocked(name: String): Unit = {
+    val log = new Path(logPath(name))
+    val old = new Path(topicPath(name), "log.compact.old")
+    if (fs.exists(old) && !fs.exists(log) && !fs.rename(old, log))
+      throw new java.io.IOException(s"cannot restore the log a crashed rewrite moved aside: $old")
+    val aside = asideDir(name)
+    if (fs.exists(aside)) {
+      if (readManifest(name).isEmpty) {
+        val (snaps, deltas) = scanManifestLog(aside)
+        rebuildManifest(name, minSeq = ((snaps ++ deltas).map(_._1) :+ 0L).max)
+      }
+      fs.delete(aside, true): Unit
+    }
   }
 
   // -- consumer cursors (D4) ------------------------------------------------
@@ -2492,7 +2510,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     val merged = floors.foldLeft(cur) { case (acc, (p, id)) =>
       acc + (p -> math.max(acc.getOrElse(p, 0L), id + 1))
     }
-    writeAtomic(cursorPath(topic, consumer), idsJson(merged))
+    writeAtomic(cursorPath(topic, consumer), Catalog.idMapToJson(merged))
   }
 
   /**
@@ -2564,7 +2582,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
                  eventTime: org.apache.spark.sql.Column,
                  cutoff: org.apache.spark.sql.Column): Map[Int, Long] = {
     val target = timeFloor(topic, eventTime, cutoff)
-    writeAtomic(cursorPath(topic, consumer), idsJson(target))
+    writeAtomic(cursorPath(topic, consumer), Catalog.idMapToJson(target))
     target
   }
 
@@ -2958,8 +2976,6 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
           tier.map(_.files).getOrElse(Map.empty)))
       writeAtomic(tierPath(dst),
         TierState(topicPath(src).toString, files, ref, shared = true).toJson)
-      writeNextIds(dst, wm)
-      FileCreate.mkdirs(fs, manifestDir(dst))
       writeAtomic(new Path(manifestDir(dst), seqFileName("snap", 1L)),
         TopicManifest(wm, Map.empty).toJson)
       // deletion vectors: O(deleted) small parquet files — copy, don't share
@@ -3857,23 +3873,20 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    *    marker is discarded — BEFORE a later produce advances the watermark
    *    over those ids and would falsely promote it.
    *
-   * @return the healed committed watermark (a reserve takes it instead of
-   *         reading `_ids.json` again) and the merge intents that SURVIVE
+   * @return the committed watermark (a reserve takes it instead of
+   *         reading it again) and the merge intents that SURVIVE
    *         reconciliation (live merges mid-delete-phase) — most callers
    *         ignore it; MergeCommit's serialization gate reuses the listing
    */
   private[engine] def reconcileProduceState(name: String): Catalog.Reconciled = {
-    // WATERMARK HEAL — the produce commit's crash window (updateManifest
-    // landed, writeNextIds did not) leaves the manifest watermark ahead of
-    // `_ids.json`. The manifest write IS the commit point (its files are
-    // visible), so the manifest watermark is authoritative: heal the id
-    // watermark forward BEFORE any judgment below, or (a) the next produce
-    // re-issues the already-committed ids — duplicate (partition,
-    // event_id) rows, silent corruption — and (b) the truncation pass
-    // would phantom-truncate transaction ranges the manifest already
-    // committed. Manifest-ahead arises ONLY from that window: every other
-    // manifest writer commits at the current watermark.
-    val wm: Map[Int, Long] = healWatermarkLocked(name)
+    val wm: Map[Int, Long] = Catalog.retryOnRollRace(readManifestOnce(name)) match {
+      case None =>
+        // a crashed rewrite's swap is finished before a produce can land
+        // in a log it moved aside (a live one fails it at failIfCompacting)
+        if (lockIsLive(compactLockPath(name)).isEmpty) recoverSwapLocked(name)
+        nextIds(name)
+      case m => idsOf(name, m)
+    }
     // decide abandoned CONCURRENT-produce intents before anything judges
     // against reservations (before any entry purge reads the watermark)
     rollbackStaleIntentsLocked(name): Unit
@@ -3980,30 +3993,6 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    * wait for zero live intents, and their held lock blocks new
    * reservations for the statement's span.
    */
-  /** WATERMARK HEAL (caller holds the produce lock) — the produce commit's
-    * crash window (manifest delta landed, `_ids.json` write did not)
-    * leaves the manifest watermark ahead of the id watermark. The manifest
-    * write IS the commit point (its files are visible), so the manifest
-    * watermark is authoritative: heal `_ids.json` forward before any
-    * judgment, or the next produce would re-issue the already-committed
-    * ids (duplicate rows) and the truncation pass would phantom-truncate
-    * ranges the manifest already committed. Manifest-ahead arises ONLY
-    * from that window — every other manifest writer commits at the
-    * current watermark. Returns the healed (or unchanged) watermark. */
-  private[engine] def healWatermarkLocked(name: String): Map[Int, Long] = {
-    val ids = nextIds(name)
-    val mwm = readManifest(name).map(_.watermarks).getOrElse(Map.empty)
-    if (mwm.exists { case (p, v) => v > ids.getOrElse(p, 0L) }) {
-      val healed = ids ++ mwm.map { case (p, v) =>
-        p -> math.max(v, ids.getOrElse(p, 0L)) }
-      writeNextIds(name, healed)
-      Catalog.log.warn(s"topic '$name': id watermark healed forward to " +
-        "the manifest's (recovering a produce that crashed between its " +
-        "manifest and id-watermark writes)")
-      healed
-    } else ids
-  }
-
   private def intentsDir(name: String): Path = new Path(topicPath(name), "_intents")
   private def intentPath(name: String, id: String): Path =
     new Path(intentsDir(name), s"${validComponent("intent id", id)}.json")
@@ -4219,8 +4208,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   /** Reserve dense id ranges for a concurrent produce (caller holds the
     * produce lock): base = max(committed watermark `wm`, live intent ends)
     * per partition, so reservations stack above everything committed OR in
-    * flight. `wm` is the watermark the caller's reconcile healed, read
-    * once in this locked section. Returns (intentId, firstIds). */
+    * flight. `wm` is the committed watermark the caller's reconcile
+    * read, the one read of it in this locked section. Returns (intentId, firstIds). */
   private[engine] def reserveProduce(name: String, counts: Map[Int, Long],
                                      wm: Map[Int, Long]): (String, Map[Int, Long]) = {
     val ends: Map[Int, Long] = listProduceIntents(name)
@@ -4407,7 +4396,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
             "(lease idle past spark.graft.produce.intentTimeoutMs) — this " +
             "produce did not commit; retry it")
         failIfCompacting(name)
-        val wm = healWatermarkLocked(name)
+        val wm = nextIds(name)
         firstIds.foreach { case (p, f) =>
           if (wm.getOrElse(p, 0L) > f) throw new IllegalStateException(
             s"topic '$name': produce intent '$intentId' reservation on " +
@@ -4451,13 +4440,12 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
             markIdGaps(name)
             purgeGapOrphans(name, gaps)
           }
-          // manifest delta carries ONLY the written partitions; the id
-          // watermark write needs the full map
+          // the manifest delta, carrying the written partitions' new
+          // watermarks, is the commit point
           val ends = counts.map { case (p, c) => p -> (firstIds(p) + c) }
           commitChunks(name, produceStagingDir(name, intentId), chunks, dropStaging = false)(
             Catalog.profTimed("commit.manifest")(
               updateManifest(name, ends, excludeGap = gaps, produced = chunks)))
-          Catalog.profTimed("commit.ids")(writeNextIds(name, wm ++ ends))
           fs.delete(intentPath(name, intentId), false): Unit
           fs.delete(intentLeasePath(name, intentId), false): Unit
           fs.delete(produceStagingDir(name, intentId), true): Unit
@@ -4884,8 +4872,6 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
 
   // -- helpers --------------------------------------------------------------
 
-  private def idsJson(ids: Map[Int, Long]): String = Catalog.idMapToJson(ids)
-
   private def readString(p: Path): String = {
     val in = fs.open(p)
     val raw = try new String(
@@ -4951,7 +4937,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     // window — the tmp is the COMPLETE intended content (the destination
     // is only deleted after the tmp's close), so serve it: a crashed txn
     // abort stays invisible, a crashed cursor advance holds, a crashed
-    // id-watermark write counts. Completeness is proven STRUCTURALLY (the
+    // producer-state write counts. Completeness is proven STRUCTURALLY (the
     // trailer's length stamp, written before close): "destination missing
     // + tmp present" also describes a LIVE writer's first-ever write
     // mid-flight — and on mtime-at-create filesystems a half-written temp
@@ -4983,7 +4969,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * "destination missing + tmp present" proves the tmp holds the
     * intended content in full — and the resilient readers serve it (see
     * [[readStringResilient]]), so a crash in the window can never make a
-    * committed write (txn abort, cursor advance, id watermark) unread.
+    * committed write (txn abort, cursor advance, producer state) unread.
     * (A FileContext OVERWRITE rename would close the window outright but
     * measures ~4.6× slower per metadata write on checksummed local
     * filesystems — the produce path pays this several times per commit.) */
@@ -5326,8 +5312,8 @@ object Catalog {
   /** Create `p` as a lock file with cross-process arbitration matched to
     * the store's posture (VERDICT r16 top_next — pre-r17, two producers in
     * DIFFERENT processes racing one topic on an object store could both
-    * win `fs.create(p, overwrite=false)` and corrupt the `_ids.json`
-    * watermark, the exact failure the lock exists to prevent):
+    * win `fs.create(p, overwrite=false)` and issue the same ids twice,
+    * the exact failure the lock exists to prevent):
     *
     *  - `file:` — nio `CREATE_NEW` (O_EXCL): the kernel arbitrates, exact.
     *  - [[AtomicExclusiveCreateSchemes]] — `create(overwrite=false)`: the

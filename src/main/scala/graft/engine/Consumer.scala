@@ -132,11 +132,19 @@ final class Consumer(
 
   /**
    * Un-pulled events from the given per-partition floor as one DataFrame,
-   * with the DataSelector applied. Partition pruning (`partition IN ...`)
-   * and the id floor are pushdown-eligible filters.
+   * with the DataSelector applied, below the id watermark. Partition
+   * pruning (`partition IN ...`) and the id floor are pushdown-eligible
+   * filters.
    */
   def eventsFrom(floor: Map[Int, Long]): DataFrame = {
-    val base = log().filter(col("partition").isin(targetList: _*))
+    // committed rows only: read before the listing, the watermark caps it
+    // at a commit, and a chunk file above it (a crashed produce's debris,
+    // until vacuum reaps it) never shows. The map is built from literals,
+    // not typedLit, whose reflection costs ~1 ms a call
+    val next = catalog.nextIds(topic)
+    val cap = map(targetList.flatMap(p => Seq(lit(p), lit(next.getOrElse(p, 0L)))): _*)
+    val base = log().filter(col("partition").isin(targetList: _*) &&
+      col("event_id") < element_at(cap, col("partition")))
     val cursored =
       if (floor.isEmpty || floor.values.forall(_ == 0L)) base
       else base.filter(col("event_id") >=

@@ -18,8 +18,8 @@ import org.apache.hadoop.io.nativeio.NativeIO
  * directory) through `RawLocalFileSystem.setPermission`, and without
  * libhadoop (Spark's distribution ships none) each of those forks a
  * `chmod` process. A fork costs ~5 ms, while the data write costs a
- * fraction of one; a produce creates its intent, manifest delta,
- * id watermark and chunk files one after another on its critical path.
+ * fraction of one; a produce creates its intent, chunk files and
+ * manifest delta one after another on its critical path.
  *
  * So when the configured file system is a `LocalFileSystem` over Hadoop's
  * own `RawLocalFileSystem`, a create runs on a `LocalFileSystem` over a

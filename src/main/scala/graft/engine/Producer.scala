@@ -483,22 +483,17 @@ final class Producer(
           written
         } catch { case t: Throwable => catalog.deleteStaging(staging); throw t }
 
-      // Manifest BEFORE the id-watermark commit: register this produce's
-      // new chunk files with their reported ranges, so trigger planning
-      // is O(new files), never a full directory re-list. The manifest
-      // write is the COMMIT POINT: a crash between the two writes leaves
-      // the manifest watermark ahead of _ids.json, and the next
-      // write-path entry heals the id watermark forward to it
-      // (reconcileProduceState) so the committed ids are never re-issued.
+      // The manifest entry is the COMMIT POINT: it registers this
+      // produce's new chunk files with their reported ranges, so trigger
+      // planning is O(new files), never a full directory re-list, and
+      // advances the id watermark in the same write.
       // The staging dir is the crash marker of the moved chunks and goes
       // only once they are registered (or deleted again): a crash between
       // the moves and the manifest leaves it beside files above the
       // watermark, and the next locked entry that finds it deletes them.
-      val advanced = base ++ counts.map { case (p, c) => p -> (firstIds(p) + c) }
       catalog.commitChunks(config.name, staging, chunks, dropStaging = true)(
         catalog.updateManifest(config.name,
-          counts.map { case (p, _) => p -> advanced(p) }, produced = chunks))
-      catalog.writeNextIds(config.name, advanced)
+          counts.map { case (p, c) => p -> (firstIds(p) + c) }, produced = chunks))
     }
     // (the checkpointed blocks are released by the ContextCleaner once this
     // frame goes out of scope — no explicit unpersist hook exists for

@@ -569,16 +569,17 @@ object EnginePack extends QueryPack {
           col("n_valid"), col("n_keys"))
     },
     "q_recovery" -> { (s, dir) =>
-      // S10: delete the id-watermark file between two produces — next ids
-      // rebuild from the log itself, so ids stay dense across the loss.
+      // S10: delete the manifest log (the id watermark) between two
+      // produces — next ids rebuild from the log itself, so ids stay dense
+      // across the loss.
       val d = tempDriver(s)
       d.createTopic("rec_demo", partitions = 4)
       val topic = d.openTopic("rec_demo")
       val src = sourceByEid(s, dir)
       val eid = get_json_object(col("metadata"), "$.eid").cast("long")
       topic.producer().produce(src.filter(pmod(eid, lit(2)) === 0))
-      val ids = new org.apache.hadoop.fs.Path(d.catalog.topicPath("rec_demo"), "_ids.json")
-      ids.getFileSystem(s.sparkContext.hadoopConfiguration).delete(ids, false): Unit
+      val manifest = new org.apache.hadoop.fs.Path(d.catalog.topicPath("rec_demo"), "_manifest")
+      manifest.getFileSystem(s.sparkContext.hadoopConfiguration).delete(manifest, true): Unit
       topic.producer().produce(src.filter(pmod(eid, lit(2)) === 1))
       topic.events()
         .groupBy(col("partition"))
@@ -1366,7 +1367,7 @@ object EnginePack extends QueryPack {
       val swapTmp = new org.apache.hadoop.fs.Path(topicPath, "log.compact.tmp")
       fs.mkdirs(swapTmp)
       // (3) a stale atomic-write leftover, aged past the staleness horizon
-      val staleTmp = new org.apache.hadoop.fs.Path(topicPath, "._ids.json.tmp")
+      val staleTmp = new org.apache.hadoop.fs.Path(topicPath, "._topic.json.tmp")
       val out = fs.create(staleTmp, true)
       try out.write("{}".getBytes) finally out.close()
       fs.setTimes(staleTmp, System.currentTimeMillis() - 24L * 3600 * 1000, -1)
@@ -1472,7 +1473,7 @@ object EnginePack extends QueryPack {
       topic.refreshIndex("eid_idx", "$.eid")
       val topicPath = d.catalog.topicPath("maint_demo")
       val fs = topicPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val staleTmp = new org.apache.hadoop.fs.Path(topicPath, "._ids.json.tmp")
+      val staleTmp = new org.apache.hadoop.fs.Path(topicPath, "._topic.json.tmp")
       val out = fs.create(staleTmp, true)
       try out.write("{}".getBytes) finally out.close()
       fs.setTimes(staleTmp, System.currentTimeMillis() - 24L * 3600 * 1000, -1)

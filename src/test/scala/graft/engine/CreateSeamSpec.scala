@@ -121,11 +121,11 @@ class CreateSeamSpec extends SparkSpec {
       val chunks = m.files.values.flatten.map(f => new Path(f.path).getName).toSet
       assert(chunks.size == 4 * 2, chunks) // 100 events a partition, 60 a file
       // the produce lock (taken at reserve and again at commit), the
-      // intent, each chunk file in staging, then the manifest entry and
-      // the id watermark (the last three written to a temp, then renamed)
+      // intent, each chunk file in staging, then the manifest entry (the
+      // intent and the entry written to a temp, then renamed)
       assert(chunks == created.map(new Path(_).getName).filter(_.endsWith(".parquet")).toSet)
       assert(created.count(_.endsWith("/_produce.lock")) == 2, created)
-      assert(created.size == chunks.size + 5, created)
+      assert(created.size == chunks.size + 4, created)
     }
   }
 

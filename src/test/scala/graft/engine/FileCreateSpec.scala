@@ -113,7 +113,7 @@ class FileCreateSpec extends SparkSpec {
   test("overwriting a path with a stale sidecar leaves a readable file") {
     val fs = localFs(withUmask(hc, "022"))
     val dir = tempDir()
-    val p = new Path(dir, "_ids.json")
+    val p = new Path(dir, "_topic.json")
     val long = randomBytes(3000, seed = 12)
     val out = fs.create(p, true)
     try out.write(long) finally out.close()

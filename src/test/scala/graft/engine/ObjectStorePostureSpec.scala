@@ -469,7 +469,7 @@ class ObjectStorePostureSpec extends SparkSpec {
   test("check-then-put store: at most one of two racing cross-process lock contenders proceeds") {
     // VERDICT r16 top_next: fs.create(p, overwrite=false) is check-then-
     // put on object stores, so two producers in DIFFERENT processes could
-    // both win the create and corrupt the _ids.json watermark. The nonce
+    // both win the create and issue the same ids twice. The nonce
     // read-back must arbitrate: after both PUTs land (last-writer-wins),
     // exactly one contender reads its own nonce back. The same-JVM
     // registry is bypassed by driving the filesystem half directly — the

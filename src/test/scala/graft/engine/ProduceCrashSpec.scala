@@ -73,41 +73,48 @@ object CrashingFileSystem {
 }
 
 /**
- * Crash points of the produce protocol: a produce killed at each of its
- * file-system mutations in turn, on the concurrent path and on the
- * lock-held one, then recovered twice — by a fresh driver, and by a second
- * catalog that produced before the crash (its once-per-catalog purge is
- * spent, so the crash markers alone must lead it to the debris). After a
- * recovery produce: dense ids without duplicates through the manifest and
- * through a listing of the log, every acknowledged event present, the
- * crashed batch wholly visible or not at all (read_committed included),
- * and nothing left for vacuum but what it reaps.
+ * The harness of the crash-point specs: an operation killed at each of its
+ * file-system mutations in turn, then recovered twice — by a fresh driver
+ * over a copy of the tree, and by a second catalog that produced before
+ * the crash (its once-per-catalog purge is spent, so the crash markers
+ * alone must lead it to the debris). The topic has two partitions holding
+ * batch "a" (6 events, from the dying driver) and batch "s" (4 events,
+ * from the second catalog) when the operation starts.
  */
-class ProduceCrashSpec extends SparkSpec {
+abstract class CrashPointSpec extends SparkSpec {
   import spark.implicits._
 
-  private def hc = spark.sparkContext.hadoopConfiguration
+  protected def hc = spark.sparkContext.hadoopConfiguration
 
-  private val Victim = 6 // events in the crashing batch
-
-  private def batch(tag: String, n: Int): DataFrame =
+  protected def batch(tag: String, n: Int): DataFrame =
     (0 until n).map(i => (s"""{"$tag":$i}""", i % 2)).toDF("metadata", "partition")
 
-  /** The produce under test, run by the dying driver. */
-  private sealed abstract class ProducePath(val label: String) {
+  /** The operation under test, run by the dying driver. */
+  protected abstract class CrashCase(val label: String) {
     def prepare(d: GraftDriver): Unit = ()
     def run(d: GraftDriver): Unit
-    /** After the recovery produce: finish what the crashed call began. */
-    def finish(d: GraftDriver): Unit = ()
+    /** Recover through `d` and check what the crash left: `acked` says the
+      * operation returned, `before` is the watermark before it ran. */
+    def recoverAndCheck(d: GraftDriver, acked: Boolean, before: Map[Int, Long]): Unit
   }
-  private object Concurrent extends ProducePath("concurrent") {
-    def run(d: GraftDriver): Unit = d.openTopic("t").producer().produce(batch("v", Victim)): Unit
-  }
-  private object Held extends ProducePath("lock-held (transaction)") {
-    override def prepare(d: GraftDriver): Unit = d.openTopic("t").beginTransaction("x"): Unit
-    def run(d: GraftDriver): Unit =
-      d.openTopic("t").transaction("x").produce(batch("v", Victim)): Unit
-    override def finish(d: GraftDriver): Unit = d.openTopic("t").transaction("x").commit()
+
+  protected def rows(df: DataFrame): Seq[(Int, Long, String)] =
+    df.select("partition", "event_id", "metadata").collect().toSeq
+      .map { case Row(p: Int, id: Long, m: String) => (p, id, m) }
+
+  protected def tagged(rs: Seq[(Int, Long, String)], tag: String): Int =
+    rs.count(_._3.startsWith(s"""{"$tag":"""))
+
+  /** A read of the topic planned from its manifest. */
+  protected def planned(d: GraftDriver): Seq[(Int, Long, String)] =
+    rows(spark.read.format("graft").option("warehouse", d.warehouse).option("topic", "t").load())
+
+  /** The log's chunk files, as `partition=p/name`. */
+  protected def logFiles(d: GraftDriver): Set[String] = {
+    val fs = d.catalog.topicPath("t").getFileSystem(hc)
+    fs.listStatus(new Path(d.catalog.logPath("t"))).toSeq
+      .filter(_.isDirectory).flatMap(dir => fs.listStatus(dir.getPath).toSeq)
+      .map(f => s"${f.getPath.getParent.getName}/${f.getPath.getName}").toSet
   }
 
   private def driver(root: NioPath): GraftDriver = {
@@ -129,41 +136,43 @@ class ProduceCrashSpec extends SparkSpec {
 
   /** One crash at the victim's `k`-th mutation (never when `k` is beyond
     * its last), both recoveries checked. Returns the victim's mutations. */
-  private def crashAt(path: ProducePath, k: Long): Long = {
+  private def crashAt(c: CrashCase, k: Long): Long = {
     val root = Files.createTempDirectory("graft-crash")
     val d0 = driver(root)
     d0.createTopic("t", partitions = 2)
     d0.openTopic("t").producer().produce(batch("a", 6)): Unit
     val survivor = driver(root)
     survivor.openTopic("t").producer().produce(batch("s", 4)): Unit
-    path.prepare(d0)
+    c.prepare(d0)
+    val before = d0.catalog.nextIds("t")
 
     val acked = new AtomicReference[Option[Throwable]](None)
     val dying = new Thread(() =>
-      try { path.run(d0); acked.set(None) }
+      try { c.run(d0); acked.set(None) }
       catch { case t: Throwable => acked.set(Some(t)) })
     acked.set(Some(new IllegalStateException("not run")))
     CrashingFileSystem.arm(dying, k)
     dying.start()
     dying.join(120000)
     val made = CrashingFileSystem.disarm()
-    assert(!dying.isAlive, s"k=$k: the dying produce hangs")
+    assert(!dying.isAlive, s"k=$k: the dying operation hangs")
     val victimAcked = acked.get.isEmpty
-    if (made < k) assert(victimAcked, s"the produce failed without a crash: ${acked.get}")
+    if (made < k) assert(victimAcked, s"the operation failed without a crash: ${acked.get}")
 
     val copy = Files.createTempDirectory("graft-crash-copy")
     copyTree(root, copy)
     val prev = Catalog.CompactLockStaleMs
     val fresh = driver(copy)
     try {
-      // the dead process's lock file and intent age out at once
+      // the dead process's lock files and intent age out at once
       Catalog.CompactLockStaleMs = 0L
       Seq(survivor, fresh).foreach(_.catalog.setConfOverride(
         "spark.graft.produce.intentTimeoutMs", "1"))
       Thread.sleep(5)
       Seq("second catalog" -> survivor, "fresh driver" -> fresh).foreach { case (how, d) =>
-        recoverAndCheck(s"${path.label}, crash at mutation $k/$made, recovered by $how",
-          d, path, victimAcked)
+        withClue(s"${c.label}, crash at mutation $k/$made, recovered by $how: ") {
+          c.recoverAndCheck(d, victimAcked, before)
+        }
       }
     } finally {
       Catalog.CompactLockStaleMs = prev
@@ -175,25 +184,58 @@ class ProduceCrashSpec extends SparkSpec {
     made
   }
 
-  private def recoverAndCheck(clue: String, d: GraftDriver, path: ProducePath,
-                              victimAcked: Boolean): Unit = withClue(clue + ": ") {
+  /** `c` killed at each of its mutations in turn, each crash recovered
+    * twice. */
+  protected def crashEveryMutation(c: CrashCase): Unit = {
+    hc.set("fs.crashfs.impl", classOf[CrashingFileSystem].getName)
+    val mutations = crashAt(c, Long.MaxValue)
+    info(s"${c.label}: $mutations file-system mutations")
+    assert(mutations > 10, s"the operation made only $mutations mutations")
+    (1L to mutations).foreach(crashAt(c, _))
+  }
+}
+
+/**
+ * Crash points of the produce protocol, on the concurrent path and on the
+ * lock-held one. After a recovery produce: dense ids without duplicates
+ * through the manifest and through a listing of the log, every
+ * acknowledged event present, the crashed batch wholly visible or not at
+ * all (read_committed included), and nothing left for vacuum but what it
+ * reaps.
+ */
+class ProduceCrashSpec extends CrashPointSpec {
+
+  private val Victim = 6 // events in the crashing batch
+
+  private abstract class ProducePath(label: String) extends CrashCase(label) {
+    /** After the recovery produce: finish what the crashed call began. */
+    def finish(d: GraftDriver): Unit = ()
+    def recoverAndCheck(d: GraftDriver, acked: Boolean, before: Map[Int, Long]): Unit =
+      checkProduceRecovery(d, this, acked)
+  }
+  private object Concurrent extends ProducePath("concurrent") {
+    def run(d: GraftDriver): Unit = d.openTopic("t").producer().produce(batch("v", Victim)): Unit
+  }
+  private object Held extends ProducePath("lock-held (transaction)") {
+    override def prepare(d: GraftDriver): Unit = d.openTopic("t").beginTransaction("x"): Unit
+    def run(d: GraftDriver): Unit =
+      d.openTopic("t").transaction("x").produce(batch("v", Victim)): Unit
+    override def finish(d: GraftDriver): Unit = d.openTopic("t").transaction("x").commit()
+  }
+
+  private def checkProduceRecovery(d: GraftDriver, path: ProducePath,
+                                   victimAcked: Boolean): Unit = {
     val topic = d.openTopic("t")
     topic.producer().produce(batch("r", 4)): Unit
     path.finish(d)
 
-    def rows(df: DataFrame): Seq[(Int, Long, String)] =
-      df.select("partition", "event_id", "metadata").collect().toSeq
-        .map { case Row(p: Int, id: Long, m: String) => (p, id, m) }
-    def tagged(rs: Seq[(Int, Long, String)], tag: String): Int =
-      rs.count(_._3.startsWith(s"""{"$tag":"""))
     def dense(rs: Seq[(Int, Long, String)], how: String): Unit =
       rs.groupBy(_._1).foreach { case (p, xs) =>
         val ids = xs.map(_._2).sorted
         assert(ids == ids.indices.map(_.toLong), s"$how: partition $p ids $ids")
       }
 
-    val all = rows(spark.read.format("graft")
-      .option("warehouse", d.warehouse).option("topic", "t").load())
+    val all = planned(d)
     dense(all, "a read planned from the manifest")
     Seq("a" -> 6, "s" -> 4, "r" -> 4).foreach { case (tag, n) =>
       assert(tagged(all, tag) == n, s"acknowledged batch '$tag'")
@@ -210,11 +252,8 @@ class ProduceCrashSpec extends SparkSpec {
 
     d.catalog.vacuumTopic("t"): Unit
     val fs = d.catalog.topicPath("t").getFileSystem(hc)
-    val onDisk = fs.listStatus(new Path(d.catalog.logPath("t"))).toSeq
-      .filter(_.isDirectory).flatMap(dir => fs.listStatus(dir.getPath).toSeq)
-      .map(f => s"${f.getPath.getParent.getName}/${f.getPath.getName}").toSet
     val registered = d.catalog.readManifest("t").get.files.values.flatten.map(_.path).toSet
-    assert(onDisk == registered, "debris left in the log after vacuum")
+    assert(logFiles(d) == registered, "debris left in the log after vacuum")
     val staging = new Path(d.catalog.topicPath("t"), "log.staging")
     // (vacuum's own store-clock probe, dot-prefixed, is inert)
     assert(!fs.exists(staging) ||
@@ -226,11 +265,7 @@ class ProduceCrashSpec extends SparkSpec {
 
   Seq(Concurrent, Held).foreach { path =>
     test(s"a produce killed at any file-system mutation recovers exactly [${path.label}]") {
-      hc.set("fs.crashfs.impl", classOf[CrashingFileSystem].getName)
-      val mutations = crashAt(path, Long.MaxValue)
-      info(s"${path.label} produce: $mutations file-system mutations")
-      assert(mutations > 10, s"the produce made only $mutations mutations")
-      (1L to mutations).foreach(crashAt(path, _))
+      crashEveryMutation(path)
     }
   }
 }

@@ -101,7 +101,7 @@ class ProduceMarkersSpec extends SparkSpec {
     assert(chunks.forall(c => fs.exists(new Path(d.catalog.logPath("t"), c.rel))),
       "committed chunks deleted")
     assert(unregistered(d, fs).isEmpty && !fs.exists(staging))
-    // the next entry heals the id watermark forward to the manifest's
+    // the manifest entry advanced the watermark: the next produce follows it
     topic.producer().produce(batch("c", 2)): Unit
     assert(topic.events().count() == 10)
     assertDense(topic)
@@ -124,13 +124,16 @@ class ProduceMarkersSpec extends SparkSpec {
     topic.idempotentProducer("p").produce(batch("c", 4), 0L): Unit
     topic.deleteWhereVectored(col("metadata") === """{"a":0}"""): Unit // a listing commit
     assert(unregistered(d, fs) == Set("partition=0/" + debris.getName), "debris adopted")
-    // a read planned from the manifest never opens it; the listing-based
-    // `events()` sees the log directory as it is until vacuum runs
+    // a read planned from the manifest never opens it, and the listing-
+    // based `events()` stops at the watermark below it
     val planned = spark.read.format("graft")
       .option("warehouse", d.warehouse).option("topic", "t").load()
     assert(planned.filter(col("metadata").startsWith("""{"z":""")).count() == 0,
       "debris read through the manifest")
     assert(planned.count() == 13)
+    assert(topic.events().filter(col("metadata").startsWith("""{"z":""")).count() == 0,
+      "debris read through events()")
+    assert(topic.events().count() == 13)
 
     val report = topic.vacuum()
     assert(report.uncommittedChunks == 1)

@@ -313,14 +313,35 @@ class ProducerConsumerSpec extends SparkSpec {
     (0 until 20).foreach(i => producer.push(s"""{"i":$i}""", partition = Some(i % 2)))
     producer.flush()
     // simulate losing the commit watermark
-    val ids = new org.apache.hadoop.fs.Path(d.catalog.topicPath("mytopic"), "_ids.json")
-    ids.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(ids, false)
+    val manifest = new org.apache.hadoop.fs.Path(d.catalog.topicPath("mytopic"), "_manifest")
+    manifest.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(manifest, true)
     assert(d.catalog.nextIds("mytopic") == Map(0 -> 10L, 1 -> 10L))
     // ids stay dense across the recovery
     val p2 = topic.producer()
     val e = p2.push("""{"i":99}""", partition = Some(0))
     p2.flush()
     assert(e.eventId == 10L)
+  }
+
+  test("a produce onto a lost manifest log keeps the recovered watermark of the partitions it skips") {
+    import spark.implicits._
+    val (d, topic) = newTopic(partitions = 3)
+    topic.producer().produce((0 until 12)
+      .map(i => (s"""{"i":$i}""", i % 3)).toDF("metadata", "partition")): Unit
+    d.catalog.addPartition("mytopic") // never written: reads 0
+    val manifest = new org.apache.hadoop.fs.Path(d.catalog.topicPath("mytopic"), "_manifest")
+    assert(manifest.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(manifest, true))
+    d.openTopic("mytopic").producer()
+      .produce(Seq(("""{"i":99}""", 0)).toDF("metadata", "partition")): Unit
+
+    val fresh = new Catalog(spark, d.warehouse)
+    assert(fresh.nextIds("mytopic") == Map(0 -> 5L, 1 -> 4L, 2 -> 4L, 3 -> 0L))
+    // the entry re-anchored the skipped partitions, their files with them
+    val planned = spark.read.format("graft")
+      .option("warehouse", d.warehouse).option("topic", "mytopic").load()
+      .select("partition", "event_id").as[(Int, Long)].collect().sorted.toSeq
+    assert(planned == (0L until 5L).map(0 -> _) ++ (0L until 4L).map(1 -> _) ++
+      (0L until 4L).map(2 -> _))
   }
 
   test("chunk rotation: small chunkMaxRecords splits the log into bounded files") {
@@ -957,15 +978,10 @@ class ProducerConsumerSpec extends SparkSpec {
       val in = hfs.open(p)
       try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
     }
-    def snapshotState(): Map[String, Array[Byte]] = {
-      val ids = Map("_ids.json" ->
-        read(new org.apache.hadoop.fs.Path(topicPath, "_ids.json")))
-      val man =
-        if (!hfs.exists(manDir)) Map.empty[String, Array[Byte]]
-        else hfs.listStatus(manDir).filter(_.isFile)
-          .map(st => s"_manifest/${st.getPath.getName}" -> read(st.getPath)).toMap
-      ids ++ man
-    }
+    def snapshotState(): Map[String, Array[Byte]] =
+      if (!hfs.exists(manDir)) Map.empty[String, Array[Byte]]
+      else hfs.listStatus(manDir).filter(_.isFile)
+        .map(st => s"_manifest/${st.getPath.getName}" -> read(st.getPath)).toMap
     def restoreState(state: Map[String, Array[Byte]]): Unit = {
       if (hfs.exists(manDir))
         hfs.listStatus(manDir).filter(_.isFile)
@@ -1091,35 +1107,5 @@ class ProducerConsumerSpec extends SparkSpec {
     d.catalog.acknowledge("mytopic", "crashy", 0, 9L)
     assert(fs.exists(cur))
     assert(d.catalog.cursor("mytopic", "crashy") == Map(0 -> 10L))
-  }
-
-  test("crash between manifest and id-watermark commit never re-issues ids") {
-    // The produce commit's two metadata writes (manifest first, _ids.json
-    // second) have a crash window. The manifest write is the COMMIT POINT:
-    // its files are visible, so the next write-path entry must heal the id
-    // watermark FORWARD to the manifest's — a produce basing ids on the
-    // stale _ids.json would re-issue the committed ids (duplicate rows).
-    import spark.implicits._
-    val (d, topic) = newTopic()
-    topic.producer().produce(
-      (0 until 10).map(i => (s"""{"i":$i}""", 0)).toDF("metadata", "partition"))
-    val idsFile = new java.io.File(new org.apache.hadoop.fs.Path(
-      d.catalog.topicPath("mytopic"), "_ids.json").toUri.getPath)
-    val preSecond = java.nio.file.Files.readAllBytes(idsFile.toPath)
-    topic.producer().produce(
-      (10 until 20).map(i => (s"""{"i":$i}""", 0)).toDF("metadata", "partition"))
-    // simulate the crash: rewind _ids.json to its pre-produce content
-    // (manifest keeps the second produce's files + advanced watermark)
-    java.nio.file.Files.write(idsFile.toPath, preSecond): Unit
-    new java.io.File(idsFile.getParentFile, "._ids.json.crc").delete(): Unit
-    assert(d.catalog.nextIds("mytopic") == Map(0 -> 10L)) // window is live
-    // the next produce heals the watermark forward and appends AFTER the
-    // committed rows — no duplicate ids, nothing lost
-    topic.producer().produce(
-      (20 until 30).map(i => (s"""{"i":$i}""", 0)).toDF("metadata", "partition"))
-    val ev = topic.events()
-    assert(ev.count() == 30)
-    assert(ev.groupBy(col("event_id")).count().filter(col("count") > 1).count() == 0)
-    assert(d.catalog.nextIds("mytopic") == Map(0 -> 30L))
   }
 }

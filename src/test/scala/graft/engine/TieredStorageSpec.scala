@@ -87,9 +87,9 @@ class TieredStorageSpec extends SparkSpec {
     topic.producer().produce(batch("a", 20))
     val wm = d.catalog.nextIds("t")
     topic.archiveBefore(wm.values.max) // ALL files now cold
-    // lose the watermark file: recovery must see the cold rows or ids reuse
-    val ids = new org.apache.hadoop.fs.Path(d.catalog.topicPath("t"), "_ids.json")
-    ids.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(ids, false): Unit
+    // lose the manifest log: recovery must see the cold rows or ids reuse
+    val manifest = new org.apache.hadoop.fs.Path(d.catalog.topicPath("t"), "_manifest")
+    manifest.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(manifest, true): Unit
     assert(d.catalog.nextIds("t") == wm)
     topic.producer().produce(batch("b", 10))
     assert(topic.events().count() == 30)
