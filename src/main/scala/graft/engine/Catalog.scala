@@ -315,6 +315,16 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   def nextIds(name: String): Map[Int, Long] =
     idsOf(name, Catalog.retryOnRollRace(readManifestOnce(name)))
 
+  /** [[nextIds]], and from the same manifest read, whether a log file a
+    * [[fullLogDF]] read lists is one it registers (none while the log is
+    * lost or keeps its file list in a relation). */
+  private[engine] def nextIdsAndFiles(name: String): (Map[Int, Long], String => Boolean) = {
+    val m = Catalog.retryOnRollRace(readManifestOnce(name))
+    val known = m.filter(_.filesRef.isEmpty).toSet[TopicManifest]
+      .flatMap(_.files.valuesIterator.flatten.map(_.path))
+    (idsOf(name, m), f => known(s"${new Path(f).getParent.getName}/${new Path(f).getName}"))
+  }
+
   /** [[nextIds]] from the manifest the caller just read. */
   private def idsOf(name: String, manifest: Option[TopicManifest]): Map[Int, Long] = {
     val committed = manifest.map(_.watermarks)
@@ -1137,14 +1147,14 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    * Cross-process produce mutual exclusion: the reference serves many client
    * producers at once because a server-side write queue linearizes id
    * assignment; this engine's producer commit is a read-modify-write of
-   * the manifest watermark, so a SECOND producer process racing it would re-issue ids
-   * (duplicate (partition, event_id) rows — corruption, not an error). The
-   * produce lock makes concurrent produce safe-by-rejection: one wins, the
-   * other throws. Held for the duration of purge→write→commit; released in
-   * the producer's `finally`. A crashed producer's lock is reclaimed after
-   * [[Catalog.CompactLockStaleMs]] (its moved-but-unregistered chunk files
-   * are purged at the next entry that finds its crash marker — see
-   * [[updateManifest]]).
+   * the watermark, so a SECOND producer process racing it would re-issue
+   * ids (duplicate (partition, event_id) rows — corruption, not an error).
+   * The produce lock makes concurrent produce safe-by-rejection: one wins,
+   * the other throws. Held for the duration of purge→write→commit;
+   * released in the producer's `finally`. A crashed producer's lock is
+   * reclaimed after [[Catalog.CompactLockStaleMs]] (its moved-but-
+   * unregistered chunk files are purged at the next entry that finds its
+   * crash marker — see [[updateManifest]]).
    */
   private[engine] def acquireProduceLock(name: String): Unit =
     acquireProduceLock(name, 0L)
@@ -1980,8 +1990,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    * state references — the debris crashed operations leave behind:
    *
    *  1. uncommitted chunk files (a produce that died between its parquet
-   *     write and its id commit — same signature `purgeUncommitted` uses
-   *     at crash recovery: not in the manifest AND footer ids at/above
+   *     write and its manifest commit — same signature `purgeUncommitted`
+   *     uses at crash recovery: not in the manifest AND footer ids at/above
    *     the committed watermark, so a committed file can never match);
    *  2. `log.compact.tmp` (always garbage) and `log.compact.old` once the
    *     live log exists (a crashed compactor's moved-aside copy — restored
@@ -2742,9 +2752,9 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       failIfLiveClones(name, "archiveTopicBefore")
       require(!new Path(root).toString.startsWith(new Path(logPath(name)).toString),
         "coldRoot must not be inside the hot log directory")
-      // uncommitted orphans (a produce dead between manifest and id
-      // commit) must never reach the cold tier: purgeUncommitted is safe
-      // here because failIfCompacting excludes produces while we hold the
+      // uncommitted orphans (a produce dead before its manifest commit)
+      // must never reach the cold tier: purgeUncommitted is safe here
+      // because failIfCompacting excludes produces while we hold the
       // compact lock, and the per-partition watermark cap below keeps any
       // orphan that appears regardless out of the move set — an archived
       // orphan's ids would be re-issued into the hot log and the cold
@@ -3864,7 +3874,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    * reusable (see the crash contract in [[TxnRange]]'s file Scaladoc):
    *
    *  - open transactions: a recorded range reaching past the watermark
-   *    belongs to a produce that died before its id commit — those ids were
+   *    belongs to a produce that died before its commit — those ids were
    *    never issued, so the range is truncated to the watermark (empty
    *    ranges drop);
    *  - idempotent producers: a pending sequence whose ranges all sit below
@@ -4208,8 +4218,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   /** Reserve dense id ranges for a concurrent produce (caller holds the
     * produce lock): base = max(committed watermark `wm`, live intent ends)
     * per partition, so reservations stack above everything committed OR in
-    * flight. `wm` is the committed watermark the caller's reconcile
-    * read, the one read of it in this locked section. Returns (intentId, firstIds). */
+    * flight. `wm` is the committed watermark its reconcile read, the one
+    * read of it in this locked section. Returns (intentId, firstIds). */
   private[engine] def reserveProduce(name: String, counts: Map[Int, Long],
                                      wm: Map[Int, Long]): (String, Map[Int, Long]) = {
     val ends: Map[Int, Long] = listProduceIntents(name)
