@@ -19,7 +19,9 @@ import org.json4s.jackson.JsonMethods
  *   _topic.json            TopicConfig (validator/selector/serializer triple,
  *                          partition count, completed flag)
  *   _manifest/             the manifest log: every commit's chunk files and
- *                          per-partition next EventID (see [[readManifest]])
+ *                          per-partition next EventID (see [[readManifest]]);
+ *                          `.created` tells a new topic's empty log from a
+ *                          lost one
  *   _cursors/<name>.json   per-consumer-name cursor (acknowledge state)
  *   log/partition=<p>/     the event log, Parquet
  * }}}
@@ -114,8 +116,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     Serializer.fromDescriptor(config.serializer)
     if (topicExists(name))
       throw new IllegalStateException("Topic already exists")
-    // an empty manifest log: nothing committed yet (a missing one is lost)
-    FileCreate.mkdirs(fs, manifestDir(name))
+    // an empty manifest log, marked: nothing committed yet
+    FileCreate.touch(fs, createdMarker(name))
     writeTopicConfig(config)
   }
 
@@ -315,20 +317,14 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   def nextIds(name: String): Map[Int, Long] =
     idsOf(name, Catalog.retryOnRollRace(readManifestOnce(name)))
 
-  /** [[nextIds]], and from the same manifest read, whether a log file a
-    * [[fullLogDF]] read lists is one it registers (none while the log is
-    * lost or keeps its file list in a relation). */
-  private[engine] def nextIdsAndFiles(name: String): (Map[Int, Long], String => Boolean) = {
-    val m = Catalog.retryOnRollRace(readManifestOnce(name))
-    val known = m.filter(_.filesRef.isEmpty).toSet[TopicManifest]
-      .flatMap(_.files.valuesIterator.flatten.map(_.path))
-    (idsOf(name, m), f => known(s"${new Path(f).getParent.getName}/${new Path(f).getName}"))
-  }
-
   /** [[nextIds]] from the manifest the caller just read. */
   private def idsOf(name: String, manifest: Option[TopicManifest]): Map[Int, Long] = {
     val committed = manifest.map(_.watermarks)
-      .orElse(asideWatermarks(name))
+      .orElse {
+        try assembleManifestLog(asideDir(name), None).map(_.manifest.watermarks)
+        // the swap finished and dropped it under our listing
+        catch { case _: java.io.FileNotFoundException => None }
+      }
       // the swap's rebuild landed between the two reads above
       .orElse(Catalog.retryOnRollRace(readManifestOnce(name)).map(_.watermarks))
     committed.foreach(_ => recoveredCache.remove(name))
@@ -336,8 +332,11 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       try (0 until openTopic(name).partitions).map(_ -> 0L).toMap
       catch { case _: NoSuchElementException => Map.empty[Int, Long] }
     known ++ committed.getOrElse {
-      // an empty log is a topic nothing was committed to yet
-      if (fs.exists(manifestDir(name))) Map.empty[Int, Long]
+      // an entry-less log is a topic nothing was committed to yet only
+      // while it holds the marker createTopic made: a commit or rebuild
+      // onto a lost log that died before its first entry leaves an
+      // unmarked one
+      if (fs.exists(createdMarker(name))) Map.empty[Int, Long]
       // memoized while the manifest log stays absent: a consumer-only
       // deployment would otherwise re-run the full log aggregation on
       // every call (the streaming source calls this per trigger)
@@ -409,8 +408,18 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     try Catalog.retryOnRollRace(readManifestOnce(name))
     catch { case _: java.io.FileNotFoundException => None }
 
-  private def readManifestOnce(name: String): Option[TopicManifest] = {
-    val (snaps, deltas) = scanManifestLogStatuses(manifestDir(name))
+  private def readManifestOnce(name: String): Option[TopicManifest] =
+    assembleManifestLog(manifestDir(name), Option(manifestCache.get(name))).map { e =>
+      manifestCache.put(name, e)
+      e.manifest
+    }
+
+  /** The manifest log at `dir` (one snapshot plus the deltas after it),
+    * None when it has no entry; `cached` is reused while its last entry is
+    * still listed unchanged. */
+  private def assembleManifestLog(dir: Path, cached: Option[Catalog.ManifestCacheEntry])
+      : Option[Catalog.ManifestCacheEntry] = {
+    val (snaps, deltas) = scanManifestLogStatuses(dir)
     if (snaps.isEmpty && deltas.isEmpty) None
     else {
       val snapSeq = if (snaps.nonEmpty) snaps.last._1 else -1L
@@ -419,23 +428,21 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       // cached lastSeq entry must still exist with the same (mtime, len)
       val keyBySeq: Map[Long, (Long, Long)] = (snaps ++ deltas)
         .map { case (s, st) => s -> (st.getModificationTime, st.getLen) }.toMap
-      val cached = manifestCache.get(name)
       // steady-state trigger (no new commits): one listStatus, zero reads
-      val (base, baseSeq) =
-        if (cached != null && cached.snapSeq == snapSeq &&
-            keyBySeq.get(cached.lastSeq).contains(cached.lastKey))
-          (cached.manifest, cached.lastSeq)
-        else if (snaps.nonEmpty)
+      val (base, baseSeq) = cached match {
+        case Some(c) if c.snapSeq == snapSeq && keyBySeq.get(c.lastSeq).contains(c.lastKey) =>
+          (c.manifest, c.lastSeq)
+        case _ if snaps.nonEmpty =>
           (TopicManifest.fromJson(readString(snaps.last._2.getPath)), snapSeq)
-        else (TopicManifest(Map.empty, Map.empty), -1L)
+        case _ => (TopicManifest(Map.empty, Map.empty), -1L)
+      }
       val todo = deltas.filter(_._1 > math.max(baseSeq, snapSeq))
       val assembled = todo.foldLeft(base) { case (m, (_, st)) =>
         Catalog.applyManifestDelta(m, TopicManifest.fromJson(readString(st.getPath)))
       }
       val lastSeq = (Seq(baseSeq, snapSeq) ++ todo.map(_._1)).max
-      manifestCache.put(name, Catalog.ManifestCacheEntry(snapSeq, lastSeq, assembled,
+      Some(Catalog.ManifestCacheEntry(snapSeq, lastSeq, assembled,
         keyBySeq.getOrElse(lastSeq, (-1L, -1L))))
-      Some(assembled)
     }
   }
 
@@ -510,31 +517,17 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   /** Where a rewrite's swap keeps the manifest log ([[recoverSwapLocked]]). */
   private def asideDir(name: String): Path = new Path(topicPath(name), "_manifest.compact.old")
 
-  /** The moved-aside manifest log's watermark, None when there is none. */
-  private def asideWatermarks(name: String): Option[Map[Int, Long]] = {
-    val (snaps, deltas) = scanManifestLog(asideDir(name))
-    val entries = snaps.lastOption.toSeq ++
-      deltas.filter(d => snaps.lastOption.forall(_._1 < d._1))
-    try entries.map(e => TopicManifest.fromJson(readString(e._2)).watermarks)
-      .reduceOption(_ ++ _)
-    // the swap finished and dropped it under our listing
-    catch { case _: java.io.FileNotFoundException => None }
-  }
+  /** Made in the manifest log by [[createTopic]]: an entry-less log is a
+    * topic nothing was committed to yet only while it holds this. */
+  private def createdMarker(name: String): Path = new Path(manifestDir(name), ".created")
 
   private def seqFileName(prefix: String, seq: Long): String = f"$prefix-$seq%020d.json"
 
-  /** (snapshots, deltas) in the manifest log at `dir`, each (seq, path)
+  /** (snapshots, deltas) in the manifest log at `dir`, each (seq, status)
     * seq-ascending. Missing dir → both empty. The listing is O(entries),
-    * bounded by ManifestSnapshotEvery + 1 via the snapshot-roll cleanup. */
-  private def scanManifestLog(dir: Path): (Vector[(Long, Path)], Vector[(Long, Path)]) = {
-    val (snaps, deltas) = scanManifestLogStatuses(dir)
-    (snaps.map { case (s, st) => (s, st.getPath) },
-      deltas.map { case (s, st) => (s, st.getPath) })
-  }
-
-  /** Same scan, keeping the listing's `FileStatus` — callers that need
-    * entry mtimes/lengths (e.g. [[versionHistory]]'s immutable-entry
-    * cache keys) get them from the ONE listing, no per-entry stat. */
+    * bounded by ManifestSnapshotEvery + 1 via the snapshot-roll cleanup;
+    * entry mtimes/lengths (e.g. [[versionHistory]]'s immutable-entry cache
+    * keys) come from it, no per-entry stat. */
   private def scanManifestLogStatuses(dir: Path)
       : (Vector[(Long, org.apache.hadoop.fs.FileStatus)],
          Vector[(Long, org.apache.hadoop.fs.FileStatus)]) = {
@@ -564,7 +557,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * tail — O(deltas) driver memory. */
   private def commitManifestDelta(name: String, delta: TopicManifest,
                                   assembledPrior: TopicManifest): Unit = {
-    val (snaps, deltas) = scanManifestLog(manifestDir(name))
+    val (snaps, deltas) = scanManifestLogStatuses(manifestDir(name))
     val priorSeq = ((snaps ++ deltas).map(_._1) :+ 0L).max
     val seq = priorSeq + 1
     val snapSeq = if (snaps.nonEmpty) snaps.last._1 else -1L
@@ -579,7 +572,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
         manifestFilesRel(name, assembledPrior).toSeq)
       // folded in: the old snapshot, its deltas and any superseded parquet
       // relations go
-      (snaps ++ deltas).foreach { case (_, p) => fs.delete(p, false): Unit }
+      (snaps ++ deltas).foreach { case (_, st) => fs.delete(st.getPath, false): Unit }
       purgeOldManifestRelations(name, keepSeq = seq)
       (new Path(manifestDir(name), seqFileName("snap", seq)), seq,
         Some(TopicManifest.fromJson(json)))
@@ -853,14 +846,19 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * anti-join the relation in Spark, so only the (few) unknown names come
     * back to the driver — the listing itself is per-partition transient. */
   private def unlistedChunkFiles(name: String, m: TopicManifest,
-                                 partitions: Iterable[Int]): Seq[(Int, String)] = {
-    val listed: Seq[(Int, String)] = partitions.toSeq.sorted.flatMap { p =>
+                                 partitions: Iterable[Int]): Seq[(Int, String)] =
+    unregistered(name, m, partitions.toSeq.sorted.flatMap { p =>
       val dir = new Path(logPath(name), s"partition=$p")
       if (!fs.exists(dir)) Nil
       else fs.listStatus(dir)
         .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
         .map(f => p -> s"partition=$p/${f.getPath.getName}").toSeq
-    }
+    })
+
+  /** The entries of `listed` (partition, `partition=p/name`) that `m` does
+    * not register. */
+  private def unregistered(name: String, m: TopicManifest,
+                           listed: Seq[(Int, String)]): Seq[(Int, String)] =
     manifestFilesRel(name, m) match {
       case None =>
         val known = m.files.view.mapValues(_.map(_.path).toSet).toMap
@@ -877,7 +875,6 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
           .join(rel.select(col("path")), Seq("path"), "left_anti")
           .collect().map(r => (r.getAs[Int]("partition"), r.getAs[String]("path"))).toSeq
     }
-  }
 
   /** Rebuild the manifest wholesale from the log (compaction replaced every
     * file; a fresh listing + footer pass is cheap relative to the rewrite).
@@ -914,11 +911,11 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
           case _ => None
         }
       }.toMap
-    val (snaps, deltas) = scanManifestLog(manifestDir(name))
+    val (snaps, deltas) = scanManifestLogStatuses(manifestDir(name))
     val seq = ((snaps ++ deltas).map(_._1) :+ minSeq).max + 1
     FileCreate.mkdirs(fs, manifestDir(name))
     writeSnapshot(name, seq, TopicManifest(next, files), Nil): Unit
-    (snaps ++ deltas).foreach { case (_, p) => fs.delete(p, false): Unit }
+    (snaps ++ deltas).foreach { case (_, st) => fs.delete(st.getPath, false): Unit }
     purgeOldManifestRelations(name, keepSeq = seq)
     manifestCache.remove(name): Unit
   }
@@ -2376,8 +2373,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     fs.delete(deletesDir(name), true): Unit
   }
 
-  /** Finish a rewrite's swap (caller holds the compact lock, or the
-    * produce lock while no live compaction holds the topic). A missing
+  /** Finish a rewrite's swap (caller holds the compact lock). A missing
     * log is restored first: the moved-aside copy is then the ONLY one. The
     * moved-aside manifest log keeps the watermark ([[nextIds]]) until a
     * manifest rebuilt from the live log (pre- or post-rewrite, both hold
@@ -2390,7 +2386,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     val aside = asideDir(name)
     if (fs.exists(aside)) {
       if (readManifest(name).isEmpty) {
-        val (snaps, deltas) = scanManifestLog(aside)
+        val (snaps, deltas) = scanManifestLogStatuses(aside)
         rebuildManifest(name, minSeq = ((snaps ++ deltas).map(_._1) :+ 0L).max)
       }
       fs.delete(aside, true): Unit
@@ -2697,14 +2693,45 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * a tiered topic must never lose its cold rows in ANY of them. */
   private[engine] def fullLogDF(name: String): Option[org.apache.spark.sql.DataFrame] = {
     val log = new Path(logPath(name))
+    // read before the listing: a rewrite's swap landing while the listing
+    // runs must not leave out every file it saw
+    val committed = readManifest(name)
     val hot =
       if (fs.exists(log))
-        Some(spark.read.schema(Catalog.EventSchema).parquet(log.toString))
+        Some(registeredOnly(name, committed,
+          spark.read.schema(Catalog.EventSchema).parquet(log.toString)))
       else None
     (hot, coldEvents(name)) match {
       case (Some(h), Some(c)) => Some(h.unionByName(c))
       case (h, c) => h.orElse(c)
     }
+  }
+
+  /** `listing` (a read of the hot log) without the chunk files that
+    * neither `committed` nor a manifest read after the listing registers:
+    * a crashed produce's debris, above the watermark until vacuum reaps
+    * it. The second read keeps a file whose commit landed while the
+    * listing ran. With no manifest every listed file is kept. */
+  private def registeredOnly(name: String, committed: Option[TopicManifest],
+                             listing: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{
+      HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+    val listed = listing.queryExecution.analyzed.collect {
+      case LogicalRelation(HadoopFsRelation(i: PartitioningAwareFileIndex, _, _, _, _, _), _, _, _, _) =>
+        i.allFiles().map(_.getPath)
+    }.flatten
+    def rel(f: Path) = s"${f.getParent.getName}/${f.getName}"
+    val debris = committed.fold(Seq.empty[(Int, String)]) { m =>
+      val unknown = unregistered(name, m, listed.map(f =>
+        f.getParent.getName.stripPrefix("partition=").toIntOption.getOrElse(-1) -> rel(f)))
+      if (unknown.isEmpty) unknown else readManifest(name).fold(unknown)(unregistered(name, _, unknown))
+    }.map(_._2).toSet
+    val kept = listed.filterNot(f => debris(rel(f)))
+    if (debris.isEmpty) listing
+    else if (kept.isEmpty) listing.limit(0)
+    else spark.read.schema(Catalog.EventSchema).option("basePath", logPath(name))
+      .parquet(kept.map(_.toString): _*)
   }
 
   private[engine] def failIfTiered(name: String, op: String): Unit =
@@ -3890,11 +3917,22 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
    */
   private[engine] def reconcileProduceState(name: String): Catalog.Reconciled = {
     val wm: Map[Int, Long] = Catalog.retryOnRollRace(readManifestOnce(name)) match {
-      case None =>
-        // a crashed rewrite's swap is finished before a produce can land
-        // in a log it moved aside (a live one fails it at failIfCompacting)
-        if (lockIsLive(compactLockPath(name)).isEmpty) recoverSwapLocked(name)
+      case None if !fs.exists(createdMarker(name)) =>
+        // a crashed rewrite's swap is finished, and a lost manifest log
+        // rebuilt from the log, before this entry can move a file into it:
+        // a crash after that leaves debris the manifest tells apart from
+        // committed files, where a log scan would adopt it. Under the
+        // compact lock, so no live rewrite is mid-swap or mid-rebuild (one
+        // holding it fails this produce loudly)
+        acquireLock(compactLockPath(name), age =>
+          s"topic '$name': cannot produce while compaction is in progress " +
+          s"(lock ${compactLockPath(name)}, age ${age / 1000}s)")
+        try {
+          recoverSwapLocked(name)
+          if (readManifest(name).isEmpty) rebuildManifest(name)
+        } finally releaseCompactLock(name)
         nextIds(name)
+      case None => nextIds(name)
       case m => idsOf(name, m)
     }
     // decide abandoned CONCURRENT-produce intents before anything judges
@@ -4508,57 +4546,13 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * gap (lock held) — the debris of a commit that crashed between its
     * staged-file renames and its manifest write. Must run BEFORE the
     * gap-advance: afterwards the files sit below the watermark, outside
-    * every purge signature, VISIBLE to listing-based reads, and adoptable
-    * by a legacy manifest heal. The footer judgment alone is sufficient —
+    * every purge signature. The footer judgment alone is sufficient —
     * every committed row lies below the pre-commit watermark, so a file
     * whose ids start inside [watermark, reservation) cannot be committed
-    * data; the manifest (when present) merely narrows the candidates. */
-  private def purgeGapOrphans(name: String, gaps: Map[Int, (Long, Long)]): Unit = {
-    val conf = hadoopConf
-    val manifest = readManifest(name)
-    val manifestBacked = manifest.isDefined
-    val candidates: Seq[(Int, Path)] = manifest match {
-      case Some(m) =>
-        unlistedChunkFiles(name, m, gaps.keys)
-          .map { case (p, rel) => (p, new Path(logPath(name), rel)) }
-      case None =>
-        gaps.keys.toSeq.flatMap { p =>
-          val dir = new Path(logPath(name), s"partition=$p")
-          if (!fs.exists(dir)) Nil
-          else fs.listStatus(dir)
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            .map(f => p -> f.getPath).toSeq
-        }
-    }
-    candidates.foreach { case (p, f) =>
-      val (glo, ghi) = gaps(p)
-      Catalog.fileIdRangeOpt(f, conf) match {
-        case Some((lo, _)) if lo != Long.MinValue && lo >= glo && lo < ghi =>
-          fs.delete(f, false): Unit
-        // STRUCTURALLY corrupt footer (None — bad magic/truncated only;
-        // a readable stats-less file is Some(sentinel) and NOT debris,
-        // and transient store errors propagate and abort this commit
-        // loudly): with a manifest, a candidate is UNLISTED — normally
-        // provably uncommitted debris, but a heal-pending state
-        // (lost/rebuilt manifest) can also leave committed files
-        // unlisted, and a torn file cannot prove which it is. QUARANTINE
-        // it (dot-prefixed rename: invisible to listing-based reads,
-        // un-adoptable by any heal, outside every purge signature)
-        // instead of deleting — the conservative half of the ADVICE r15
-        // "delete or quarantine". Without a manifest the ambiguity is
-        // worse (candidates include committed files), so torn files are
-        // left alone there; adoption of torn files on gap partitions is
-        // suppressed in [[updateManifest]].
-        case None if manifestBacked =>
-          val q = new Path(f.getParent, s".${f.getName}.quarantined")
-          if (!fs.rename(f, q)) throw new java.io.IOException(
-            s"gap-advance: cannot quarantine torn debris $f")
-          Catalog.log.warn(s"topic '$name': quarantined torn chunk " +
-            s"$f found inside decided-dead gap [$glo,$ghi) on partition $p")
-        case _ => () // readable outside the gap proof (or no-manifest): leave
-      }
-    }
-  }
+    * data; the manifest (when present) merely narrows the candidates, and
+    * its torn ones are quarantined ([[purgeUnregistered]]). */
+  private def purgeGapOrphans(name: String, gaps: Map[Int, (Long, Long)]): Unit =
+    purgeUnregistered(name, gaps.keys)((p, lo) => lo >= gaps(p)._1 && lo < gaps(p)._2)
 
   /** Move a commit's reported `chunks` from `staging` into the log, then
     * run `register`, the manifest delta that is the commit point (lock

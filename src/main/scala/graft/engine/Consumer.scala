@@ -123,25 +123,14 @@ final class Consumer(
 
   /**
    * Un-pulled events from the given per-partition floor as one DataFrame,
-   * with the DataSelector applied, below the id watermark, over the log
-   * (hot ∪ cold, minus vector-deleted rows) as the catalog defines it.
-   * Partition pruning (`partition IN ...`) and the id floor are
-   * pushdown-eligible filters.
+   * with the DataSelector applied, over the committed log as the catalog
+   * defines it (hot ∪ cold, minus vector-deleted rows). Partition pruning
+   * (`partition IN ...`) and the id floor are pushdown-eligible filters.
    */
   def eventsFrom(floor: Map[Int, Long]): DataFrame = {
-    // committed rows only: the manifest is read before the listing, and a
-    // listed file it does not register (a crashed produce's debris until
-    // vacuum reaps it, or a commit landing mid-listing) caps each partition
-    // at its watermark. The map is built from literals, not typedLit, whose
-    // reflection costs ~1 ms a call
-    val (next, registered) = catalog.nextIdsAndFiles(topic)
-    val raw = catalog.fullLogDF(topic)
-    val targeted = raw.map(catalog.applyDeleteVectors(topic, _))
+    val base = catalog.fullLogDF(topic).map(catalog.applyDeleteVectors(topic, _))
       .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Catalog.EventSchema))
       .filter(col("partition").isin(targetList: _*))
-    val cap = map(targetList.flatMap(p => Seq(lit(p), lit(next.getOrElse(p, 0L)))): _*)
-    val base = if (raw.forall(_.inputFiles.forall(registered))) targeted
-      else targeted.filter(col("event_id") < element_at(cap, col("partition")))
     val cursored =
       if (floor.isEmpty || floor.values.forall(_ == 0L)) base
       else base.filter(col("event_id") >=

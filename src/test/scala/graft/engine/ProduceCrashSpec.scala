@@ -105,6 +105,12 @@ abstract class CrashPointSpec extends SparkSpec {
   protected def tagged(rs: Seq[(Int, Long, String)], tag: String): Int =
     rs.count(_._3.startsWith(s"""{"$tag":"""))
 
+  /** Lose the topic's manifest log, as in S10 recovery. */
+  protected def loseManifestLog(d: GraftDriver): Unit = {
+    val dir = new Path(d.catalog.topicPath("t"), "_manifest")
+    dir.getFileSystem(hc).delete(dir, true): Unit
+  }
+
   /** A read of the topic planned from its manifest. */
   protected def planned(d: GraftDriver): Seq[(Int, Long, String)] =
     rows(spark.read.format("graft").option("warehouse", d.warehouse).option("topic", "t").load())
@@ -196,8 +202,8 @@ abstract class CrashPointSpec extends SparkSpec {
 }
 
 /**
- * Crash points of the produce protocol, on the concurrent path and on the
- * lock-held one. After a recovery produce: dense ids without duplicates
+ * Crash points of the produce protocol, on the concurrent path (also onto
+ * a lost manifest log) and on the lock-held one. After a recovery produce: dense ids without duplicates
  * through the manifest and through a listing of the log, every
  * acknowledged event present, the crashed batch wholly visible or not at
  * all (read_committed included), and nothing left for vacuum but what it
@@ -215,6 +221,10 @@ class ProduceCrashSpec extends CrashPointSpec {
   }
   private object Concurrent extends ProducePath("concurrent") {
     def run(d: GraftDriver): Unit = d.openTopic("t").producer().produce(batch("v", Victim)): Unit
+  }
+  private object OntoLostLog extends ProducePath("concurrent, onto a lost manifest log") {
+    override def prepare(d: GraftDriver): Unit = loseManifestLog(d)
+    def run(d: GraftDriver): Unit = Concurrent.run(d)
   }
   private object Held extends ProducePath("lock-held (transaction)") {
     override def prepare(d: GraftDriver): Unit = d.openTopic("t").beginTransaction("x"): Unit
@@ -263,7 +273,7 @@ class ProduceCrashSpec extends CrashPointSpec {
     assert(rows(topic.events()).size == all.size, "vacuum dropped events")
   }
 
-  Seq(Concurrent, Held).foreach { path =>
+  Seq(Concurrent, OntoLostLog, Held).foreach { path =>
     test(s"a produce killed at any file-system mutation recovers exactly [${path.label}]") {
       crashEveryMutation(path)
     }

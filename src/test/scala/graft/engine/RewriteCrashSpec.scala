@@ -3,9 +3,10 @@ package graft.engine
 import org.apache.spark.sql.functions.col
 
 /**
- * Crash points of a log rewrite's swap: a compaction, and a compliance
- * purge that drops the topic's last rows, killed at each of their
- * file-system mutations. Through the swap the manifest log is moved aside,
+ * Crash points of a log rewrite's swap: a compaction (also one onto a lost
+ * manifest log, which it rebuilds first), and a compliance purge that
+ * drops the topic's last rows, killed at each of their file-system
+ * mutations. Through the swap the manifest log is moved aside,
  * never deleted, so the watermark never reads below its value before the
  * rewrite — not even when a log scan would see the purged tail gone. After
  * a recovery produce: its ids follow that watermark (none re-issued), the
@@ -50,13 +51,18 @@ class RewriteCrashSpec extends CrashPointSpec {
     def run(d: GraftDriver): Unit = d.openTopic("t").compact()
     def survivingS = 4
   }
+  private object CompactLostLog extends Rewrite("compact, onto a lost manifest log") {
+    override def prepare(d: GraftDriver): Unit = loseManifestLog(d)
+    def run(d: GraftDriver): Unit = Compact.run(d)
+    def survivingS = 4
+  }
   private object PurgeTail extends Rewrite("purge of the last rows") {
     def run(d: GraftDriver): Unit =
       d.catalog.purgeTopic("t", col("metadata").startsWith("""{"s":"""))
     def survivingS = 0
   }
 
-  Seq(Compact, PurgeTail).foreach { rewrite =>
+  Seq(Compact, CompactLostLog, PurgeTail).foreach { rewrite =>
     test(s"a rewrite killed at any file-system mutation keeps its watermark [${rewrite.label}]") {
       crashEveryMutation(rewrite)
     }
