@@ -2693,8 +2693,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * a tiered topic must never lose its cold rows in ANY of them. */
   private[engine] def fullLogDF(name: String): Option[org.apache.spark.sql.DataFrame] = {
     val log = new Path(logPath(name))
-    // read before the listing: a rewrite's swap landing while the listing
-    // runs must not leave out every file it saw
+    // read before the listing, which a commit may then outrun
     val committed = readManifest(name)
     val hot =
       if (fs.exists(log))
@@ -2708,10 +2707,11 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   }
 
   /** `listing` (a read of the hot log) without the chunk files that
-    * neither `committed` nor a manifest read after the listing registers:
-    * a crashed produce's debris, above the watermark until vacuum reaps
-    * it. The second read keeps a file whose commit landed while the
-    * listing ran. With no manifest every listed file is kept. */
+    * `committed` does not register and whose ids start at or above its
+    * watermark: a crashed produce's debris until vacuum reaps it, or a
+    * commit that landed after `committed` was read (left out whole, so the
+    * read stays the view of one commit). With no manifest every listed
+    * file is kept. */
   private def registeredOnly(name: String, committed: Option[TopicManifest],
                              listing: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
@@ -2721,14 +2721,19 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       case LogicalRelation(HadoopFsRelation(i: PartitioningAwareFileIndex, _, _, _, _, _), _, _, _, _) =>
         i.allFiles().map(_.getPath)
     }.flatten
-    def rel(f: Path) = s"${f.getParent.getName}/${f.getName}"
-    val debris = committed.fold(Seq.empty[(Int, String)]) { m =>
-      val unknown = unregistered(name, m, listed.map(f =>
-        f.getParent.getName.stripPrefix("partition=").toIntOption.getOrElse(-1) -> rel(f)))
-      if (unknown.isEmpty) unknown else readManifest(name).fold(unknown)(unregistered(name, _, unknown))
-    }.map(_._2).toSet
-    val kept = listed.filterNot(f => debris(rel(f)))
-    if (debris.isEmpty) listing
+    def partitionOf(f: Path) = f.getParent.getName.stripPrefix("partition=").toIntOption.getOrElse(-1)
+    val out = committed.fold(Set.empty[Path]) { m =>
+      val byRel = listed.map(f => s"${f.getParent.getName}/${f.getName}" -> f).toMap
+      val unknown = unregistered(name, m, byRel.toSeq.map { case (r, f) => partitionOf(f) -> r })
+        .map(u => byRel(u._2))
+      Catalog.footerRanges(unknown, hadoopConf).zip(unknown).collect {
+        // a torn footer is debris too; a stats-less one cannot be judged
+        case (range, f) if range.forall { case (lo, _) =>
+          lo != Long.MinValue && lo >= m.watermarks.getOrElse(partitionOf(f), 0L) } => f
+      }.toSet
+    }
+    val kept = listed.filterNot(out)
+    if (out.isEmpty) listing
     else if (kept.isEmpty) listing.limit(0)
     else spark.read.schema(Catalog.EventSchema).option("basePath", logPath(name))
       .parquet(kept.map(_.toString): _*)
