@@ -2697,7 +2697,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     val committed = readManifest(name)
     val hot =
       if (fs.exists(log))
-        Some(registeredOnly(name, committed,
+        Some(withoutUncommitted(name, committed,
           spark.read.schema(Catalog.EventSchema).parquet(log.toString)))
       else None
     (hot, coldEvents(name)) match {
@@ -2712,7 +2712,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * commit that landed after `committed` was read (left out whole, so the
     * read stays the view of one commit). With no manifest every listed
     * file is kept. */
-  private def registeredOnly(name: String, committed: Option[TopicManifest],
+  private def withoutUncommitted(name: String, committed: Option[TopicManifest],
                              listing: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.execution.datasources.{
@@ -4554,8 +4554,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * every purge signature. The footer judgment alone is sufficient —
     * every committed row lies below the pre-commit watermark, so a file
     * whose ids start inside [watermark, reservation) cannot be committed
-    * data; the manifest (when present) merely narrows the candidates, and
-    * its torn ones are quarantined ([[purgeUnregistered]]). */
+    * data; the manifest (when present) merely narrows the candidates,
+    * and then a torn candidate is quarantined ([[purgeUnregistered]]). */
   private def purgeGapOrphans(name: String, gaps: Map[Int, (Long, Long)]): Unit =
     purgeUnregistered(name, gaps.keys)((p, lo) => lo >= gaps(p)._1 && lo < gaps(p)._2)
 
